@@ -298,32 +298,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # --- joins (§2.3) ---
     q["exact_dup_pairs"] = lambda s, d: _exact_dup_pairs(s, d)
 
-    # one query, BOTH physical paths AND the transposition variant (r3/r4
-    # verdict: fit the registry to the driver's 50-query window): the
-    # blocked deletion-key join and the zero-shuffle broadcast-index join
-    # (per-worker SymSpell index in one mapInPandas stage) produce
-    # identical standard-distance result sets; the third tag runs the
-    # same blocked join under Damerau/OSA distance (reference
-    # transposition variant). Tagged by `path`.
+    # one query, BOTH distance variants (r3/r4 verdict: keep the registry
+    # inside its 50-query window): the blocked deletion-key join under
+    # standard distance, and the same join under Damerau/OSA distance
+    # (reference transposition variant). Tagged by `path`.
     def _fuzzy_words_d2(s, d):
-        from liblevenshtein_rust_spark.operators.fuzzy_join import (
-            fuzzy_broadcast_join)
         blocked = (
             fuzzy_join(_queries_df(s, QUERY_TERMS), _dict27_df(s), n=2,
                        method="deletion")
             .select(F.col("q_text").alias("query"), "term", "distance",
                     F.lit("blocked").alias("path")))
-        bcast = (
-            fuzzy_broadcast_join(_queries_df(s, QUERY_TERMS), _dict27_df(s),
-                                 n=2)
-            .select(F.col("q_text").alias("query"), "term", "distance",
-                    F.lit("broadcast").alias("path")))
         dam = (
             fuzzy_join(_queries_df(s, QUERY_TERMS), _dict27_df(s), n=2,
                        variant="transposition", method="deletion")
             .select(F.col("q_text").alias("query"), "term", "distance",
                     F.lit("damerau").alias("path")))
-        return blocked.unionByName(bcast).unionByName(dam)
+        return blocked.unionByName(dam)
     q["fuzzy_words_d2"] = _fuzzy_words_d2
     q["fuzzy_pairs_turns_d1"] = lambda s, d: _term_pairs(s, d, 1)
     q["fuzzy_pairs_turns_d2"] = lambda s, d: _term_pairs(s, d, 2)
@@ -1323,15 +1313,13 @@ def oracle_sql() -> dict[str, str]:
         "AND (a.conv_id < b.conv_id OR (a.conv_id = b.conv_id AND a.turn_idx < b.turn_idx))"
     )
 
-    # both physical paths return the same standard-distance rows (the
-    # twin enumerates that result set once per path tag); the damerau tag
-    # re-enumerates under OSA distance
+    # the blocked tag enumerates the standard-distance rows; the damerau
+    # tag re-enumerates under OSA distance
     o["fuzzy_words_d2"] = (
         f"WITH d(term) AS (VALUES {_SQL_DICT27}), q(query) AS (VALUES {_SQL_QUERY_TERMS}), "
         "m AS (SELECT query, term, CAST(levenshtein(query, term) AS INT) AS distance "
         "      FROM q, d WHERE levenshtein(query, term) <= 2) "
         "SELECT query, term, distance, 'blocked' AS path FROM m "
-        "UNION ALL SELECT query, term, distance, 'broadcast' AS path FROM m "
         "UNION ALL SELECT query, term, "
         "CAST(damerau_levenshtein(query, term) AS INT), 'damerau' AS path "
         "FROM q, d WHERE damerau_levenshtein(query, term) <= 2"

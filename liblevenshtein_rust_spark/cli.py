@@ -47,8 +47,6 @@ def main(argv: list[str] | None = None) -> int:
     qp.add_argument("--max-distance", type=int, default=2)
     qp.add_argument("--variant", default="standard")
     qp.add_argument("--limit", type=int, default=0)
-    qp.add_argument("--broadcast", action="store_true",
-                    help="zero-shuffle per-worker index join (small dicts)")
     qp.add_argument("--prefix", action="store_true",
                     help="autocomplete mode: match term prefixes")
     qp.add_argument("--substring", action="store_true",
@@ -251,11 +249,6 @@ def main(argv: list[str] | None = None) -> int:
         if args.prefix:
             m = fuzzy_prefix_join(q, d, n=args.max_distance,
                                   variant=args.variant)
-        elif args.broadcast:
-            from liblevenshtein_rust_spark.operators.fuzzy_join import (
-                fuzzy_broadcast_join)
-            m = fuzzy_broadcast_join(q, d, n=args.max_distance,
-                                     variant=args.variant)
         else:
             m = fuzzy_join(q, d, n=args.max_distance, variant=args.variant)
         m = fuzzy_top_k(m, args.limit) if args.limit else \

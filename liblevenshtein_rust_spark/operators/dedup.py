@@ -324,9 +324,10 @@ def token_jaccard_pairs(docs: DataFrame, *, id_col: str = "doc_id",
 
 
 def unpersist_inputs(df: DataFrame) -> None:
-    """Release cached inputs a ``persist=True`` operator attached to its
-    result (currently: token_jaccard_pairs' exploded token table). Safe
-    on any DataFrame; call after the result is materialized."""
+    """Release the cached frames a ``persist=True`` operator attached to
+    its result: token_jaccard_pairs' exploded token table, and the inputs
+    (plus a self-join's key table) of every fuzzy_join.py edit-distance
+    join. Safe on any DataFrame; call after the result is materialized."""
     for cached in getattr(df, "_lls_persisted_inputs", []) or []:
         cached.unpersist()
 

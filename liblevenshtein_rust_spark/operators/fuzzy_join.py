@@ -7,6 +7,12 @@ Re-expresses the reference's automaton-intersection query
     explode blocking keys  ->  equi-join on key hash  ->  dedupe pairs
       ->  attach texts  ->  vectorized banded-DP verify  ->  filter d <= n
 
+Every edit-distance join here (A×B, self, weighted-cost, prefix) runs
+through ONE private core, ``_blocked_join``: persist, the self-join
+pre-partition, the pair dedupe and the text attach happen there only. An
+entry point supplies just its key tables, its verify kernel and its output
+column names; the salted candidate source (skew.py) plugs into the core.
+
 Never a cartesian product: blocking keys prune exactly like the automaton
 prunes dictionary subtrees. Scale notes:
 
@@ -25,15 +31,16 @@ prunes dictionary subtrees. Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import math
+from functools import partial
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from liblevenshtein_rust_spark.functions.blocking_keys import (
-    deletion_keys,
     deletion_keys_sql,
     effective_depth,
-    hash_keys,
     hash_keys_sql,
     probe_keys_sql,
     segment_keys_sql,
@@ -45,6 +52,7 @@ from liblevenshtein_rust_spark.functions.distance import (
     make_distance_udf,
     make_prefix_distance_udf,
 )
+from liblevenshtein_rust_spark.operators.skew import salted_self_candidates
 
 #: strings at or below this length use deletion-neighborhood blocking
 #: (narrower fan-out); longer strings use PassJoin segment blocking.
@@ -100,78 +108,88 @@ def _explode_keys(df: DataFrame, id_col: str, keys_sql: str) -> DataFrame:
                          f"explode({hash_keys_sql(keys_sql)}) AS _bkey")
 
 
-def _candidates_from_keys(left_keys: DataFrame, right_keys: DataFrame,
-                          self_join: bool) -> DataFrame:
-    """Join exploded key tables -> distinct candidate id pairs.
+def _blocked_join(keys, left: DataFrame, right: DataFrame | None,
+                  cols: tuple[str, str, str, str], verify,
+                  out_cols: tuple[str, str, str, str, str], *,
+                  dedupe: bool = True, persist: bool = False,
+                  self_pairs=None) -> DataFrame:
+    """The one blocked-join core: key tables -> distinct candidate id
+    pairs -> texts attached as (_ida, _ta, _idb, _tb) -> ``verify`` (adds
+    and filters the score column ``out_cols[4]``) -> pair columns renamed
+    to ``out_cols[:4]``. ``keys`` is a (left, right) pair of exploded
+    (_bid, _bkey) tables, or ONE table for a self-join (``right is None``);
+    ``cols`` names the (id, text) columns of left, then right.
 
-    Self-joins pre-partition the key table on the join key below the
-    per-side aliases, so both sides require exactly that exchange and
-    AQE stage reuse computes the key-generation pipeline ONCE (r6, guide
-    §2.4 — the same shape as dedup.minhash_lsh_pairs; the per-side
-    aliased plans otherwise materialized two identical key stages)."""
-    if self_join:
-        left_keys = right_keys = left_keys.repartition("_bkey")
-    l = left_keys.selectExpr("_bid AS _ida", "_bkey").alias("lk")
-    r = right_keys.selectExpr("_bid AS _idb", "_bkey").alias("rk")
-    pairs = l.join(r, F.col("lk._bkey") == F.col("rk._bkey"), "inner") \
-        .selectExpr("lk._ida AS _ida", "rk._idb AS _idb")
-    if self_join:
-        pairs = pairs.where("_ida < _idb")
-    return pairs.dropDuplicates(["_ida", "_idb"])
-
-
-def _attach_texts(pairs: DataFrame, left: DataFrame, right: DataFrame,
-                  l_id: str, l_text: str, r_id: str, r_text: str,
-                  dedupe: bool = True) -> DataFrame:
-    """Join the (_ida, _idb) candidate pairs back to their texts as
-    (_ta, _tb) — the shared candidate-to-verify plumbing of every join
-    variant in this module.
-
-    ``dedupe=False`` skips the defensive one-row-per-id collapse when the
-    caller PROVES id uniqueness (r6: the collapse is a first(string)
-    aggregate, which plans a SortAggregate + Sort + Exchange per side —
-    pure overhead for dictionary inputs whose ids are unique by
-    construction)."""
+    A self-join pre-partitions its key table on the join key below the
+    per-side aliases, so AQE stage reuse computes the key pipeline ONCE
+    (r6); ``self_pairs`` swaps in another source of distinct _ida < _idb
+    pairs. ``dedupe=False`` skips the per-id text collapse (an Exchange +
+    SortAggregate per side) for ids unique by construction. ``persist``
+    caches the inputs (and a self-join's key table) and attaches them to
+    the result for ``operators.dedup.unpersist_inputs``; Spark matches
+    cached data by plan, so key tables built earlier read the caches too.
+    """
+    self_join = right is None
+    right = left if self_join else right
+    cached = ([left, keys] if self_join else [left, right]) if persist else []
+    for df in cached:
+        df.persist()
+    if self_join and self_pairs is not None:
+        pairs = self_pairs(keys)
+    else:
+        lk, rk = (keys.repartition("_bkey"),) * 2 if self_join else keys
+        l = lk.selectExpr("_bid AS _ida", "_bkey").alias("lk")
+        r = rk.selectExpr("_bid AS _idb", "_bkey").alias("rk")
+        pairs = l.join(r, F.col("lk._bkey") == F.col("rk._bkey"), "inner") \
+            .selectExpr("lk._ida AS _ida", "rk._idb AS _idb")
+        if self_join:
+            pairs = pairs.where("_ida < _idb")
+        pairs = pairs.dropDuplicates(["_ida", "_idb"])
+    l_id, l_text, r_id, r_text = cols
     lt = left.selectExpr(f"`{l_id}` AS _ida", f"`{l_text}` AS _ta")
     rt = right.selectExpr(f"`{r_id}` AS _idb", f"`{r_text}` AS _tb")
     if dedupe:
         lt = lt.dropDuplicates(["_ida"])
         rt = rt.dropDuplicates(["_idb"])
-    return pairs.join(lt, "_ida").join(rt, "_idb")
+    scored = verify(pairs.join(lt, "_ida").join(rt, "_idb"))
+    names = zip(("_ida", "_ta", "_idb", "_tb"), out_cols)
+    out = scored.selectExpr(*(f"{c} AS `{o}`" for c, o in names), out_cols[4])
+    if cached:
+        out._lls_persisted_inputs = cached
+    return out
 
 
-def _score_pairs(pairs: DataFrame, left: DataFrame, right: DataFrame,
-                 l_id: str, l_text: str, r_id: str, r_text: str,
-                 n: int, variant: str, subst=None,
-                 dedupe_texts: bool = True) -> DataFrame:
-    with_text = _attach_texts(pairs, left, right, l_id, l_text, r_id, r_text,
-                              dedupe=dedupe_texts)
-    # cheap JVM-side prefilter before the (Arrow) scoring kernel: every
-    # variant changes length by at most 1 per edit
-    with_text = with_text.where(f"abs(length(_ta) - length(_tb)) <= {int(n)}")
-    if variant == STANDARD and subst is None:
-        # Spark's built-in levenshtein is codepoint-level with an
-        # early-abort threshold (returns -1 above it) — semantically
-        # identical to the reference's standard_distance, and it keeps the
-        # entire verify stage inside whole-stage codegen (no Arrow hop).
-        # Verified against the DP oracle in tests/test_distance.py.
-        scored = with_text.selectExpr(
-            "*", f"levenshtein(_ta, _tb, {int(n)}) AS distance")
-        return scored.where("distance >= 0")
-    dist = make_distance_udf(n, variant,
-                             subst.codepoint_pairs() if subst else None)
-    scored = with_text.withColumn("distance", dist(F.col("_ta"), F.col("_tb")))
-    return scored.where(F.col("distance") <= n)
+def _edit_distance_verify(n: int, variant: str, subst=None):
+    """Unit-cost verify kernel: keeps candidates with distance <= n."""
+    def verify(with_text: DataFrame) -> DataFrame:
+        # cheap JVM-side prefilter before the (Arrow) scoring kernel:
+        # every variant changes length by at most 1 per edit
+        with_text = with_text.where(
+            f"abs(length(_ta) - length(_tb)) <= {int(n)}")
+        if variant == STANDARD and subst is None:
+            # Spark's codepoint-level levenshtein with an early-abort
+            # threshold (-1 above it) IS the reference's standard_distance
+            # (tests/test_distance.py), and keeps verify in codegen
+            scored = with_text.selectExpr(
+                "*", f"levenshtein(_ta, _tb, {int(n)}) AS distance")
+            return scored.where("distance >= 0")
+        dist = make_distance_udf(n, variant,
+                                 subst.codepoint_pairs() if subst else None)
+        scored = with_text.withColumn("distance",
+                                      dist(F.col("_ta"), F.col("_tb")))
+        return scored.where(F.col("distance") <= n)
+    return verify
 
 
 def _keys_for(df: DataFrame, id_col: str, text_col: str, n: int, variant: str,
               method: str, role: str, subst=None) -> DataFrame:
-    """role: 'index' | 'probe' | 'both' (self-join emits both sides).
+    """role: 'index' | 'probe' | 'both' (self-join emits both sides);
+    method: 'deletion' | 'segment' | 'hybrid' | 'auto' (_resolve_method).
 
     With a SubstitutionSet, keys are generated over class-canonicalized
-    text (zero-cost-substitutable chars mapped to one representative) —
-    a recall-safe superset; exact semantics are restored by the pair-set
-    DP in scoring."""
+    text (zero-cost-substitutable chars mapped to one representative) — a
+    recall-safe superset; the pair-set DP in scoring restores exactness."""
+    method = _resolve_method(method)
     if subst is not None:
         src, dst = subst.translate_args()
         if src:
@@ -209,10 +227,8 @@ def _keys_for(df: DataFrame, id_col: str, text_col: str, n: int, variant: str,
 
 def _resolve_method(method: str) -> str:
     """``auto`` resolves statically to ``hybrid``: hybrid routes each ROW by
-    its own length (deletion keys for short strings, segments for long), so
-    no dataset statistic — and therefore no eager pre-join scan of the
-    input, which at 100 TB would be a full pass per operator call — is
-    needed to pick a strategy."""
+    its own length, so no dataset statistic (an eager pre-join scan of the
+    input per operator call) is needed to pick a strategy."""
     return "hybrid" if method == "auto" else method
 
 
@@ -237,24 +253,17 @@ def fuzzy_join(
     the banded DP is the exact distance). ``substitutions`` is an optional
     SubstitutionSet of zero-cost character pairs (Restricted policy).
 
-    ``persist`` caches both inputs (MEMORY_AND_DISK): each side is read
-    twice (key explode + text attach), and without a cache or an upstream
-    checkpoint Spark would re-run their whole lineage per read.
+    ``persist`` caches both inputs, each read twice (key explode + text
+    attach). Release via ``operators.dedup.unpersist_inputs(result)``.
     """
-    if persist:
-        queries = queries.persist()
-        dictionary = dictionary.persist()
-    method = _resolve_method(method)
-    qk = _keys_for(queries, q_id, q_text, n, variant, method, role="probe",
-                   subst=substitutions)
-    dk = _keys_for(dictionary, d_id, d_text, n, variant, method, role="index",
-                   subst=substitutions)
-    pairs = _candidates_from_keys(qk, dk, self_join=False)
-    scored = _score_pairs(pairs, queries, dictionary, q_id, q_text, d_id, d_text,
-                          n, variant, subst=substitutions)
-    return scored.selectExpr(
-        f"_ida AS `{q_id}`", f"_ta AS `{q_text}`",
-        f"_idb AS `{d_id}`", f"_tb AS `{d_text}`", "distance")
+    keys = (_keys_for(queries, q_id, q_text, n, variant, method,
+                      role="probe", subst=substitutions),
+            _keys_for(dictionary, d_id, d_text, n, variant, method,
+                      role="index", subst=substitutions))
+    cols = (q_id, q_text, d_id, d_text)
+    return _blocked_join(keys, queries, dictionary, cols,
+                         _edit_distance_verify(n, variant, substitutions),
+                         cols + ("distance",), persist=persist)
 
 
 def fuzzy_self_join(
@@ -285,39 +294,20 @@ def fuzzy_self_join(
     Results are identical whenever the declaration is true.
 
     ``persist`` caches the terms input AND the exploded key table: the
-    plan reads terms four times (two key sides + two text attaches) and
-    the key-generation subtree twice — Spark plans identical subtrees
-    independently (no cross-join common-subexpression reuse, and the
-    per-side column aliases defeat ReusedExchange), so without the cache
-    any upstream lineage (e.g. a build_dictionary aggregation) re-runs
-    per read. Release via ``operators.dedup.unpersist_inputs(result)``
-    after materializing.
+    plan reads terms four times and the key subtree twice, so without the
+    cache any upstream lineage (e.g. a build_dictionary aggregation)
+    re-runs per read. Release via ``operators.dedup.unpersist_inputs``.
     """
-    persisted = []
-    if persist:
-        terms = terms.persist()
-        persisted.append(terms)
-    method = _resolve_method(method)
     keys = _keys_for(terms, id_col, text_col, n, variant, method, role="both",
                      subst=substitutions)
-    if persist:
-        keys = keys.persist()
-        persisted.append(keys)
-    if salt_threshold is not None:
-        from liblevenshtein_rust_spark.operators.skew import salted_self_candidates
-        pairs = salted_self_candidates(keys, hot_threshold=salt_threshold,
-                                       n_groups=salt_groups)
-    else:
-        pairs = _candidates_from_keys(keys, keys, self_join=True)
-    scored = _score_pairs(pairs, terms, terms, id_col, text_col, id_col, text_col,
-                          n, variant, subst=substitutions,
-                          dedupe_texts=not unique_ids)
-    out = scored.selectExpr(
-        "_ida AS id_a", "_ta AS term_a", "_idb AS id_b", "_tb AS term_b",
-        "distance")
-    if persisted:
-        out._lls_persisted_inputs = persisted
-    return out
+    salted = None if salt_threshold is None else partial(
+        salted_self_candidates, hot_threshold=salt_threshold,
+        n_groups=salt_groups)
+    return _blocked_join(keys, terms, None, (id_col, text_col) * 2,
+                         _edit_distance_verify(n, variant, substitutions),
+                         ("id_a", "term_a", "id_b", "term_b", "distance"),
+                         dedupe=not unique_ids, persist=persist,
+                         self_pairs=salted)
 
 
 def fuzzy_prefix_join(
@@ -343,10 +333,9 @@ def fuzzy_prefix_join(
     Output: q_id, q_text, term_id, term, distance (prefix distance).
     """
     depth = effective_depth(n, variant)
-    # adaptive-stats collect: cardinality is bounded by the number of
-    # distinct QUERY lengths (<= max query string length, a few dozen ints),
-    # never by row count — safe at any scale. ONE aggregation (r6): the
-    # distinct().collect() form paid a shuffle + multi-task result stage.
+    # adaptive-stats collect: bounded by the number of distinct QUERY
+    # lengths (a few dozen ints), never by row count. ONE aggregation (r6):
+    # the distinct().collect() form paid a shuffle + multi-task stage.
     from liblevenshtein_rust_spark.session import df_is_local_relation
     if df_is_local_relation(queries):
         qlens = list({r[0] for r in
@@ -355,9 +344,8 @@ def fuzzy_prefix_join(
     else:
         qlens = list(queries.agg(
             F.collect_set(F.length(F.col(q_text)))).first()[0])
-    plens = sorted({pl for lq in qlens for pl in range(max(lq - n, 0), lq + n + 1)})
-    if not plens:
-        plens = [0]
+    plens = sorted({pl for lq in qlens
+                    for pl in range(max(lq - n, 0), lq + n + 1)}) or [0]
     lens_sql = ", ".join(str(x) for x in plens)
 
     pref = dictionary.select(
@@ -371,18 +359,21 @@ def fuzzy_prefix_join(
         f"explode({hash_keys_sql(deletion_keys_sql('_p', depth))}) AS _bkey"
     ).dropDuplicates(["_bid", "_bkey"])
     qk = _explode_keys(queries, q_id, deletion_keys_sql(q_text, depth))
-    pairs = _candidates_from_keys(qk, dk, self_join=False)
-    with_text = _attach_texts(pairs, queries, dictionary,
-                              q_id, q_text, d_id, d_text).where(
-        F.length("_ta") - F.length("_tb") <= F.lit(n))
-    # truncate the term JVM-side so Arrow never ships more than |q|+n chars
-    with_text = with_text.withColumn(
-        "_tb_cut", F.expr(f"substring(_tb, 1, length(_ta) + {n})"))
     pdist = make_prefix_distance_udf(n, variant)
-    scored = with_text.withColumn("distance", pdist(F.col("_ta"), F.col("_tb_cut")))
-    return scored.where(F.col("distance") <= n).select(
-        F.col("_ida").alias(q_id), F.col("_ta").alias(q_text),
-        F.col("_idb").alias(d_id), F.col("_tb").alias(d_text), "distance")
+
+    def verify(with_text: DataFrame) -> DataFrame:
+        with_text = with_text.where(
+            F.length("_ta") - F.length("_tb") <= F.lit(n))
+        # truncate the term JVM-side so Arrow never ships more than |q|+n chars
+        with_text = with_text.withColumn(
+            "_tb_cut", F.expr(f"substring(_tb, 1, length(_ta) + {n})"))
+        scored = with_text.withColumn("distance",
+                                      pdist(F.col("_ta"), F.col("_tb_cut")))
+        return scored.where(F.col("distance") <= n)
+
+    cols = (q_id, q_text, d_id, d_text)
+    return _blocked_join((qk, dk), queries, dictionary, cols, verify,
+                         cols + ("distance",))
 
 
 def fuzzy_top_k(matches: DataFrame, k: int, query_col: str = "q_id",
@@ -417,22 +408,16 @@ def weighted_edit_envelope(ops, max_cost: float) -> int:
     weighted cost <= max_cost is connected by a STANDARD/OSA edit script
     of at most floor(max_cost * max_i(se_i / w_i)) operations, where
     each weighted op i costs w_i and expands to se_i unit edits — 1 for
-    insert/delete/substitute/restricted classes and transpose (the
-    blocking variant is OSA when transpose is enabled), and
-    max(consume_x, consume_y) for a multi-char string op (a ⟨2,1⟩
-    digraph is one substitution plus one deletion). The unit-cost
-    blocking machinery at n = envelope is therefore a recall-lossless
-    candidate generator for the weighted join (the weighted analog of
-    the automaton-degree bound,
+    insert/delete/substitute/restricted classes and transpose (blocking
+    is OSA when transpose is enabled), max(consume_x, consume_y) for a
+    multi-char string op. Unit-cost blocking at n = envelope is therefore
+    recall-lossless for the weighted join (the weighted analog of the
+    automaton-degree bound,
     /root/reference/src/transducer/operation_set.rs:78-240).
 
-    A zero-weight restricted class would make the envelope unbounded
-    (any number of free substitutions) — that case must be expressed as
-    a unit-cost ``substitutions=SubstitutionSet`` canonicalization
-    instead, and is rejected here (zero-weight string ops are rejected
-    by WeightedOps itself)."""
-    import math
-
+    A zero-weight restricted class (unbounded envelope) is rejected here:
+    model it as ``substitutions=SubstitutionSet`` canonicalization
+    (WeightedOps itself rejects zero-weight string ops)."""
     weights = [ops.insert, ops.delete]
     if ops.substitute is not None:
         weights.append(ops.substitute)
@@ -487,215 +472,29 @@ def weighted_fuzzy_join(
             f"exceeds max_envelope={max_envelope}; raise op weights, lower "
             f"max_cost, or opt in via max_envelope")
     variant = TRANSPOSITION if ops.transpose is not None else STANDARD
-    if persist:
-        queries = queries.persist()
-        dictionary = dictionary.persist()
-    method = _resolve_method(method)
-    qk = _keys_for(queries, q_id, q_text, n_env, variant, method, role="probe")
-    dk = _keys_for(dictionary, d_id, d_text, n_env, variant, method,
-                   role="index")
-    pairs = _candidates_from_keys(qk, dk, self_join=False)
-    with_text = _attach_texts(pairs, queries, dictionary,
-                              q_id, q_text, d_id, d_text)
+    keys = (_keys_for(queries, q_id, q_text, n_env, variant, method,
+                      role="probe"),
+            _keys_for(dictionary, d_id, d_text, n_env, variant, method,
+                      role="index"))
     # JVM prefilters before the Arrow kernel: a length delta of k costs
-    # >= k * (cheapest per-unit length change — an UNEVEN string op like
-    # ph→f changes length by 1 at its own weight); and the unit envelope
-    # bounds the plain Levenshtein distance (early-abort codegen check,
-    # -1 above bound).
-    import math
+    # >= k * (cheapest per-unit length change, incl. UNEVEN string ops
+    # like ph→f); the unit envelope bounds plain Levenshtein distance.
     uneven = [w for x, y, w in getattr(ops, "string_ops", ())
               if len(x) != len(y)]
     len_tol = int(math.floor(
         float(max_cost) / min([ops.insert, ops.delete] + uneven)))
-    with_text = with_text.where(
-        F.abs(F.length("_ta") - F.length("_tb")) <= F.lit(len_tol))
-    if variant == STANDARD:
-        with_text = with_text.where(
-            F.expr(f"levenshtein(_ta, _tb, {int(n_env)}) >= 0"))
     cost_udf = make_weighted_distance_udf(float(max_cost), ops)
-    scored = with_text.withColumn("cost", cost_udf(F.col("_ta"), F.col("_tb")))
-    return scored.where(F.col("cost") <= float(max_cost)).select(
-        F.col("_ida").alias(q_id), F.col("_ta").alias(q_text),
-        F.col("_idb").alias(d_id), F.col("_tb").alias(d_text), "cost")
 
+    def verify(with_text: DataFrame) -> DataFrame:
+        with_text = with_text.where(
+            F.abs(F.length("_ta") - F.length("_tb")) <= F.lit(len_tol))
+        if variant == STANDARD:
+            with_text = with_text.where(
+                F.expr(f"levenshtein(_ta, _tb, {int(n_env)}) >= 0"))
+        scored = with_text.withColumn("cost",
+                                      cost_udf(F.col("_ta"), F.col("_tb")))
+        return scored.where(F.col("cost") <= float(max_cost))
 
-#: per-worker-process cache of broadcast-join indexes, keyed by the join
-#: invocation's token: tasks of the same join reuse one built index
-#: across partitions (a closure-held dict would be re-pickled per task).
-#: Bounded: oldest entries evicted beyond a handful of live joins.
-_BCAST_INDEX_CACHE: dict = {}
-_BCAST_CACHE_MAX = 8
-
-
-def _py_deletion_neighborhood(s: str, depth: int) -> set[str]:
-    """Python twin of blocking_keys.deletion_keys (uncapped): all deletion
-    variants of ``s`` at depths 0..depth. Same set the SQL expression
-    generates, so the broadcast index and the blocked join share one
-    completeness proof."""
-    out = {s}
-    frontier = {s}
-    for _ in range(depth):
-        nxt = set()
-        for x in frontier:
-            for i in range(len(x)):
-                nxt.add(x[:i] + x[i + 1:])
-        nxt -= out
-        out |= nxt
-        frontier = nxt
-    return out
-
-
-def fuzzy_broadcast_join(
-    queries: DataFrame,
-    dictionary: DataFrame,
-    *,
-    n: int,
-    variant: str = STANDARD,
-    q_id: str = "q_id",
-    q_text: str = "q_text",
-    d_id: str = "term_id",
-    d_text: str = "term",
-    substitutions=None,
-    max_dict_rows: int = 100_000,
-    max_index_keys: int = 20_000_000,
-) -> DataFrame:
-    """ZERO-SHUFFLE fuzzy join for small dictionaries: the broadcast-
-    hash-join analog of :func:`fuzzy_join`, and the literal "per-partition
-    in-memory dictionary index" strategy (SURVEY §1.4) — the reference's
-    trie/DAWG rebuilt as an ephemeral SymSpell deletion index inside each
-    Python worker, queries streaming through ONE mapInPandas stage.
-
-    Memory bounds (two, both checked before any worker builds anything):
-    ``max_dict_rows`` bounds the driver collect (limit(max + 1) — the
-    over-limit check fires before the driver holds more than the cap);
-    ``max_index_keys`` bounds the WORKER-side deletion index, which is
-    what actually costs memory — each short term expands into
-    sum_{k<=depth} C(len, k) keys (~hundreds at depth 2), so row count
-    alone is a poor proxy. The estimate is the exact per-term binomial
-    bound computed driver-side from the collected terms. Beyond either
-    bound, use the blocked :func:`fuzzy_join`.
-
-    The (ids, terms) payload ships via ``sc.broadcast`` — one torrent
-    transfer per executor, NOT a copy pickled into every task closure.
-    Each Python worker process builds the deletion index once per join
-    invocation (module-level cache keyed by a per-call token — tasks of
-    the same join reuse it across partitions AND batches). NOTE the cache
-    retains up to ``_BCAST_CACHE_MAX`` full indexes per worker process
-    after their joins finish (bounded by max_index_keys x that constant);
-    queries longer than SHORT_MAX skip key generation entirely and scan
-    the in-memory by-length buckets instead (exact, and O(#near-length
-    terms) per row instead of O(len^2) deletion keys). No shuffle, no
-    candidate exchange: the plan is Scan -> ArrowEval(mapInPandas).
-
-    Semantics match fuzzy_join, including its edge behavior: one output
-    row per (q_id, term_id) pair (duplicate q_id rows collapse, as the
-    blocked path's pair-dedupe + text-attach dropDuplicates do) and
-    null-id rows drop (as equi-joins do). Exact and complete — same
-    deletion-key lemma, same kernel.
-    """
-    import math
-    import uuid
-
-    import pandas as pd
-
-    from liblevenshtein_rust_spark.functions.distance import batch_distance
-
-    n = int(n)
-    depth = effective_depth(n, variant)
-    sp = substitutions.codepoint_pairs() if substitutions else None
-    src = dst = ""
-    if substitutions is not None:
-        src, dst = substitutions.translate_args()
-    trans = str.maketrans(src, dst) if src else None
-
-    rows = (dictionary.select(d_id, d_text)
-            .where(F.col(d_id).isNotNull() & F.col(d_text).isNotNull())
-            .dropDuplicates([d_id])
-            .limit(max_dict_rows + 1).collect())
-    if len(rows) > max_dict_rows:
-        raise ValueError(
-            f"dictionary exceeds max_dict_rows={max_dict_rows}; use the "
-            f"shuffled fuzzy_join for large dictionaries")
-    ids = [r[0] for r in rows]
-    terms = [r[1] for r in rows]
-    # worker-memory budget: exact binomial upper bound on the deletion
-    # index size (only short terms are indexed; long ones go to buckets)
-    est_keys = sum(
-        sum(math.comb(len(t), k) for k in range(depth + 1))
-        for t in terms if len(t) <= SHORT_MAX + n)
-    if est_keys > max_index_keys:
-        raise ValueError(
-            f"estimated worker deletion-index size {est_keys:,} keys exceeds "
-            f"max_index_keys={max_index_keys:,}; use the shuffled fuzzy_join "
-            f"(or raise max_index_keys if the executors have the memory)")
-    bc = queries.sparkSession.sparkContext.broadcast((ids, terms))
-    token = uuid.uuid4().hex   # per-call cache key, same for all tasks
-
-    # id columns keep their INPUT types (ids are opaque pass-throughs)
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-    out_schema = StructType([
-        StructField(q_id, queries.schema[q_id].dataType),
-        StructField(q_text, StringType()),
-        StructField(d_id, dictionary.schema[d_id].dataType),
-        StructField(d_text, StringType()),
-        StructField("distance", IntegerType()),
-    ])
-
-    def _probe(batches):
-        # one fetch per executor (torrent-distributed), not per task
-        ids, terms = bc.value
-        cached = _BCAST_INDEX_CACHE.get(token)
-        if cached is None:
-            idx: dict[str, list[int]] = {}
-            buckets: dict[int, list[int]] = {}
-            for j, t in enumerate(terms):
-                buckets.setdefault(len(t), []).append(j)
-                if len(t) <= SHORT_MAX + n:
-                    kt = t.translate(trans) if trans else t
-                    for k in _py_deletion_neighborhood(kt, depth):
-                        idx.setdefault(k, []).append(j)
-            cached = (idx, buckets)
-            while len(_BCAST_INDEX_CACHE) >= _BCAST_CACHE_MAX:
-                _BCAST_INDEX_CACHE.pop(next(iter(_BCAST_INDEX_CACHE)))
-            _BCAST_INDEX_CACHE[token] = cached
-        idx, buckets = cached
-        for pdf in batches:
-            o_qid, o_q, o_j = [], [], []
-            for qid, q in zip(pdf[q_id], pdf[q_text]):
-                if q is None or qid is None:
-                    continue
-                if len(q) <= SHORT_MAX:
-                    kq = q.translate(trans) if trans else q
-                    cand: set[int] = set()
-                    for k in _py_deletion_neighborhood(kq, depth):
-                        cand.update(idx.get(k, ()))
-                else:
-                    # long query: exact by-length-bucket scan of the small
-                    # in-memory dictionary (never O(len^2) deletion keys)
-                    cand = set()
-                    for L in range(len(q) - n, len(q) + n + 1):
-                        cand.update(buckets.get(L, ()))
-                for j in cand:
-                    # length prefilter, same as the blocked path
-                    if abs(len(q) - len(terms[j])) <= n:
-                        o_qid.append(qid)
-                        o_q.append(q)
-                        o_j.append(j)
-            if not o_j:
-                continue
-            d = batch_distance(pd.Series(o_q),
-                               pd.Series([terms[j] for j in o_j]),
-                               n, variant, sp)
-            keep = d <= n
-            yield pd.DataFrame({
-                q_id: [x for x, k in zip(o_qid, keep) if k],
-                q_text: [x for x, k in zip(o_q, keep) if k],
-                d_id: [ids[j] for j, k in zip(o_j, keep) if k],
-                d_text: [terms[j] for j, k in zip(o_j, keep) if k],
-                "distance": d[keep],
-            })
-
-    qs = (queries.select(q_id, q_text)
-          .where(F.col(q_id).isNotNull())
-          .dropDuplicates([q_id]))
-    return qs.mapInPandas(_probe, schema=out_schema)
+    cols = (q_id, q_text, d_id, d_text)
+    return _blocked_join(keys, queries, dictionary, cols, verify,
+                         cols + ("cost",), persist=persist)

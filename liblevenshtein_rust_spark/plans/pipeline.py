@@ -164,6 +164,26 @@ class _Runner:
         }
         return out
 
+    def write_metrics(self) -> None:
+        """Write the run's ``_metrics`` table (one row per stage) and
+        ``info.json`` next to the stage checkpoints."""
+        cfg = self.cfg
+        metrics_rows = [
+            (cfg.run_id, name, bool(v.get("resumed")), float(v["seconds"]),
+             int(v.get("rows", -1)))
+            for name, v in self.info.items()
+        ]
+        metrics = self.spark.createDataFrame(
+            metrics_rows, ["run_id", "stage", "resumed", "seconds", "rows"])
+        metrics.write.mode("overwrite").parquet(
+            os.path.join(cfg.checkpoint_dir, cfg.run_id, "_metrics"))
+        # through the Hadoop FS API: checkpoint_dir may be HDFS/S3, where a
+        # driver-local open() would crash after all the expensive stages ran
+        from liblevenshtein_rust_spark.session import fs_write_text
+        fs_write_text(self.spark,
+                      os.path.join(cfg.checkpoint_dir, cfg.run_id, "info.json"),
+                      json.dumps(self.info, indent=2, default=str))
+
 
 def run_pipeline(spark: SparkSession, transcripts: DataFrame,
                  cfg: PipelineConfig) -> dict:
@@ -216,24 +236,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
 
     turn_entities = r.stage("turn_entities", s4)
 
-    # metrics table (append-style; one row per stage per run)
-    metrics_rows = [
-        (cfg.run_id, name, bool(v.get("resumed")), float(v["seconds"]),
-         int(v.get("rows", -1)))
-        for name, v in r.info.items()
-    ]
-    metrics = spark.createDataFrame(
-        metrics_rows, ["run_id", "stage", "resumed", "seconds", "rows"])
-    metrics.write.mode("overwrite").parquet(
-        os.path.join(cfg.checkpoint_dir, cfg.run_id, "_metrics"))
-
-    # through the Hadoop FS API: checkpoint_dir may be HDFS/S3, where a
-    # driver-local open() would crash after all the expensive stages ran
-    from liblevenshtein_rust_spark.session import fs_write_text
-    fs_write_text(spark,
-                  os.path.join(cfg.checkpoint_dir, cfg.run_id, "info.json"),
-                  json.dumps(r.info, indent=2, default=str))
-
+    r.write_metrics()
     return {
         "turns": turns,
         "terms": terms,
@@ -297,17 +300,5 @@ def run_dedup_pipeline(spark: SparkSession, docs: DataFrame,
 
     survivors = r.stage("dedup_survivors", s_survivors)
 
-    metrics_rows = [
-        (cfg.run_id, name, bool(v.get("resumed")), float(v["seconds"]),
-         int(v.get("rows", -1)))
-        for name, v in r.info.items()
-    ]
-    metrics = spark.createDataFrame(
-        metrics_rows, ["run_id", "stage", "resumed", "seconds", "rows"])
-    metrics.write.mode("overwrite").parquet(
-        os.path.join(cfg.checkpoint_dir, cfg.run_id, "_metrics"))
-    from liblevenshtein_rust_spark.session import fs_write_text
-    fs_write_text(spark,
-                  os.path.join(cfg.checkpoint_dir, cfg.run_id, "info.json"),
-                  json.dumps(r.info, indent=2, default=str))
+    r.write_metrics()
     return {"pairs": pairs, "survivors": survivors, "info": r.info}

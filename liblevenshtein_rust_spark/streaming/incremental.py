@@ -29,11 +29,7 @@ from liblevenshtein_rust_spark.operators.cluster import (
     connected_components,
     incremental_components,
 )
-from liblevenshtein_rust_spark.operators.fuzzy_join import (
-    _candidates_from_keys,
-    _keys_for,
-    _score_pairs,
-)
+from liblevenshtein_rust_spark.operators.fuzzy_join import fuzzy_join
 
 
 def _read_state(spark: SparkSession, path: str) -> DataFrame | None:
@@ -74,15 +70,11 @@ def incremental_upsert(batch_df: DataFrame, state_dir: str, *,
     all_terms = all_terms.localCheckpoint(eager=True)
 
     # incremental candidate generation: fresh (probe) x all (index)
-    fk = _keys_for(fresh, "term_id", "term", n, variant, method, role="probe")
-    ak = _keys_for(all_terms, "term_id", "term", n, variant, method, role="index")
-    cand = _candidates_from_keys(fk, ak, self_join=False).where(
-        F.col("_ida") != F.col("_idb"))
-    scored = _score_pairs(cand, fresh, all_terms, "term_id", "term",
-                          "term_id", "term", n, variant)
-    new_pairs = scored.select(
-        F.least("_ida", "_idb").alias("id_a"),
-        F.greatest("_ida", "_idb").alias("id_b"),
+    matches = fuzzy_join(fresh.selectExpr("term_id AS q_id", "term AS q_text"),
+                         all_terms, n=n, variant=variant, method=method)
+    new_pairs = matches.where(F.col("q_id") != F.col("term_id")).select(
+        F.least("q_id", "term_id").alias("id_a"),
+        F.greatest("q_id", "term_id").alias("id_b"),
         "distance",
     ).dropDuplicates(["id_a", "id_b"])
 

@@ -185,12 +185,12 @@ def test_cli_repl(spark, tmp_path, capsys, monkeypatch):
     assert '{"terms": 2}' in out                 # after delete
 
 
-def test_cli_query_broadcast(tmp_path, capsys):
+def test_cli_query_exact_output(tmp_path, capsys):
     from liblevenshtein_rust_spark.cli import main
     wl = tmp_path / "words.txt"
     wl.write_text("table\nable\ncable\nzzz\n")
     rc = main(["query", "--dict", str(wl), "--term", "tble",
-               "--max-distance", "1", "--broadcast"])
+               "--max-distance", "1"])
     assert rc == 0
     out = capsys.readouterr().out.strip().splitlines()
     assert sorted(out) == ["able\t1", "table\t1"]

@@ -140,7 +140,7 @@ def test_ordered_topk_semantics(spark, dict_df):
 
 
 def test_spark_builtin_levenshtein_matches_reference_oracle(spark):
-    """The JVM fast path (_score_pairs uses levenshtein(a,b,threshold) for
+    """The JVM fast path (_edit_distance_verify uses levenshtein(a,b,threshold) for
     the standard variant) must agree with the reference DP semantics,
     including Unicode codepoint counting and threshold -1 behavior."""
     import pyspark.sql.functions as F
@@ -164,110 +164,118 @@ def test_distance_zero_exact_match_only(spark, dict_df):
     assert len(got) == 1 and got[0].term == "test" and got[0].distance == 0
 
 
-def test_broadcast_join_matches_blocked_join(spark):
-    from liblevenshtein_rust_spark.operators.fuzzy_join import (
-        fuzzy_broadcast_join, fuzzy_join)
-    dict_df = spark.createDataFrame(
-        [(t, t) for t in ["test", "tests", "tset", "best", "abcd", "ab",
-                          "日本語", "café"]], ["term_id", "term"])
-    qs = spark.createDataFrame(
-        [(q, q) for q in ["test", "tst", "bst", "abce", "日本", "cafe", "zzz"]],
-        ["q_id", "q_text"])
-    for variant in ["standard", "transposition", "merge_and_split"]:
-        a = {tuple(r) for r in fuzzy_join(
-            qs, dict_df, n=2, variant=variant, method="deletion").collect()}
-        b = {tuple(r) for r in fuzzy_broadcast_join(
-            qs, dict_df, n=2, variant=variant).collect()}
-        assert a == b, variant
-    assert a  # workload yields matches
+UNICODE_DICT = ["test", "tests", "tset", "best", "abcd", "ab", "日本語", "café"]
+UNICODE_QUERIES = ["test", "tst", "bst", "abce", "日本", "cafe", "zzz"]
 
 
-def test_broadcast_join_substitutions(spark):
-    from liblevenshtein_rust_spark.functions.substitutions import SubstitutionSet
-    from liblevenshtein_rust_spark.operators.fuzzy_join import (
-        fuzzy_broadcast_join, fuzzy_join)
-    dict_df = spark.createDataFrame(
-        [(t, t) for t in ["phone", "zone", "seat"]], ["term_id", "term"])
-    qs = spark.createDataFrame([(q, q) for q in ["fone", "zeat"]],
+def test_fuzzy_join_unicode_equals_bruteforce(spark):
+    """Non-ASCII terms at n=2 under every variant: keys and distances
+    are codepoint-level."""
+    dict_df = spark.createDataFrame([(t, t) for t in UNICODE_DICT],
+                                    ["term_id", "term"])
+    qs = spark.createDataFrame([(q, q) for q in UNICODE_QUERIES],
                                ["q_id", "q_text"])
+    for variant in [STANDARD, TRANSPOSITION, MERGE_AND_SPLIT]:
+        got = {(r.q_text, r.term, r.distance) for r in fuzzy_join(
+            qs, dict_df, n=2, variant=variant, method="deletion").collect()}
+        exp = _oracle(UNICODE_QUERIES, UNICODE_DICT, 2, variant)
+        assert got == exp, variant
+        assert ("日本", "日本語", 1) in got and ("cafe", "café", 1) in got
+
+
+def test_fuzzy_join_substitutions_equals_bruteforce(spark):
+    from liblevenshtein_rust_spark.functions.distance import levenshtein_py
+    from liblevenshtein_rust_spark.functions.substitutions import SubstitutionSet
+    terms, queries = ["phone", "zone", "seat"], ["fone", "zeat"]
+    dict_df = spark.createDataFrame([(t, t) for t in terms],
+                                    ["term_id", "term"])
+    qs = spark.createDataFrame([(q, q) for q in queries], ["q_id", "q_text"])
     subs = SubstitutionSet.of(("f", "p"), ("s", "z"))
-    a = {tuple(r) for r in fuzzy_join(
+    got = {(r.q_text, r.term, r.distance) for r in fuzzy_join(
         qs, dict_df, n=1, method="deletion", substitutions=subs).collect()}
-    b = {tuple(r) for r in fuzzy_broadcast_join(
-        qs, dict_df, n=1, substitutions=subs).collect()}
-    assert a == b and a
+    exp = {(q, t, d) for q in queries for t in terms
+           if (d := levenshtein_py(q, t, subs.pairs)) <= 1}
+    assert got == exp
+    assert ("zeat", "seat", 0) in got and ("fone", "phone", 1) in got
 
 
-def test_broadcast_join_dict_cap(spark):
-    import pytest as _pytest
-    from liblevenshtein_rust_spark.operators.fuzzy_join import (
-        fuzzy_broadcast_join)
+def test_fuzzy_join_nonstring_ids_nulls_and_dtypes(spark):
+    """Ids are opaque pass-throughs that keep their input types; rows
+    with a NULL id or text never match (equi-join semantics)."""
     dict_df = spark.createDataFrame(
-        [(str(i), f"t{i}") for i in range(30)], ["term_id", "term"])
-    qs = spark.createDataFrame([("q", "t1")], ["q_id", "q_text"])
-    with _pytest.raises(ValueError, match="max_dict_rows"):
-        fuzzy_broadcast_join(qs, dict_df, n=1, max_dict_rows=10)
-
-
-def test_broadcast_join_key_budget_cap(spark):
-    """max_index_keys bounds the WORKER-side deletion index (row count is
-    a poor proxy for index memory — ADVICE r2): 30 ten-char terms at
-    depth 2 expand to 30 * (1 + 10 + 45) = 1,680 keys > 1,000."""
-    import pytest as _pytest
-    from liblevenshtein_rust_spark.operators.fuzzy_join import (
-        fuzzy_broadcast_join)
-    dict_df = spark.createDataFrame(
-        [(str(i), f"abcdefgh{i:02d}") for i in range(30)], ["term_id", "term"])
-    qs = spark.createDataFrame([("q", "abcdefgh01")], ["q_id", "q_text"])
-    with _pytest.raises(ValueError, match="max_index_keys"):
-        fuzzy_broadcast_join(qs, dict_df, n=2, max_index_keys=1000)
-    # within budget it runs and matches
-    got = fuzzy_broadcast_join(qs, dict_df, n=2, max_index_keys=2000).collect()
-    assert {r.term for r in got} >= {"abcdefgh01"}
-
-
-def test_broadcast_join_nonstring_ids_and_nulls(spark):
-    from liblevenshtein_rust_spark.operators.fuzzy_join import (
-        fuzzy_broadcast_join)
-    dict_df = spark.createDataFrame(
-        [(1, "test"), (2, "best"), (3, None)],
+        [(1, "test"), (2, "best"), (3, None), (None, "tst")],
         "term_id long, term string")
     qs = spark.createDataFrame(
-        [(10, "tst"), (11, None)], "q_id int, q_text string")
-    got = {(r.q_id, r.term_id, r.term, r.distance)
-           for r in fuzzy_broadcast_join(qs, dict_df, n=1).collect()}
-    assert got == {(10, 1, "test", 1)}
-    out = fuzzy_broadcast_join(qs, dict_df, n=1)
+        [(10, "tst"), (11, None), (None, "test")], "q_id int, q_text string")
+    out = fuzzy_join(qs, dict_df, n=1, method="deletion")
+    got = {(r.q_id, r.q_text, r.term_id, r.term, r.distance)
+           for r in out.collect()}
+    exp = {(10, q, 1, t, d) for q, t, d in
+           _oracle(["tst"], ["test", "best"], 1, STANDARD)}
+    assert got == exp == {(10, "tst", 1, "test", 1)}
     assert dict(out.dtypes) == {"q_id": "int", "q_text": "string",
                                 "term_id": "bigint", "term": "string",
                                 "distance": "int"}
 
 
-def test_broadcast_join_long_queries_use_bucket_scan(spark):
-    from liblevenshtein_rust_spark.operators.fuzzy_join import (
-        fuzzy_broadcast_join, fuzzy_join)
+def test_fuzzy_join_long_queries_hybrid(spark):
+    """Queries past SHORT_MAX take the segment route under hybrid."""
     long_t = "x" * 40
+    terms = [long_t, long_t[:-1] + "y", "short"]
+    queries = [long_t[:-1], "shrt"]
     dict_df = spark.createDataFrame(
-        [("a", long_t), ("b", long_t[:-1] + "y"), ("c", "short")],
-        ["term_id", "term"])
-    qs = spark.createDataFrame(
-        [("q1", long_t[:-1]), ("q2", "shrt")], ["q_id", "q_text"])
-    a = {tuple(r) for r in fuzzy_join(
+        list(zip(["a", "b", "c"], terms)), ["term_id", "term"])
+    qs = spark.createDataFrame(list(zip(["q1", "q2"], queries)),
+                               ["q_id", "q_text"])
+    got = {(r.q_text, r.term, r.distance) for r in fuzzy_join(
         qs, dict_df, n=1, method="hybrid").collect()}
-    b = {tuple(r) for r in fuzzy_broadcast_join(qs, dict_df, n=1).collect()}
-    assert a == b and a
+    exp = _oracle(queries, terms, 1, STANDARD)
+    assert got == exp and len(exp) == 3
 
 
-def test_broadcast_join_duplicate_query_rows_collapse(spark):
-    # parity with the blocked path's pair-level dedupe
-    from liblevenshtein_rust_spark.operators.fuzzy_join import (
-        fuzzy_broadcast_join, fuzzy_join)
+def test_fuzzy_join_duplicate_query_rows_collapse(spark):
+    """Duplicate (q_id, q_text) rows yield ONE pair: the pair-level dedupe
+    plus the text attach's per-id collapse."""
     dict_df = spark.createDataFrame([("t1", "test")], ["term_id", "term"])
     qs = spark.createDataFrame(
         [("q1", "tst"), ("q1", "tst")], ["q_id", "q_text"])
-    a = fuzzy_join(qs, dict_df, n=1, method="deletion").collect()
-    b = fuzzy_broadcast_join(qs, dict_df, n=1).collect()
-    assert len(a) == len(b) == 1
+    got = [tuple(r) for r in
+           fuzzy_join(qs, dict_df, n=1, method="deletion").collect()]
+    assert got == [("q1", "tst", "t1", "test", 1)]
+
+
+def test_persist_inputs_released_by_unpersist_inputs(spark):
+    """Every persist=True join attaches what it cached to its result, so
+    unpersist_inputs leaves none of it cached."""
+    from pyspark import StorageLevel
+
+    from liblevenshtein_rust_spark.operators.dedup import unpersist_inputs
+    from liblevenshtein_rust_spark.operators.fuzzy_join import (
+        weighted_fuzzy_join)
+
+    def frames():
+        return (spark.createDataFrame([("q1", "tst")], ["q_id", "q_text"]),
+                spark.createDataFrame([("t1", "test"), ("t2", "best")],
+                                      ["term_id", "term"]))
+
+    def cached(df):
+        return df.is_cached or df.storageLevel != StorageLevel.NONE
+
+    for join in (fuzzy_join, weighted_fuzzy_join):
+        qs, ds = frames()
+        kw = {"n": 1} if join is fuzzy_join else {"max_cost": 1.0}
+        out = join(qs, ds, persist=True, **kw)
+        assert cached(qs) and cached(ds), join.__name__
+        assert {r.term for r in out.collect()} == {"test"}
+        unpersist_inputs(out)
+        assert not cached(qs) and not cached(ds), join.__name__
+    _, ds = frames()
+    out = fuzzy_self_join(ds, n=1, persist=True)
+    assert len(out.collect()) == 1
+    held = out._lls_persisted_inputs
+    assert ds in held and all(cached(df) for df in held)
+    unpersist_inputs(out)
+    assert not any(cached(df) for df in held)
 
 
 def test_union_replace_last_wins(spark):

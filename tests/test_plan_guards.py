@@ -151,3 +151,47 @@ def test_substring_best_match_hash_aggregates(spark):
     plan = _plan(fuzzy_substring_join(qdf, docs, n=1))
     assert "SortAggregate" not in plan, plan
     assert "HashAggregate" in plan, plan
+
+
+#: physical-operator sequence (explain "formatted" node order) of the
+#: self-join run_pipeline issues on a parquet-backed dictionary — the
+#: shape perfbench's link_templated workload times: the deletion and
+#: segment key routes unioned per side, the side-wide key exchange, the
+#: broadcast key join + pair dedupe, and two deduped text attaches
+PIPELINE_SELF_JOIN_OPS = [
+    "Scan parquet", "Filter", "Generate", "Project",
+    "Scan parquet", "Filter", "Generate", "Project",
+    "Union", "Exchange", "Project",
+    "Scan parquet", "Filter", "Generate", "Project",
+    "Scan parquet", "Filter", "Generate", "Project",
+    "Union", "Exchange", "Project",
+    "BroadcastExchange", "BroadcastHashJoin", "Project",
+    "HashAggregate", "Exchange", "HashAggregate",
+    "Scan parquet", "Filter", "Project", "Sort", "SortAggregate",
+    "Exchange", "Sort", "SortAggregate", "Filter",
+    "BroadcastExchange", "BroadcastHashJoin", "Project",
+    "Scan parquet", "Filter", "Project", "Sort", "SortAggregate",
+    "Exchange", "Sort", "SortAggregate", "Filter",
+    "BroadcastExchange", "BroadcastHashJoin", "Project",
+    "AdaptiveSparkPlan",
+]
+
+
+def test_pipeline_self_join_plan_shape(spark, tmp_path):
+    """The scored_pairs self-join exactly as run_pipeline issues it
+    (PipelineConfig defaults: hybrid blocking, no salting, defensive
+    per-id collapse) keeps its physical-operator sequence."""
+    import re
+
+    from liblevenshtein_rust_spark.operators.fuzzy_join import build_dictionary
+    from liblevenshtein_rust_spark.plans.pipeline import PipelineConfig
+    p = str(tmp_path / "terms")
+    build_dictionary(spark.createDataFrame([(w,) for w in WORDS], ["text"])) \
+        .write.parquet(p)
+    cfg = PipelineConfig(checkpoint_dir=str(tmp_path))
+    out = fuzzy_self_join(spark.read.parquet(p), n=cfg.n, variant=cfg.variant,
+                          method=cfg.method, salt_threshold=cfg.salt_threshold,
+                          salt_groups=cfg.salt_groups)
+    ops = [m.group(1).strip()
+           for m in re.finditer(r"^\(\d+\) ([^\[\n]+)", _plan(out), re.M)]
+    assert ops == PIPELINE_SELF_JOIN_OPS, ops
