@@ -181,12 +181,13 @@ def _values_df(spark: SparkSession, rows: list[tuple],
     profiled; the substring queries scan their query table 3x per
     invocation). A LocalRelation scans driver-side with exact stats
     (so broadcast decisions need no AQE correction). ASCII fixture
-    strings only (single quotes escaped)."""
+    strings only; Spark SQL literals unescape backslashes, so those are
+    escaped first, then single quotes."""
     def lit(v):
         if v is None:
             return "CAST(NULL AS STRING)"
         if isinstance(v, str):
-            return "'" + v.replace("'", "''") + "'"
+            return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
         return str(v)
     vals = ", ".join("(" + ", ".join(lit(v) for v in r) + ")" for r in rows)
     proj = ", ".join(f"col{i + 1} AS {c}" for i, c in enumerate(cols))

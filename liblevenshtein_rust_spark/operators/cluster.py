@@ -152,8 +152,9 @@ def connected_components(
     ``pairs`` are matched edges; ``nodes`` (optional) adds singleton nodes
     that appear in no pair. ``checkpoint`` is an optional callable
     DataFrame -> DataFrame used to persist/truncate lineage between rounds
-    (defaults to localCheckpoint; the pipeline runner passes a parquet
-    writer for kill-resume durability).
+    (defaults to a lazy localCheckpoint, which the entry checksum
+    materializes; the pipeline's clusters stage uses that default, and
+    gets its kill-resume durability from the stage checkpoint it writes).
 
     ``small_graph_threshold``: when the deduped edge count (known for
     free from the entry checksum) is at or below this bound, the

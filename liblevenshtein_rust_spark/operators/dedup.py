@@ -316,7 +316,11 @@ def token_jaccard_pairs(docs: DataFrame, *, id_col: str = "doc_id",
             F.col("n_common").cast("int").alias("n_common"),
             (F.col("_stot") - F.col("n_common")).cast("int").alias("n_union"),
         )
-        .where(F.col("n_common") * 1000 >= min_ratio_milli * F.col("n_union"))
+        # the floor of 1 keeps a disjoint pair out at threshold 0 without
+        # a second n_common conjunct, which the optimizer would inline as
+        # one more array_intersect per pair
+        .where(F.col("n_common") * 1000 >= F.greatest(
+            min_ratio_milli * F.col("n_union"), F.lit(1)))
     )
     if persist:
         out._lls_persisted_inputs = [toks, prefix]

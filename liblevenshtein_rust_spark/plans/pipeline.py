@@ -8,8 +8,19 @@ output is checkpointed under (run_id, stage):
     2 scored_pairs   fuzzy self-join, distance <= n
     3 clusters       term_id -> entity_id (connected components)
     4 turn_entities  (conv_id, turn_idx, entity_id)
-    5 metrics        per-stage row counts + durations; lineage = per-
-                     partition row counts per stage
+    5 metrics        per-stage row counts + durations (``_metrics``,
+                     ``info.json``); lineage = rows per write task of
+                     each stage (``_lineage/<stage>``)
+
+Each stage's checkpoint write is its only Spark job: the row count is an
+``Observation`` computed inside the write, and the lineage is the
+``recordsWritten`` of each non-empty write task, read from Spark's status
+store and checked against that count (a mismatch or an unreadable store
+falls back to a read-back ``spark_partition_id()`` aggregate). A lineage
+row is therefore one per non-empty write task, not one per read-back
+split; the per-stage sums are the same. Stage 5 is written from the
+driver as pyarrow tables through the Hadoop FS API, with no Spark job.
+Iceberg checkpoints keep the read-back count and lineage.
 
 Resume is read-if-exists on the checkpoint table — the pipeline-granularity
 version of the reference's checkpoint/undo discipline
@@ -27,15 +38,19 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from liblevenshtein_rust_spark.functions.canonicalize import canon_text, phonetic_canon, term_id
 from liblevenshtein_rust_spark.functions.distance import STANDARD
 from liblevenshtein_rust_spark.operators.cluster import connected_components
 from liblevenshtein_rust_spark.operators.fuzzy_join import build_dictionary, fuzzy_self_join
+from liblevenshtein_rust_spark.session import fs_exists, fs_write_bytes, fs_write_parquet
 
 
 @dataclass
@@ -67,6 +82,19 @@ class PipelineConfig:
 #: join key per bucketable stage (the column later equi-joins hit)
 _BUCKET_KEYS = {"terms": "term_id", "scored_pairs": "id_a",
                 "clusters": "term_id", "dedup_pairs": "id_a"}
+
+#: sidecar tables, in the column order and types they always had
+_LINEAGE_SCHEMA = pa.schema([("partition_id", pa.int32()),
+                             ("rows", pa.int64()), ("run_id", pa.string()),
+                             ("stage", pa.string())])
+_METRICS_SCHEMA = pa.schema([("run_id", pa.string()), ("stage", pa.string()),
+                             ("resumed", pa.bool_()),
+                             ("seconds", pa.float64()), ("rows", pa.int64())])
+
+#: local properties SparkContext.setJobGroup sets; a stage write restores
+#: the caller's values
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel")
 
 
 @dataclass
@@ -116,73 +144,152 @@ class _Runner:
         # with Iceberg tables (which never write a parquet _SUCCESS marker)
         if self.cfg.table_format == "iceberg" or self._bucketed(stage):
             return self.spark.catalog.tableExists(self._table(stage))
-        from liblevenshtein_rust_spark.session import fs_exists
         return fs_exists(self.spark, os.path.join(self._path(stage), "_SUCCESS"))
 
-    def _read(self, stage: str) -> DataFrame:
+    def _read(self, stage: str, schema=None) -> DataFrame:
         if self.cfg.table_format == "iceberg" or self._bucketed(stage):
             # bucketed layouts are only visible through the catalog — a
             # path read would lose the bucket spec (and the no-shuffle
             # joins downstream)
             return self.spark.read.table(self._table(stage))
-        return self.spark.read.parquet(self._path(stage))
+        # a known schema (the one just written) skips parquet schema
+        # inference, which is a Spark job of its own
+        reader = self.spark.read if schema is None else \
+            self.spark.read.schema(schema)
+        return reader.parquet(self._path(stage))
 
     def stage(self, name: str, fn) -> DataFrame:
-        """Idempotent stage: read checkpoint if present, else compute+write."""
-        path = self._path(name)
+        """Idempotent stage: read checkpoint if present, else compute+write.
+
+        The checkpoint write is the stage's only Spark job. Its row count
+        is an ``Observation`` on the written DataFrame, computed inside
+        the write job; its lineage is the rows each write task wrote, read
+        from Spark's status store (``_write_task_rows``). When that
+        per-task sum does not equal the observed count, or the store
+        cannot be read, the stage falls back to a read-back aggregate
+        over ``spark_partition_id()``. Iceberg tables always take the
+        read-back path: ``Observation`` on a DSv2 ``createOrReplace`` is
+        not verified here, and a metric that never arrived would block
+        ``Observation.get`` forever."""
         t0 = time.time()
         if self._exists(name):
             df = self._read(name)
             self.info[name] = {"resumed": True, "seconds": time.time() - t0}
             return df
         df = fn()
+        lineage = None
         if self.cfg.table_format == "iceberg":
-            df.writeTo(self._table(name)).createOrReplace()
-        elif self._bucketed(name):
-            self._ensure_db()
-            key = _BUCKET_KEYS[name]
-            (df.write.mode("overwrite")
-             .bucketBy(self.cfg.bucket_by, key).sortBy(key)
-             .option("path", path)
-             .saveAsTable(self._table(name)))
+            self._write(name, df)
         else:
-            df.write.mode("overwrite").parquet(path)
-        out = self._read(name)
-        # lineage: per-partition row counts of the materialized stage
-        lineage = (
-            out.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .withColumn("run_id", F.lit(self.cfg.run_id))
-            .withColumn("stage", F.lit(name))
-        )
-        lineage.write.mode("overwrite").parquet(
-            os.path.join(self.cfg.checkpoint_dir, self.cfg.run_id, "_lineage", name))
+            obs = Observation()
+            group = self._write(
+                name, df.observe(obs, F.count(F.lit(1)).alias("rows")))
+            rows = obs.get["rows"]
+            try:
+                lineage = _write_task_rows(self.spark, group)
+            except Py4JError:  # private-API drift: take the read-back path
+                lineage = None
+            if lineage is not None and sum(lineage.values()) != rows:
+                lineage = None
+        out = self._read(name, df.schema)
+        if lineage is None:
+            lineage = {r[0]: r[1] for r in out.groupBy(
+                F.spark_partition_id()).count().collect()}
+        # written now, not with _metrics: a run killed at a later stage
+        # resumes this one and would otherwise never record its lineage
+        fs_write_parquet(self.spark, self._sidecar("_lineage", name),
+                         pa.Table.from_pylist(
+                             [{"partition_id": p, "rows": n,
+                               "run_id": self.cfg.run_id, "stage": name}
+                              for p, n in sorted(lineage.items())],
+                             schema=_LINEAGE_SCHEMA))
         self.info[name] = {
             "resumed": False,
             "seconds": time.time() - t0,
-            "rows": out.count(),
+            "rows": sum(lineage.values()),
         }
         return out
 
+    def _write(self, name: str, df: DataFrame) -> str:
+        """Write the stage checkpoint under a fresh job group (returned)
+        and restore the caller's job group afterwards."""
+        sc = self.spark.sparkContext
+        saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+        group = f"lls-{self.cfg.run_id}-{name}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, f"checkpoint {self.cfg.run_id}/{name}")
+        try:
+            if self.cfg.table_format == "iceberg":
+                df.writeTo(self._table(name)).createOrReplace()
+            elif self._bucketed(name):
+                self._ensure_db()
+                key = _BUCKET_KEYS[name]
+                (df.write.mode("overwrite")
+                 .bucketBy(self.cfg.bucket_by, key).sortBy(key)
+                 .option("path", self._path(name))
+                 .saveAsTable(self._table(name)))
+            else:
+                df.write.mode("overwrite").parquet(self._path(name))
+        finally:
+            for k, v in saved.items():
+                sc.setLocalProperty(k, v)   # None removes the property
+        return group
+
+    def _sidecar(self, *parts: str) -> str:
+        return os.path.join(self.cfg.checkpoint_dir, self.cfg.run_id, *parts)
+
     def write_metrics(self) -> None:
         """Write the run's ``_metrics`` table (one row per stage) and
-        ``info.json`` next to the stage checkpoints."""
+        ``info.json`` next to the stage checkpoints, from the driver (no
+        Spark job) through the Hadoop FS API: checkpoint_dir may be
+        HDFS/S3, where a driver-local open() would crash after all the
+        expensive stages ran."""
         cfg = self.cfg
-        metrics_rows = [
-            (cfg.run_id, name, bool(v.get("resumed")), float(v["seconds"]),
-             int(v.get("rows", -1)))
-            for name, v in self.info.items()
-        ]
-        metrics = self.spark.createDataFrame(
-            metrics_rows, ["run_id", "stage", "resumed", "seconds", "rows"])
-        metrics.write.mode("overwrite").parquet(
-            os.path.join(cfg.checkpoint_dir, cfg.run_id, "_metrics"))
-        # through the Hadoop FS API: checkpoint_dir may be HDFS/S3, where a
-        # driver-local open() would crash after all the expensive stages ran
-        from liblevenshtein_rust_spark.session import fs_write_text
-        fs_write_text(self.spark,
-                      os.path.join(cfg.checkpoint_dir, cfg.run_id, "info.json"),
-                      json.dumps(self.info, indent=2, default=str))
+        fs_write_parquet(self.spark, self._sidecar("_metrics"),
+                         pa.Table.from_pylist(
+                             [{"run_id": cfg.run_id, "stage": name,
+                               "resumed": bool(v.get("resumed")),
+                               "seconds": float(v["seconds"]),
+                               "rows": int(v.get("rows", -1))}
+                              for name, v in self.info.items()],
+                             schema=_METRICS_SCHEMA))
+        fs_write_bytes(self.spark, self._sidecar("info.json"),
+                       json.dumps(self.info, indent=2,
+                                  default=str).encode("utf-8"))
+
+
+def _write_task_rows(spark: SparkSession,
+                     group: str) -> dict[int, int] | None:
+    """Rows each successful write task of job group ``group`` wrote,
+    keyed by task index: the ``outputMetrics.recordsWritten`` that every
+    file-write task reports, read from Spark's status store with no
+    Spark job; None when a job of the group is no longer retained. The store and the listener bus are ``private[spark]`` but
+    reachable through py4j; the caller checks the sum against the
+    observed row count, so drift in these internals, task retention
+    limits or task retries can only send it to the read-back fallback,
+    never yield a wrong lineage."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    tracker = sc.statusTracker()
+    rows: dict[int, int] = {}
+    for job in tracker.getJobIdsForGroup(group):
+        info = tracker.getJobInfo(job)
+        if info is None:
+            return None
+        for sid in info.stageIds:
+            stage = store.lastStageAttempt(sid)
+            if not stage.outputRecords():
+                continue   # shuffle-map or skipped stage: writes no file
+            tasks = store.taskList(sid, stage.attemptId(), 2 ** 31 - 1)
+            for i in range(tasks.size()):
+                t = tasks.apply(i)
+                if t.status() != "SUCCESS":
+                    continue
+                n = t.taskMetrics().get().outputMetrics().recordsWritten()
+                if n:
+                    rows[t.index()] = rows.get(t.index(), 0) + n
+    return rows
 
 
 def run_pipeline(spark: SparkSession, transcripts: DataFrame,
@@ -219,11 +326,9 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
     pairs = r.stage("scored_pairs", s2)
 
     def s3():
-        def ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
         return connected_components(
             pairs, terms, src="id_a", dst="id_b", node_col="term_id",
-            max_iterations=cfg.cc_max_iterations, checkpoint=ckpt)
+            max_iterations=cfg.cc_max_iterations)
 
     clusters = r.stage("clusters", s3)
 

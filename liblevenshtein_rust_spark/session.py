@@ -47,28 +47,48 @@ _BASE_CONF = {
 }
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` under the session's Hadoop conf."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
 def fs_exists(spark: SparkSession, path: str) -> bool:
     """Existence probe through the Hadoop FileSystem API, so checkpoint
     resume works for HDFS/S3 paths exactly like local ones (a driver-local
     ``os.path.exists`` would silently force recompute on a cluster)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = _hadoop_path(spark, path)
     return bool(fs.exists(jpath))
 
 
-def fs_write_text(spark: SparkSession, path: str, content: str) -> None:
-    """Write a small text file through the Hadoop FileSystem API, so
-    driver-side sidecar files (e.g. the pipeline's info.json) land next to
-    HDFS/S3 checkpoints instead of failing on a non-local path."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+def fs_write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
+    """Write a small file through the Hadoop FileSystem API, so
+    driver-side sidecar files (the pipeline's info.json, ``_metrics`` and
+    ``_lineage``) land next to HDFS/S3 checkpoints instead of failing on
+    a non-local path."""
+    fs, jpath = _hadoop_path(spark, path)
     out = fs.create(jpath, True)
     try:
-        out.write(bytearray(content.encode("utf-8")))
+        out.write(bytearray(data))
     finally:
         out.close()
+
+
+def fs_write_parquet(spark: SparkSession, path: str, table) -> None:
+    """Replace the parquet directory ``path`` with one file holding the
+    pyarrow ``table`` (plus a ``_SUCCESS`` marker), written from the
+    driver: no Spark job and no Python worker. For small sidecar tables
+    only; ``spark.read.parquet(path)`` reads it like a Spark-written
+    directory."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    fs, jpath = _hadoop_path(spark, path)
+    fs.delete(jpath, True)
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    fs_write_bytes(spark, os.path.join(path, "part-00000.parquet"),
+                   buf.getvalue().to_pybytes())
+    fs_write_bytes(spark, os.path.join(path, "_SUCCESS"), b"")
 
 
 def get_spark(

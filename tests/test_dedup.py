@@ -168,3 +168,19 @@ def test_jaccard_hash_tokens_parity(spark, docs):
     got = {(r.id_a, r.id_b, r.n_common, r.n_union) for r in out.collect()}
     unpersist_inputs(out)
     assert got == base
+
+
+def test_jaccard_threshold_zero_emits_only_overlapping_pairs(spark):
+    """At min_ratio_milli=0 every pair with a shared word passes the
+    ratio test; a pair sharing no word must still never be emitted."""
+    from liblevenshtein_rust_spark.operators.dedup import token_jaccard_pairs
+    texts = {1: "alpha beta gamma", 2: "beta delta", 3: "epsilon zeta",
+             4: "zeta", 5: "eta theta", 6: "alpha"}
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    got = {tuple(r) for r in token_jaccard_pairs(
+        docs, min_ratio_milli=0).collect()}
+    words = {i: set(t.split()) for i, t in texts.items()}
+    want = {(a, b, len(words[a] & words[b]), len(words[a] | words[b]))
+            for a in words for b in words
+            if a < b and words[a] & words[b]}
+    assert got == want

@@ -80,3 +80,10 @@ def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
     assert set(df.columns) == {"term_a", "term_b", "distance"}
+
+
+def test_values_df_round_trips_backslashes_and_quotes(spark):
+    vals = ["a\\b", "'q'", "\\\\n", "\\n", "it's \\'"]
+    df = entry_mod._values_df(spark, [(i, v) for i, v in enumerate(vals)],
+                              ["i", "s"])
+    assert [r.s for r in df.orderBy("i").collect()] == vals

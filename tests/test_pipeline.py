@@ -181,3 +181,98 @@ def test_dedup_pipeline_exact_method(spark, tmp_path):
     got = {(r.doc_id, r.n_removed) for r in res["survivors"].collect()}
     # only 1/2 are byte-identical; 3/4/5 survive untouched
     assert got == {(1, 1), (3, 0), (4, 0), (5, 0)}
+
+
+STAGES = ("canon", "terms", "scored_pairs", "clusters", "turn_entities")
+
+
+def _sidecar_totals(spark, base, stages=STAGES):
+    """{stage: rows} of a fresh run under ``base``, after checking that
+    each stage's ``_lineage`` rows and its ``_metrics.rows`` equal the
+    checkpoint's count, and that both sidecars keep their schemas."""
+    import os
+    m = spark.read.parquet(os.path.join(base, "_metrics"))
+    assert m.schema.simpleString() == (
+        "struct<run_id:string,stage:string,resumed:boolean,"
+        "seconds:double,rows:bigint>")
+    metric_rows = {r.stage: r.rows for r in m.collect()}
+    out = {}
+    for st in stages:
+        n = spark.read.parquet(os.path.join(base, st)).count()
+        lin = spark.read.parquet(os.path.join(base, "_lineage", st))
+        assert lin.schema.simpleString() == (
+            "struct<partition_id:int,rows:bigint,run_id:string,stage:string>")
+        got = lin.collect()
+        assert all(r.rows > 0 and r.stage == st for r in got), got
+        assert len({r.partition_id for r in got}) == len(got), got
+        assert sum(r.rows for r in got) == n == metric_rows[st], st
+        out[st] = n
+    return out
+
+
+@pytest.fixture(scope="module")
+def small_turns(spark):
+    return synth_transcripts(spark, 150, seed=7)[0]
+
+
+@pytest.fixture(scope="module")
+def small_run(spark, small_turns, tmp_path_factory):
+    import os
+    ckpt = str(tmp_path_factory.mktemp("small"))
+    res = run_pipeline(spark, small_turns,
+                       PipelineConfig(checkpoint_dir=ckpt, n=1))
+    return os.path.join(ckpt, "run0"), res
+
+
+def test_every_stage_lineage_and_metrics_match_checkpoint(spark, small_run):
+    base, res = small_run
+    totals = _sidecar_totals(spark, base)
+    assert all(totals.values()), totals
+    assert totals == {k: v["rows"] for k, v in res["info"].items()}
+
+
+def _raise(*_):
+    from py4j.protocol import Py4JError
+    raise Py4JError("status store unavailable")
+
+
+@pytest.mark.parametrize("reader", [
+    lambda *_: None, lambda *_: {0: 10 ** 9}, _raise,
+], ids=["nothing", "wrong_sum", "raises"])
+def test_lineage_fallback_writes_same_totals(spark, small_run, small_turns,
+                                             tmp_path, monkeypatch, reader):
+    """When the status-store reader yields nothing, a sum that disagrees
+    with the observed row count, or an error, every stage falls back to
+    the read-back aggregate and writes the same totals."""
+    import os
+
+    from liblevenshtein_rust_spark.plans import pipeline
+    base, _ = small_run
+    monkeypatch.setattr(pipeline, "_write_task_rows", reader)
+    run_pipeline(spark, small_turns,
+                 PipelineConfig(checkpoint_dir=str(tmp_path), n=1))
+    assert _sidecar_totals(spark, os.path.join(str(tmp_path), "run0")) \
+        == _sidecar_totals(spark, base)
+
+
+def test_empty_input_runs_every_stage(spark, small_turns, tmp_path):
+    import os
+    res = run_pipeline(spark, small_turns.where(F.lit(False)),
+                       PipelineConfig(checkpoint_dir=str(tmp_path), n=1))
+    assert {k: v["rows"] for k, v in res["info"].items()} == dict.fromkeys(
+        STAGES, 0)
+    assert _sidecar_totals(spark, os.path.join(str(tmp_path), "run0")) \
+        == dict.fromkeys(STAGES, 0)
+
+
+def test_caller_job_group_survives_run_pipeline(spark, small_turns, tmp_path):
+    sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller description")
+    try:
+        run_pipeline(spark, small_turns,
+                     PipelineConfig(checkpoint_dir=str(tmp_path), n=1))
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        assert sc.getLocalProperty("spark.job.description") \
+            == "caller description"
+    finally:
+        sc._jsc.clearJobGroup()

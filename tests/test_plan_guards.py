@@ -195,3 +195,48 @@ def test_pipeline_self_join_plan_shape(spark, tmp_path):
     ops = [m.group(1).strip()
            for m in re.finditer(r"^\(\d+\) ([^\[\n]+)", _plan(out), re.M)]
     assert ops == PIPELINE_SELF_JOIN_OPS, ops
+
+
+#: Spark jobs one fresh run_pipeline starts on the 1,500-turn
+#: test_pipeline.py fixture. It was 46 while every checkpoint stage also
+#: ran a read-back count(), a lineage aggregate and its write and a
+#: parquet schema inference, the run ended with a Python-RDD _metrics
+#: write, and the clusters stage checkpointed its edges eagerly; the
+#: stage writes (plus the clusters stage's checksum and union-find
+#: collects) are all that remain
+PIPELINE_JOBS = 19
+
+
+def test_pipeline_job_count(spark, tmp_path):
+    """Checkpoint bookkeeping (row counts, lineage, _metrics) adds no
+    Spark job: count the jobs of one fresh run_pipeline through a job tag,
+    and check that no SQL execution writes a sidecar path."""
+    from liblevenshtein_rust_spark.plans.pipeline import (
+        PipelineConfig, run_pipeline)
+    from liblevenshtein_rust_spark.sources.transcripts import (
+        synth_transcripts)
+    sc = spark.sparkContext
+    tdf, _ = synth_transcripts(spark, 1500, seed=42, dup_frac=0.55,
+                               max_edits=2)
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        execs = sql_store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    before = max((e.executionId() for e in executions()), default=-1)
+    tag = "lls-job-count-guard"
+    sc.addJobTag(tag)
+    try:
+        run_pipeline(spark, tdf, PipelineConfig(
+            checkpoint_dir=str(tmp_path), run_id="t1", n=2,
+            variant="transposition"))
+    finally:
+        sc.removeJobTag(tag)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = list(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
+    assert len(jobs) == PIPELINE_JOBS, sorted(jobs)
+    plans = [e.physicalPlanDescription() for e in executions()
+             if e.executionId() > before]
+    assert plans
+    assert not [p for p in plans if "/_lineage" in p or "/_metrics" in p]
