@@ -10,6 +10,7 @@ Python in any of these paths.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -198,36 +199,43 @@ def token_jaccard_pairs(docs: DataFrame, *, id_col: str = "doc_id",
     >= min_ratio_milli/1000. Integer-only output (id_a, id_b, n_common,
     n_union).
 
-    Physical shape: explode distinct words, equi-join on (group, word),
-    count common words per pair with a hash aggregate, then derive
-    |union| = |A| + |B| - |common|. Everything stays in whole-stage
-    codegen; no per-pair array intersections. Only pairs sharing >= 1
-    word are ever materialized (the set-similarity-join standard trick),
-    so disjoint documents cost nothing.
+    Physical shape: ONE per-document table ``(_id, _g, _arr)`` feeds
+    every consumer. It is built by one hash aggregation on the id
+    straight from the input rows (NULL ids and NULL groups, which can
+    never pair, are dropped); that exchange is the only one before the
+    token fan-out, so the input needs no separate spread. Its exploded form
+    ``explode(_arr)``, carrying ``_sz = size(_arr)``, feeds the
+    word-frequency count and the PPJoin prefix rank; the prefix tokens
+    equi-join on (group, word) into candidate pairs, and the exact
+    verify joins each candidate back to the per-document table and
+    counts the overlap with one ``array_intersect`` per pair
+    (|union| = |A| + |B| - |common|). Only pairs sharing a prefix word
+    are ever materialized, so disjoint documents cost nothing.
 
-    ``persist`` caches the exploded token table — the plan reads it five
-    times (sizes, rarity ranks, both prefix sides, exact verify) and
-    each read would otherwise re-run the scan + canonicalize + explode
-    lineage — AND the tiny prefix-token table: the whole
-    toks->wfreq-join->window->filter subtree feeds BOTH sides of the
-    candidate self-join, and Spark plans identical subtrees twice (no
-    cross-join common-subexpression reuse), so without the cache the
-    most expensive stage chain in the job runs twice per invocation
-    (profiled 8-9.6 s -> ~4 s steady at sf0.1). The prefix table is
-    bounded at ~(1-t) of the token table (1/10th at t=0.9). Caches live
-    until ``unpersist_inputs(result)`` (or ``spark.catalog.clearCache()``)
-    — callers that invoke this repeatedly in one JVM (benchmark loops)
-    must release them after materializing, or cached copies accumulate
-    for the JVM's lifetime.
+    A document is one id: ``_arr`` is the union of the distinct words of
+    every input row with that id, and ``_g`` the smallest ``group_col``
+    value among those rows. Where ids are unique this is exactly the
+    per-row word set.
+
+    ``persist`` caches the per-document table and the small prefix-token
+    table: each is read by several consumers (the prefix table by both
+    sides of the candidate self-join), and Spark plans an identical
+    subtree once per consumer unless the exchanges above it are reused,
+    so the cache guarantees the scan, canonicalize, aggregation and rank
+    run once. The prefix table is bounded at ~(1-t) of the token table
+    (1/10th at t=0.9). Caches live until ``unpersist_inputs(result)``
+    (or ``spark.catalog.clearCache()``) — callers that invoke this
+    repeatedly in one JVM (benchmark loops) must release them after
+    materializing, or cached copies accumulate for the JVM's lifetime.
 
     ``persist_level`` names any ``pyspark.StorageLevel``; the
     MEMORY_AND_DISK default keeps hot blocks on-heap, while DISK_ONLY
     off-heaps the cache onto ``spark.local.dir`` (executor NVMe on a
-    cluster, tmpfs in the bench) — the right level when the token table
-    is large relative to executor heap and the job is GC-sensitive.
+    cluster, tmpfs in the bench) — the right level when the document
+    table is large relative to executor heap and the job is GC-sensitive.
 
-    ``hash_tokens`` replaces each word with its xxhash64 immediately
-    after the explode: every downstream shuffle / cache / join carries a
+    ``hash_tokens`` replaces each word with its xxhash64 before the
+    aggregation: every downstream shuffle / cache / join carries a
     fixed 8-byte long instead of a variable-length string (32% faster at
     the 1.28M-doc scale leg, and the smaller memory surface stabilizes
     GC-sensitive legs). Counts — and therefore Jaccard ratios — are
@@ -235,19 +243,25 @@ def token_jaccard_pairs(docs: DataFrame, *, id_col: str = "doc_id",
     64 bits (P < |vocab|^2 / 2^65; ~1e-10 at a 100M-word vocabulary), so
     this is the production default for 100-TB dedup; leave False where
     bit-exactness against a word-level oracle is required."""
-    toks = spread_input(
-        docs.select([id_col, text_col] + ([group_col] if group_col else []))
-    ).select(
-        F.col(id_col).alias("_id"),
-        (F.col(group_col) if group_col else F.lit(0)).alias("_g"),
-        F.explode(F.array_distinct(F.split(canon_text(text_col), " "))).alias("_w"),
-    )
+    words = F.array_distinct(F.split(canon_text(text_col), " "))
     if hash_tokens:
-        toks = toks.select("_id", "_g", F.xxhash64("_w").alias("_w"))
+        words = F.transform(words, lambda w: F.xxhash64(w))
+    doc_tab = (
+        docs.where(F.col(id_col).isNotNull())
+        .groupBy(F.col(id_col).alias("_id"))
+        .agg((F.min(group_col) if group_col else F.lit(0)).alias("_g"),
+             F.array_distinct(F.flatten(F.collect_list(words))).alias("_arr"))
+        # a NULL group never pairs; filtering on _g also keeps it in every
+        # consumer's plan, so all of them read one shared per-document
+        # exchange instead of a second one pruned of the group column
+        .where(F.col("_g").isNotNull())
+    )
     if persist:
-        from pyspark import StorageLevel
-        toks = toks.persist(getattr(StorageLevel, persist_level))
-    sizes = toks.groupBy("_id").agg(F.count(F.lit(1)).alias("_sz"))
+        doc_tab = doc_tab.persist(getattr(StorageLevel, persist_level))
+    # _sz is projected before the explode, so the array is not carried
+    # into every exploded row
+    toks = doc_tab.select("_id", "_g", "_arr", F.size("_arr").alias("_sz")) \
+        .select("_id", "_g", "_sz", F.explode("_arr").alias("_w"))
 
     # PPJoin prefix + positional + size filtering (Xiao/Wang/Lin/Yu,
     # WWW'08 — public algorithm): if jaccard(A,B) >= t, the sets share a
@@ -264,12 +278,11 @@ def token_jaccard_pairs(docs: DataFrame, *, id_col: str = "doc_id",
         "_rn",
         F.row_number().over(
             Window.partitionBy("_id").orderBy(F.col("_wf").asc(), F.col("_w").asc())),
-    ).join(sizes, "_id")
+    )
     prefix = ranked.where(
         F.col("_rn") <= F.floor((1000 - mr) * F.col("_sz") / 1000) + 1
     ).select("_id", "_g", "_w", "_rn", "_sz")
     if persist:
-        from pyspark import StorageLevel
         prefix = prefix.persist(getattr(StorageLevel, persist_level))
     pa = prefix.select(F.col("_id").alias("id_a"), "_g", "_w",
                        F.col("_rn").alias("_ra"), F.col("_sz").alias("_sa"))
@@ -290,20 +303,11 @@ def token_jaccard_pairs(docs: DataFrame, *, id_col: str = "doc_id",
                >= mr * (F.col("_fsa") + F.col("_fsb")))
         .select("id_a", "id_b")
     )
-    # exact verification — r6 rewrite (guide §2.3 "shuffle fewer bytes" /
-    # §1.2 per-task work): attach each side's (distinct) token ARRAY and
-    # count the overlap with one native array_intersect per pair, instead
-    # of re-exploding tokens and counting shared rows. The old
-    # cand ⋈ tokens(id_a) ⋈ tokens(id_b) chain materialized
-    # |cand| x avg_tokens intermediate rows (~37 M rows at sf0.1 for
-    # ~250 k verified pairs — profiled as the dominant ~2.5 s stage of
-    # the family); the array form shuffles exactly one row per candidate
-    # pair and one array per document. Counts are identical: the arrays
-    # hold exactly the per-doc distinct tokens the explode produced, and
-    # |A ∩ B| / |A| + |B| - |A ∩ B| is the same integer arithmetic.
-    arrs = toks.groupBy("_id").agg(F.collect_list("_w").alias("_arr"))
-    aa = arrs.select(F.col("_id").alias("id_a"), F.col("_arr").alias("_ta"))
-    bb = arrs.select(F.col("_id").alias("id_b"), F.col("_arr").alias("_tb"))
+    # exact verification: one row per candidate pair meets each side's
+    # token array, and one native array_intersect counts the overlap —
+    # never re-exploding tokens per pair (|cand| x avg_tokens rows)
+    aa = doc_tab.select(F.col("_id").alias("id_a"), F.col("_arr").alias("_ta"))
+    bb = doc_tab.select(F.col("_id").alias("id_b"), F.col("_arr").alias("_tb"))
     out = (
         cand.join(aa, "id_a").join(bb, "id_b")
         .select(
@@ -323,13 +327,14 @@ def token_jaccard_pairs(docs: DataFrame, *, id_col: str = "doc_id",
             min_ratio_milli * F.col("n_union"), F.lit(1)))
     )
     if persist:
-        out._lls_persisted_inputs = [toks, prefix]
+        out._lls_persisted_inputs = [doc_tab, prefix]
     return out
 
 
 def unpersist_inputs(df: DataFrame) -> None:
     """Release the cached frames a ``persist=True`` operator attached to
-    its result: token_jaccard_pairs' exploded token table, and the inputs
+    its result: token_jaccard_pairs' per-document token table and prefix
+    table, and the inputs
     (plus a self-join's key table) of every fuzzy_join.py edit-distance
     join. Safe on any DataFrame; call after the result is materialized."""
     for cached in getattr(df, "_lls_persisted_inputs", []) or []:

@@ -278,6 +278,11 @@ def fuzzy_substring_join(
       all_positions=True:  (q_id, q_text, d_id, pos, distance) — one row
         per start position p with dp(p) <= n.
 
+    ``queries`` must carry one row per ``q_id``: the best-match
+    aggregate groups by (q_id, q_text, d_id), so a q_id repeated with
+    different texts yields one row per (q_id, q_text, d_id), not one per
+    (q_id, d_id).
+
     Queries shorter than the segment count (n+1 for standard, 2n+1
     otherwise) cannot use the blocked path; their only exact plan is a
     broadcast probe of EVERY position of EVERY doc — a full-corpus

@@ -184,3 +184,82 @@ def test_jaccard_threshold_zero_emits_only_overlapping_pairs(spark):
             for a in words for b in words
             if a < b and words[a] & words[b]}
     assert got == want
+
+
+def _jaccard_parity_rows():
+    """Seeded near-duplicate docs plus the edge rows: NULL text, empty
+    text, extra whitespace, a NULL id, a NULL group, a one-word doc and
+    a duplicate id whose rows differ in words and group."""
+    import random
+    rng = random.Random(20260417)
+    vocab = [f"w{i}" for i in range(40)]
+    rows, next_id = [], 100
+    for _ in range(40):
+        words = rng.sample(vocab, rng.randint(3, 12))
+        lang = rng.choice(["en", "de"])
+        rows.append((next_id, " ".join(words), lang))
+        next_id += 1
+        for _ in range(rng.randint(0, 2)):
+            near = list(words)
+            edit = rng.randrange(3)
+            if edit == 0:
+                near[rng.randrange(len(near))] = rng.choice(vocab)
+            elif edit == 1:
+                near.append(rng.choice(vocab))
+            rng.shuffle(near)
+            rows.append((next_id, " ".join(near),
+                         lang if rng.random() < 0.8 else "de"))
+            next_id += 1
+    rows += [
+        (1, "a b c d", "en"), (1, "a b c e", "fr"), (2, "a b c d", "en"),
+        (3, None, "en"), (4, "", "en"), (5, "", "en"),
+        (6, "  A   b  c d ", "en"), (None, "a b c d", "en"),
+        (7, "a b c d", None), (8, "solo", "en"), (9, "solo", "en"),
+    ]
+    return rows
+
+
+def _jaccard_bruteforce(rows, group_col, min_ratio_milli):
+    """One document per non-NULL id: the union of its rows' distinct
+    canonical words, in the smallest non-NULL group among its rows."""
+    import re
+    words, groups = {}, {}
+    for doc_id, text, lang in rows:
+        if doc_id is None:
+            continue
+        ws = words.setdefault(doc_id, set())
+        if text is not None:
+            ws |= set(re.sub(r"\s+", " ", text.lower().strip(" ")).split(" "))
+        if lang is not None:
+            groups[doc_id] = min(lang, groups.get(doc_id, lang))
+    out = set()
+    for a in words:
+        for b in words:
+            if a >= b:
+                continue
+            if group_col and (groups.get(a) is None
+                              or groups.get(a) != groups.get(b)):
+                continue
+            common = len(words[a] & words[b])
+            union = len(words[a] | words[b])
+            if common * 1000 >= max(min_ratio_milli * union, 1):
+                out.add((a, b, common, union))
+    return out
+
+
+@pytest.mark.parametrize("min_ratio_milli", [0, 500, 900, 1000])
+@pytest.mark.parametrize("group_col", [None, "lang"])
+@pytest.mark.parametrize("hash_tokens", [False, True])
+def test_jaccard_matches_bruteforce(spark, hash_tokens, group_col,
+                                    min_ratio_milli):
+    """token_jaccard_pairs equals a brute-force all-pairs Jaccard over
+    the same documents, edge rows and duplicate id included."""
+    from liblevenshtein_rust_spark.operators.dedup import token_jaccard_pairs
+    rows = _jaccard_parity_rows()
+    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    got = {tuple(r) for r in token_jaccard_pairs(
+        docs, group_col=group_col, min_ratio_milli=min_ratio_milli,
+        hash_tokens=hash_tokens).collect()}
+    want = _jaccard_bruteforce(rows, group_col, min_ratio_milli)
+    assert got == want
+    assert len(want) > 5

@@ -154,8 +154,8 @@ def test_substring_best_match_hash_aggregates(spark):
 
 
 #: physical-operator sequence (explain "formatted" node order) of the
-#: self-join run_pipeline issues on a parquet-backed dictionary — the
-#: shape perfbench's link_templated workload times: the deletion and
+#: self-join with PipelineConfig's defaults and the defensive per-id
+#: collapse on a parquet-backed dictionary: the deletion and
 #: segment key routes unioned per side, the side-wide key exchange, the
 #: broadcast key join + pair dedupe, and two deduped text attaches
 PIPELINE_SELF_JOIN_OPS = [
@@ -178,9 +178,9 @@ PIPELINE_SELF_JOIN_OPS = [
 
 
 def test_pipeline_self_join_plan_shape(spark, tmp_path):
-    """The scored_pairs self-join exactly as run_pipeline issues it
-    (PipelineConfig defaults: hybrid blocking, no salting, defensive
-    per-id collapse) keeps its physical-operator sequence."""
+    """The self-join with PipelineConfig's defaults (hybrid blocking, no
+    salting) and the defensive per-id collapse keeps its
+    physical-operator sequence."""
     import re
 
     from liblevenshtein_rust_spark.operators.fuzzy_join import build_dictionary
@@ -197,14 +197,58 @@ def test_pipeline_self_join_plan_shape(spark, tmp_path):
     assert ops == PIPELINE_SELF_JOIN_OPS, ops
 
 
+#: the scored_pairs self-join exactly as run_pipeline issues it
+#: (unique_ids=True, since build_dictionary emits one row per term_id):
+#: PIPELINE_SELF_JOIN_OPS without the two per-id collapses, i.e. each
+#: text attach loses its Sort + SortAggregate + Exchange + Sort +
+#: SortAggregate + Filter round — the shape perfbench's link_templated
+#: workload times
+PIPELINE_UNIQUE_SELF_JOIN_OPS = [
+    "Scan parquet", "Filter", "Generate", "Project",
+    "Scan parquet", "Filter", "Generate", "Project",
+    "Union", "Exchange", "Project",
+    "Scan parquet", "Filter", "Generate", "Project",
+    "Scan parquet", "Filter", "Generate", "Project",
+    "Union", "Exchange", "Project",
+    "BroadcastExchange", "BroadcastHashJoin", "Project",
+    "HashAggregate", "Exchange", "HashAggregate",
+    "Scan parquet", "Filter", "Project",
+    "BroadcastExchange", "BroadcastHashJoin", "Project",
+    "Scan parquet", "Filter", "Project",
+    "BroadcastExchange", "BroadcastHashJoin", "Project",
+    "AdaptiveSparkPlan",
+]
+
+
+def test_pipeline_unique_ids_self_join_plan_shape(spark, tmp_path):
+    """The scored_pairs self-join exactly as run_pipeline issues it
+    (PipelineConfig defaults, unique_ids=True) keeps its
+    physical-operator sequence."""
+    import re
+
+    from liblevenshtein_rust_spark.operators.fuzzy_join import build_dictionary
+    from liblevenshtein_rust_spark.plans.pipeline import PipelineConfig
+    p = str(tmp_path / "terms")
+    build_dictionary(spark.createDataFrame([(w,) for w in WORDS], ["text"])) \
+        .write.parquet(p)
+    cfg = PipelineConfig(checkpoint_dir=str(tmp_path))
+    out = fuzzy_self_join(spark.read.parquet(p), n=cfg.n, variant=cfg.variant,
+                          method=cfg.method, salt_threshold=cfg.salt_threshold,
+                          salt_groups=cfg.salt_groups, unique_ids=True)
+    ops = [m.group(1).strip()
+           for m in re.finditer(r"^\(\d+\) ([^\[\n]+)", _plan(out), re.M)]
+    assert ops == PIPELINE_UNIQUE_SELF_JOIN_OPS, ops
+
+
 #: Spark jobs one fresh run_pipeline starts on the 1,500-turn
 #: test_pipeline.py fixture. It was 46 while every checkpoint stage also
 #: ran a read-back count(), a lineage aggregate and its write and a
 #: parquet schema inference, the run ended with a Python-RDD _metrics
 #: write, and the clusters stage checkpointed its edges eagerly; the
 #: stage writes (plus the clusters stage's checksum and union-find
-#: collects) are all that remain
-PIPELINE_JOBS = 19
+#: collects) are all that remain. It was 19 while the scored_pairs
+#: self-join collapsed each side's text attach per id
+PIPELINE_JOBS = 17
 
 
 def test_pipeline_job_count(spark, tmp_path):
@@ -240,3 +284,64 @@ def test_pipeline_job_count(spark, tmp_path):
              if e.executionId() > before]
     assert plans
     assert not [p for p in plans if "/_lineage" in p or "/_metrics" in p]
+
+
+def _docs_parquet(spark, sf_dir, tmp_path):
+    """A private parquet copy of the sf_dir documents, so that no other
+    test's cached read of the same file substitutes an in-memory scan."""
+    p = str(tmp_path / "docs")
+    spark.read.parquet(f"{sf_dir}/documents.parquet").write.parquet(p)
+    return spark.read.parquet(p)
+
+
+def test_jaccard_plan_reads_one_document_table(spark, sf_dir, tmp_path):
+    """token_jaccard_pairs as run_dedup_pipeline issues it (group_col
+    "lang", hash_tokens, the default threshold) on a parquet input builds
+    one per-document token table: the word explode is planned only for
+    the word-frequency count and the prefix rank, and no aggregate
+    regroups exploded _w rows into a list (the verify reads the
+    per-document arrays). The old plan, which spread the input, exploded
+    it four times and regrouped the tokens for sizes and verify arrays,
+    had 8 Generate and 16 Exchange nodes before execution."""
+    import re
+
+    from liblevenshtein_rust_spark.operators.dedup import token_jaccard_pairs
+    from liblevenshtein_rust_spark.plans.pipeline import DedupConfig
+    cfg = DedupConfig(checkpoint_dir="", method="jaccard", group_col="lang",
+                      hash_tokens=True)
+    plan = _plan(token_jaccard_pairs(
+        _docs_parquet(spark, sf_dir, tmp_path),
+        id_col=cfg.id_col, text_col=cfg.text_col, group_col=cfg.group_col,
+        min_ratio_milli=cfg.threshold_milli, hash_tokens=cfg.hash_tokens))
+    ops = [m.group(1).strip()
+           for m in re.finditer(r"^\(\d+\) ([^\[\n]+)", plan, re.M)]
+    assert ops.count("Generate") <= 4, ops
+    assert ops.count("Exchange") <= 8, ops
+    assert not re.search(r"collect_list\(_w#", plan), plan
+
+
+#: Spark jobs one fresh run_dedup_pipeline(jaccard, group_col="lang",
+#: hash_tokens=True) starts on a copy of the sf_dir documents. It was 21
+#: while the token join spread its input and regrouped exploded tokens
+#: for the per-document sizes and verify arrays
+DEDUP_JOBS = 15
+
+
+def test_dedup_pipeline_job_count(spark, tmp_path, sf_dir):
+    """Count the jobs of one fresh jaccard run_dedup_pipeline, as the
+    dedup_docs workload configures it, through a job tag."""
+    from liblevenshtein_rust_spark.plans.pipeline import (
+        DedupConfig, run_dedup_pipeline)
+    sc = spark.sparkContext
+    docs = _docs_parquet(spark, sf_dir, tmp_path / "in")
+    tag = "lls-dedup-job-count-guard"
+    sc.addJobTag(tag)
+    try:
+        run_dedup_pipeline(spark, docs, DedupConfig(
+            checkpoint_dir=str(tmp_path), run_id="d1", method="jaccard",
+            group_col="lang", hash_tokens=True))
+    finally:
+        sc.removeJobTag(tag)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = list(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
+    assert len(jobs) == DEDUP_JOBS, sorted(jobs)
