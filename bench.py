@@ -13,16 +13,18 @@ Extra modes:
                   reference's ~60-75k d<=2 queries/sec/core, BASELINE.md)
   --scale-job N   one flagship linkage run on local[N] over an amplified
                   corpus; prints {"cores", "seconds", "turns", "pairs"}
-  --scaling       runs --scale-job at 8 and 32 cores in fresh JVMs
-                  (sandbox stand-in for N vs 4N executors) and rewrites
-                  BENCH/BASELINE.md with throughput + scaling efficiency
+  --scale-job-dedup N  the same for the jaccard -> CC dedup family
+  --scaling       runs both scale jobs at 2, 8 and 32 cores in fresh JVMs
+                  (sandbox stand-in for N vs 4N executors), prints the
+                  scaling efficiencies and appends them to
+                  BENCH/SCALING_HISTORY.jsonl
   --probe         2-second box-weather check: fixed CPU work on 8 pinned
                   cores, graded against the rolling clean reference in
                   SCALING_HISTORY.jsonl (>20% above = degraded window).
                   Every bench/scale-job invocation also records this
                   probe automatically in its output JSON.
-  --rewrite-baseline  regenerate BENCH/BASELINE.md from the last
-                  recorded --scaling output (template edits only)
+
+Any other argument prints this text to stderr and exits with status 2.
 """
 
 from __future__ import annotations
@@ -37,6 +39,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+#: scaling history (writer: _append_history, reader: _probe_reference),
+#: next to this file so the run's working directory does not matter
+BENCH_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
 
 #: hypervisor-steal threshold (percent of ALL-vCPU time during a steady
 #: leg) above which a draw's window is recorded as degraded. Calibrated
@@ -168,8 +173,7 @@ def _probe_reference() -> float | None:
     in a degraded window self-heals once any cleaner probe is recorded)."""
     vals: list[float] = []
     try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH/SCALING_HISTORY.jsonl")) as f:
+        with open(os.path.join(BENCH_DIR, "SCALING_HISTORY.jsonl")) as f:
             for ln in f:
                 r = json.loads(ln)
                 for v in (r.get("probes") or {}).values():
@@ -604,7 +608,6 @@ def run_scale_job_dedup(cores: str, k: int = 256) -> None:
     # allocation stops competing with execution memory and shrinks the
     # GC-sensitive surface that made the mid-parallelism leg absorb box
     # contention disproportionately (see BENCH/BASELINE.md).
-    cache_level = os.environ.get("LLS_BENCH_TOKEN_CACHE", "DISK_ONLY")
 
     def once() -> tuple[float, int, int]:
         t0 = time.time()
@@ -614,7 +617,7 @@ def run_scale_job_dedup(cores: str, k: int = 256) -> None:
         # operators/dedup.token_jaccard_pairs docstring)
         pairs = token_jaccard_pairs(docs, group_col="lang",
                                     min_ratio_milli=900, persist=True,
-                                    persist_level=cache_level,
+                                    persist_level="DISK_ONLY",
                                     hash_tokens=True)
         surv = near_dup_dedup(docs, pairs)
         n_surv = surv.count()
@@ -774,19 +777,17 @@ def run_scaling() -> None:
     }
     print(json.dumps(out))
     _append_history(out)
-    with open("BENCH/last_scaling.json", "w") as f:
-        json.dump(out, f, indent=1)  # lets --rewrite-baseline regenerate
-    _write_baseline_md(out)
 
 
 def _append_history(out: dict) -> None:
     """Every --scaling invocation appends its summary to
-    BENCH/SCALING_HISTORY.jsonl; the generated doc renders ALL recorded
-    invocations. One run's ratio on a shared box moves +-15% with leg-to-
-    leg drift — the honest evidence is the distribution, not one draw."""
-    os.makedirs("BENCH", exist_ok=True)
+    BENCH/SCALING_HISTORY.jsonl. One run's ratio on a shared box moves
+    +-15% with leg-to-leg drift — the honest evidence is the distribution
+    of all recorded invocations, not one draw."""
+    os.makedirs(BENCH_DIR, exist_ok=True)
+    path = os.path.join(BENCH_DIR, "SCALING_HISTORY.jsonl")
     try:
-        with open("BENCH/SCALING_HISTORY.jsonl") as f:
+        with open(path) as f:
             n = sum(1 for _ in f)
     except FileNotFoundError:
         n = 0
@@ -807,716 +808,8 @@ def _append_history(out: dict) -> None:
               "window_degraded"):
         if out.get(k) is not None:
             rec[k] = out[k]
-    with open("BENCH/SCALING_HISTORY.jsonl", "a") as f:
+    with open(path, "a") as f:
         f.write(json.dumps(rec) + "\n")
-
-
-def _history_table() -> str:
-    rows = []
-    try:
-        with open("BENCH/SCALING_HISTORY.jsonl") as f:
-            for ln in f:
-                r = json.loads(ln)
-                ls = r.get("legs_steady", {})
-                # pair dimension (r5 final): draws record which (N, 4N)
-                # core pair they measured; absent = the historical 2->8
-                pr = r.get("pair", "2to8")
-                plo, phi = pr.split("to")
-                dd = r.get(f"dedup_eff_{plo}_to_{phi}", "—")
-                dls = r.get("dedup_legs_steady")
-                if dd != "—" and dls:
-                    legs_txt = (f"{plo}c {dls.get(plo, '—')}s / "
-                                f"{phi}c {dls.get(phi, '—')}s")
-                    if pr != "2to8":
-                        legs_txt = f"{pr} pair: " + legs_txt
-                    if f"{phi}a" in dls:  # bracketed draw: hi-core legs
-                        # surround the low-core leg; spread = stability
-                        legs_txt += (f" [{dls[phi + 'a']}/{dls[phi + 'b']}, "
-                                     f"±{r.get('bracket_spread_pct', '?')}%]")
-                    dd = f"{dd} ({legs_txt})"
-                if r.get("steal_worst") is not None:
-                    detail = f"steal {r['steal_worst']}%"
-                elif r.get("probe_worst") is not None:
-                    detail = f"probe {r.get('probe_worst')}s"
-                else:
-                    detail = None
-                if r.get("window_degraded") is True:
-                    win = f"DEGRADED ({detail})" if detail else "DEGRADED"
-                elif r.get("window_degraded") is False:
-                    win = f"clean ({detail})" if detail else "clean"
-                elif detail is not None:
-                    win = f"n/a ({detail})"
-                else:
-                    win = "—"
-                rows.append(
-                    f"| {r.get('label', 'run')} | {ls.get('2', '—')} "
-                    f"| {ls.get('8', '—')} | {ls.get('32', '—')} "
-                    f"| {r.get('eff_2_to_8', '—')} "
-                    f"| {r.get('eff_8_to_32', '—')} | {dd} | {win} |")
-    except FileNotFoundError:
-        return "(no recorded invocations)"
-    def _median(vals: list) -> float | None:
-        if not vals:
-            return None
-        vals = sorted(vals)
-        n = len(vals)
-        return vals[n // 2] if n % 2 else round(
-            (vals[n // 2 - 1] + vals[n // 2]) / 2, 3)
-
-    effs = []
-    era_clean: dict[str, list] = {}
-    era_all: dict[str, list] = {}
-    era_minofn: dict[str, list] = {}
-    era_legs2: dict[str, list] = {}
-    era_legs8: dict[str, list] = {}
-    # non-2to8 (N, 4N) pairs, keyed (era, pair): the pair-dimension
-    # validation draws (see the protocol narrative below)
-    pair_minofn: dict[tuple, list] = {}
-    pair_legs_lo: dict[tuple, list] = {}
-    pair_legs_hi: dict[tuple, list] = {}
-    with open("BENCH/SCALING_HISTORY.jsonl") as f:
-        for ln in f:
-            r = json.loads(ln)
-            if "eff_2_to_8" in r:
-                effs.append(r["eff_2_to_8"])
-            pr = r.get("pair", "2to8")
-            if pr != "2to8" and r.get("era"):
-                plo, phi = pr.split("to")
-                gk = (r["era"], pr)
-                ls = r.get("dedup_legs_steady") or {}
-                lr = r.get("leg_runs") or {}
-                for key in (phi, f"{phi}a", f"{phi}b"):
-                    if isinstance(ls.get(key), (int, float)):
-                        pair_legs_hi.setdefault(gk, []).append(ls[key])
-                    for v in (lr.get(key) or []):
-                        pair_legs_hi.setdefault(gk, []).append(v)
-                if isinstance(ls.get(plo), (int, float)):
-                    pair_legs_lo.setdefault(gk, []).append(ls[plo])
-                for v in (lr.get(plo) or []):
-                    pair_legs_lo.setdefault(gk, []).append(v)
-                eff_key = f"dedup_eff_{plo}_to_{phi}"
-                if eff_key in r and r.get("leg_runs"):
-                    pair_minofn.setdefault(gk, []).append(r[eff_key])
-                continue
-            # dedup eras: explicit era field (r5+), else label tag (r4
-            # rows predate the field). Clean = steal/probe-graded clean,
-            # or (pre-probe r4 rows) a label that reports neither
-            # degradation nor contention.
-            label = str(r.get("label", "")).lower()
-            era = r.get("era")
-            if era is None and "k=256" in label:
-                era = "k256"
-            # pooled per-leg samples for the era capability estimate:
-            # every recorded steady value and every per-run sample,
-            # INCLUDING aborted attempts' probe legs — contention only
-            # inflates a run, so the era-wide minimum per leg converges
-            # on the box's uncontended capability with zero selection
-            # (every sample pools in; nothing is excluded)
-            if era:
-                ls = r.get("dedup_legs_steady") or {}
-                lr = r.get("leg_runs") or {}
-                for key in ("8", "8a", "8b"):
-                    if isinstance(ls.get(key), (int, float)):
-                        era_legs8.setdefault(era, []).append(ls[key])
-                    for v in (lr.get(key) or []):
-                        era_legs8.setdefault(era, []).append(v)
-                if isinstance(ls.get("2"), (int, float)):
-                    era_legs2.setdefault(era, []).append(ls["2"])
-                for v in (lr.get("2") or []):
-                    era_legs2.setdefault(era, []).append(v)
-            if era and "dedup_eff_2_to_8" in r:
-                era_all.setdefault(era, []).append(r["dedup_eff_2_to_8"])
-                degraded = r.get("window_degraded")
-                if degraded is None:
-                    degraded = ("degraded" in label or "contention" in label)
-                if not degraded:
-                    era_clean.setdefault(era, []).append(
-                        r["dedup_eff_2_to_8"])
-                # final-protocol draws: min-of-N legs (leg_runs recorded)
-                # are window-robust by construction — the estimator, not
-                # a window flag, carries the evidence for these
-                if r.get("leg_runs"):
-                    era_minofn.setdefault(era, []).append(
-                        r["dedup_eff_2_to_8"])
-    med = _median(effs)
-    era_desc = {
-        "k256": ("Dedup k=256-era (star-path CC: its >500k-edge graph "
-                 "silently fell off the 500k driver union-find bound — "
-                 "found and fixed in r5, see the fastpath era) "
-                 "clean-window median"),
-        "k256fp": ("Dedup k=256-FASTPATH-era (union-find bound raised to "
-                   "2M edges, restoring the driver CC fast path the r4 "
-                   "profiling built) clean-window median"),
-        "k512": ("Dedup k=512-era (deployment-batch-size point: double "
-                 "the k=256 corpus so the measured S~15 s per-job stage "
-                 "latency amortizes the way 1000-executor batches "
-                 "amortize it — P doubles on identical code, survivors "
-                 "and edge graph stay a forest at ~1.15M edges, inside "
-                 "the 2M driver-UF bound by a checked 2x margin) "
-                 "clean-window median"),
-    }
-    k256_line = ""
-    for era in sorted(era_all):
-        clean, al = era_clean.get(era, []), era_all[era]
-        k256_line += (
-            f"\n\n{era_desc.get(era, f'Dedup {era}-era clean-window median')}"
-            f" (the era's north-rule evidence; protocol requires >=3 "
-            f"clean draws): "
-            f"**{_median(clean)}** over {len(clean)} clean draw(s) "
-            f"[{', '.join(str(v) for v in sorted(clean))}] — "
-            f"{len(al) - len(clean)} degraded-window draw(s) "
-            f"excluded (all-draws median {_median(al)}, n={len(al)})."
-        )
-        mofn = era_minofn.get(era, [])
-        if mofn:
-            k256_line += (
-                f" Final min-of-N-leg protocol draws (window-robust "
-                f"estimator — each leg is the minimum of N runs wide "
-                f"enough to span the box's multi-minute contention "
-                f"phases, per-run arrays recorded; see the protocol "
-                f"note below): median **{_median(mofn)}** over "
-                f"{len(mofn)} draw(s) "
-                f"[{', '.join(str(v) for v in sorted(mofn))}]."
-            )
-        l2s, l8s = era_legs2.get(era, []), era_legs8.get(era, [])
-        if l2s and l8s:
-            cap = round(min(l2s) / (4 * min(l8s)), 3)
-            k256_line += (
-                f" Era capability (pooled-minimum estimator: the "
-                f"fastest recorded 2-core leg over 4x the fastest "
-                f"recorded 8-core leg/run across ALL the era's draws "
-                f"including aborted probe legs — no sample excluded, "
-                f"and contention can only inflate a run, so each "
-                f"minimum converges on uncontended capability): "
-                f"**{cap}** = {min(l2s)} s / (4 x {min(l8s)} s), from "
-                f"{len(l2s)} two-core and {len(l8s)} eight-core "
-                f"samples."
-            )
-    # pair-dimension validation lines: non-2to8 (N, 4N) draws of the
-    # SAME job/corpus/protocol; the fitted Amdahl terms predict each
-    # pair, so agreement here validates the fit itself (the quantity
-    # that extrapolates to deployment batch sizes)
-    pair_pred = {("k256fp", "1to4"): "~0.89 (S~15 s / P~357 s)",
-                 ("k512", "1to4"): "~0.94 (S~15 s / P~714 s)"}
-    for gk in sorted(pair_minofn):
-        era, pr = gk
-        plo, phi = pr.split("to")
-        mofn = pair_minofn[gk]
-        k256_line += (
-            f"\n\nPair-dimension validation — {era} era at the "
-            f"{plo}->{phi} core pair (same job, same corpus, same "
-            f"min-of-N bracketed protocol; the north rule reads 'N to "
-            f"4N executors' and fixes no N — this pair's per-core work "
-            f"is 2x the 2->8 pair's, i.e. closer to the "
-            f"parallel-dominated regime 1000-executor batch sizes "
-            f"live in, and BOTH its legs sit outside the "
-            f"mid-parallelism band the box's contention phases "
-            f"target): median **{_median(mofn)}** over {len(mofn)} "
-            f"min-of-N draw(s) "
-            f"[{', '.join(str(v) for v in sorted(mofn))}]. "
-            f"Amdahl-fit prediction for this pair from the 2->8 era's "
-            f"clean-stretch terms: {pair_pred.get(gk, 'n/a')} — "
-            f"agreement between the measured median and the fit, "
-            f"ACROSS pairs, is what validates the fit's deployment "
-            f"extrapolation; the 2->8 medians above stay reported "
-            f"unchanged."
-        )
-        los, his = pair_legs_lo.get(gk, []), pair_legs_hi.get(gk, [])
-        if los and his:
-            cap = round(min(los) / (4 * min(his)), 3)
-            k256_line += (
-                f" Pair capability (pooled-minimum estimator, same "
-                f"construction as the era lines): **{cap}** = "
-                f"{min(los)} s / (4 x {min(his)} s), from {len(los)} "
-                f"{plo}-core and {len(his)} {phi}-core samples."
-            )
-    return ("| invocation | 2-core s | 8-core s | 32-core s | eff 2→8 "
-            "| eff 8→32 | dedup eff 2→8 | window probe |\n"
-            "|---|---|---|---|---|---|---|---|\n"
-            + "\n".join(rows)
-            + k256_line
-            + f"\n\nMedian flagship 2→8 efficiency across invocations: "
-            f"**{med}** "
-            f"(n={len(effs)}; identical code+input per family, "
-            "fresh JVM per leg — the spread is box noise, not variance "
-            "in the job). Dedup-family history spans three corpus/code "
-            "eras — efficiency draws compare only within an era: "
-            "(1) k=32 draws (0.779 / 0.488 / 0.524) were capped by a "
-            "profiled Amdahl ceiling — ~99 s of parallel pair-join work "
-            "+ ~5 s fixed stage latency + a ~10 s CC tail that did NOT "
-            "scale (10 s at 2 AND 8 cores, pure stage barriers); "
-            "(2) r4 quadrupled the corpus to k=128 and removed the "
-            "serial terms at the root — off-heap token cache, "
-            "vectorized driver union-find, driver-side survivor counts "
-            "(see the family section above): all four post-fix k=128 "
-            "draws over the 0.8 bar — **0.808 / 0.807 / 0.847 / "
-            "0.862**, median 0.828 — identical survivor counts "
-            "throughout; (3) the jaccard prefix-table cache then "
-            "HALVED the family's parallel work on identical "
-            "input/survivors (a 2x throughput win), re-exposing the "
-            "fixed term — the one post-cache k=128 draw measured "
-            "0.713 against a two-leg Amdahl fit ceiling of ~0.71 — so "
-            "the corpus doubled to k=256 to restore the "
-            "parallel-dominated regime that 1000-executor batch sizes "
-            "live in. k=256 era evidence status: the r4 draws were "
-            "**0.939** in a clean window (r4 #7), then 0.769 / 0.618 / "
-            "0.736 / 0.743 inside a sustained degraded window "
-            "(post-03:00 UTC on the final r4 day) in which the 8-core "
-            "legs of BOTH families slowed 20-30% on identical code, "
-            "input, and survivor counts (flagship 82-86 s vs 69-76 s "
-            "across eleven earlier draws; dedup 94-106 s vs 80.9 s) "
-            "while 2-core and 32-core legs stayed in range — the "
-            "co-degradation of an UNCHANGED flagship pins it on the "
-            "box, not the code. r5 made the cause MEASURED rather than "
-            "inferred: this guest VM's /proc/stat steal time, read "
-            "around every steady leg, is the recorded per-draw health "
-            "bit (an interleaved same-code calibration read 82.0 s at "
-            "0.046% steal vs 104-129 s at 0.7-1.8% on the same 8-core "
-            "dedup leg; threshold "
-            f"{STEAL_DEGRADED_PCT}% of all-vCPU time — tightened from "
-            "the initial 0.25% after a 97.4 s dedup 8-core leg at "
-            "0.146% steal landed mid-band: the dedup family degrades "
-            "inside the 0.1-0.25% band while the flagship tolerates it "
-            "— its 74.9 s in-envelope leg read 0.150% — so the bit is "
-            "calibrated on the more steal-sensitive family; steal hits "
-            "barrier-heavy JVM stages ~10x harder than its raw cycle "
-            "share; later campaign legs showed the mid-band is "
-            "one-directional evidence — 72-76 s legs at 0.118-0.258% "
-            "steal prove a mid-band reading does not IMPLY degradation, "
-            "so the gate is conservative: it discards some good legs "
-            "and admits no bad ones). "
-            "Per this file's own protocol the era's >=0.8 claim is "
-            "gated on a median of >=3 CLEAN-WINDOW draws — degraded-"
-            "window draws are reported for transparency but do not "
-            "count toward the era median. r5 dedup-only draws are "
-            "BRACKETED (8-core, 2-core, 8-core legs — scripts/"
-            "dedup_scaling_draw.py): the two 8-core legs' spread, "
-            "shown per row, measures whether the box stayed stable "
-            "across the draw, making each draw self-validating instead "
-            "of a point sample; efficiency uses their mean. The SAME "
-            "survivor count per draw is asserted in every leg. "
-            "WHAT THE r5 CAMPAIGN FOUND (steal-gated attempts, table "
-            "rows above): the box never delivered a fully-clean window "
-            "— every completed draw had one leg over the steal bar — "
-            "but the instrumented draws exposed two facts the r4 "
-            "evidence could not. (a) The 2-core leg's steady time is "
-            "monotone in its measured steal — 231.6 s at 0.067%, "
-            "246.7 s at 0.116%, 272.7 s at 0.461% — and the "
-            "pre-instrumentation r4 #7 draw behind the era's lone "
-            "'clean' 0.939 ran its 2-core leg at 304.0 s steady "
-            "AGAINST a 285.2 s cold (steady > cold is an internal "
-            "contention flag), i.e. the 0.939 almost certainly carries "
-            "2-core-leg inflation and the era's honest central estimate "
-            "from the best-instrumented draw (campaign attempt 8: "
-            "231.6 s clean 2-leg at 0.067%, bracketed 8-core legs "
-            "79.4 / 72.2 s) is eff ~0.73-0.80. (b) Fitting T = S + P/c "
-            "to that draw gives S ~24 s fixed vs P ~415 s parallel — "
-            "S had GROWN from the ~16.6 s the r4 fixes left behind. "
-            "Root cause, found in r5: the k=256 corpus merges 575,405 "
-            "docs, so its deduped edge set exceeds the 500k-edge bound "
-            "on the driver union-find fast path by its spanning forest "
-            "alone — every k=256 draw silently ran the distributed "
-            "star path, re-paying the ~10 s non-scaling stage tail the "
-            "r4 fast path had removed. The bound was raised to 2M "
-            "edges (~32 MB of Arrow traffic, still driver-bounded; "
-            "operators/cluster.py) and the k=256-FASTPATH era draws "
-            "above measure the same corpus on the restored fast path — "
-            "the Amdahl fit predicts eff ~0.82 at 2->8 once the ~8-10 s "
-            "tail is gone, and the per-era clean-window median lines "
-            "under the table carry the verdict. At deployment scale "
-            "the same analysis says the criterion strengthens with "
-            "batch size: S is per-JOB stage latency, so 1000-executor "
-            "batches (P thousands of times larger) sit far inside the "
-            "parallel-dominated regime either way. "
-            "FINAL r5 PROTOCOL REFINEMENT (min-of-N legs): the k256fp "
-            "campaign exposed that the box's mid-parallelism contention "
-            "arrives in SUSTAINED multi-minute phases — identical "
-            "8-core legs read 66.9-91.2 s across draws while 2-core "
-            "legs held 223-237 s — and that neither covariate tracks "
-            "those phases reliably in either direction (a 91.2 s leg "
-            "passed at 0.078% steal; a 66.9 s leg — the fastest ever "
-            "recorded — was aborted on a 0.95 s probe; a 68.9 s leg "
-            "read 0.655% steal). So the robustness moved from the gate "
-            "into the estimator: each leg was ALREADY a min-of-N runs "
-            "(_steady — contention can only inflate a run, never "
-            "deflate it, so the minimum converges on the box's "
-            "uncontended capability), and the final draws simply widen "
-            "N (first 8-core leg min-of-4, 2-core min-of-3, bracket "
-            "8-core min-of-2) so at least one run lands outside a mush "
-            "phase; the full per-run arrays are recorded per draw "
-            "(leg_runs) so the minimum is auditable, the estimator is "
-            "identical on both sides of the ratio, and the steal gate "
-            "still aborts (first leg) and flags (any leg) genuine "
-            "steal storms. The one genuinely clean stretch the final "
-            "campaign caught (draw of 2026-08-18T23:54Z: 2-core leg "
-            "193.6 s at 0.009% steal, 8-core run 59.7 s at 0.025%) "
-            "pins the fastpath era's uncontended Amdahl terms at "
-            "S ~15 s fixed / P ~357 s parallel — S back at the level "
-            "the r4 fixes left behind, confirming the union-find bound "
-            "raise removed the star-path tail — and scripts/"
-            "profile_dedup_leg.py measured the k=256 pair graph at "
-            "exactly 575,405 edges (n_docs - survivors: the amplified "
-            "corpus's match graph is a spanning forest), which is what "
-            "makes the k=512 era's ~1.15M edges a CHECKED 2x margin "
-            "inside the 2M driver-UF bound rather than a new silent "
-            "fallback. At S=15/P=357 the fit predicts eff 0.81 at "
-            "k=256 (matching the pooled-minimum capability line) and "
-            "0.89 at k=512, where one mush-inflated 8-core leg costs "
-            "the draw ~0.05 of efficiency instead of ~0.08. "
-            "FINAL r5 PAIR-DIMENSION DRAWS (1->4): the north rule "
-            "reads 'throughput scaling efficiency >=0.8 from N to 4N "
-            "executors' and fixes no N; all prior draws measured the "
-            "2->8 pair. r5 adds draws of the IDENTICAL job, corpus, "
-            "and min-of-N bracketed protocol at the 1->4 pair — run "
-            "4a,1,4b via LLS_DRAW_CORES — for two reasons, both "
-            "already established by the 2->8 campaign's own data. "
-            "(a) The fitted Amdahl terms make a per-pair PREDICTION "
-            "(at S~15/P~357 the fit says 0.81 at 2->8 and ~0.89 at "
-            "1->4; at k=512, ~0.94 at 1->4): a second measured pair "
-            "landing on its prediction validates the fit itself, and "
-            "the fit — not any single testbed ratio — is what "
-            "extrapolates to 1000-executor deployment, where batch "
-            "sizes put P thousands of times above S and every (N, 4N) "
-            "pair converges toward 1.0. (b) The box's documented "
-            "contention mode specifically inflates mid-parallelism "
-            "(8-core) legs 20-30% while 1/2-core legs hold steady "
-            "through the same phases, so the 1->4 pair measures the "
-            "job's scaling with the box's noise mode largely out of "
-            "frame — it is the pair a shared-tenancy testbed can "
-            "actually measure to the protocol's precision. Neither "
-            "reason retires the 2->8 history: those medians stay "
-            "reported unchanged above, and the pair-dimension lines "
-            "under the table carry both measurements side by side. "
-            "1->4 CAMPAIGN OUTCOME (k256fp, 3 completed draws: 0.821 / "
-            "0.809 / 0.746, median 0.809): the first protocol-compliant "
-            "(>=3-draw) median over the 0.8 bar in the k=256-fastpath "
-            "era. The fit cross-check splits cleanly by leg: draw 31's "
-            "1-core leg ran 376.2 s at 0.036% steal — within 1.2% of "
-            "the fit's T1 = S + P = 372 s prediction, so the "
-            "clean-stretch Amdahl terms are validated on the serial "
-            "leg by an independent draw at a DIFFERENT core count — "
-            "while the 4-core legs floored at 119.6 s across all "
-            "three draws vs the fit's T4 = 104 s, i.e. the residual "
-            "gap to the 0.89 per-pair prediction lives entirely in "
-            "the 4N legs. Two non-exclusive readings, both "
-            "deployment-benign: the box's mid-parallelism contention "
-            "band extends down to 4-core legs (every draw was "
-            "steal-flagged on exactly one leg), and/or the corpus "
-            "build + shuffle overlap gives the parallel section a "
-            "mildly sub-linear region between 1 and 4 local cores — "
-            "either way the measured T1 pins P + S at the fitted "
-            "value, and at deployment batch sizes (P thousands of "
-            "times larger) both readings converge to eff -> 1.0 as "
-            "the extrapolation already states.")
-
-
-def _kernel_rate() -> int:
-    """Measure the DP-kernel rate inline (keeps BASELINE.md numbers from
-    going stale against the code)."""
-    import numpy as np  # noqa: F401  (parity with run_kernel imports)
-    import pandas as pd
-    from liblevenshtein_rust_spark.functions.distance import batch_distance
-    n_pairs = 200_000
-    base = ["the deployment failed with a timeout in the service",
-            "please check the logs for errors and retry the request",
-            "merge the feature branch into main after review"]
-    a = pd.Series([base[i % 3] for i in range(n_pairs)])
-    b = pd.Series([s[:7] + s[8:] for s in a])
-    batch_distance(a, b, 2, "standard")
-    t0 = time.time()
-    batch_distance(a, b, 2, "standard")
-    return round(n_pairs / (time.time() - t0))
-
-
-def _round_history() -> str:
-    """Markdown rows for every BENCH_r*.json the driver has recorded, so
-    the round-over-round delta is mechanical."""
-    import glob
-    rows = []
-    for path in sorted(glob.glob("BENCH_r*.json")):
-        try:
-            with open(path) as f:
-                d = json.load(f)
-            d = d.get("parsed", d)  # driver wraps the JSON line in 'parsed'
-            cold = d.get("cold_value")
-            # r1 predates the steady/cold methodology AND ran a smaller
-            # query set — its total sits in the steady column but is not
-            # comparable to later rounds on either axis; r2/r3 used
-            # min-of-2; r4+ median-of-isolated-draws
-            if path.endswith("_r01.json"):
-                meth = "single cold-ish runs — NON-COMPARABLE"
-            elif path.endswith(("_r02.json", "_r03.json")):
-                meth = "min-of-2 steady"
-            else:
-                meth = d.get("steady_method", "median-of-isolated-draws")
-            rows.append(f"| {os.path.basename(path)} | {d.get('value')} "
-                        f"| {cold if cold is not None else 'n/a'} "
-                        f"| {d.get('sf')} | {len(d.get('queries', {}))} "
-                        f"| {meth} |")
-        except Exception:
-            continue
-    note = (
-        "**Methodology (round 4 onward)**: every headline query runs one\n"
-        "cold pass, then >= 3 isolated steady draws (`clearCache()+gc`\n"
-        "before each); `value`/`queries` are the per-query MEDIAN of the\n"
-        "steady draws, with up to 2 extra draws whenever the median\n"
-        "exceeds 1.3x cold (the mid-leg box-degradation guard). Draw\n"
-        "counts ship in the JSON (`draws`). Rounds 2-3 used min-of-2\n"
-        "steady, which let single-draw box noise masquerade as\n"
-        "regressions (r2 minhash 9.07s, r3 jaccard-family drift — see\n"
-        "Anomalies). Round-1 numbers were single cold-ish runs in a\n"
-        "shared session, where caches pinned by earlier queries inflated\n"
-        "later first-runs 3-5x. On a real cluster each pipeline is its\n"
-        "own spark-submit application on long-lived executors, so\n"
-        "isolated-steady predicts 100-TB behavior; cold is reported\n"
-        "alongside for transparency.\n\n")
-    if not rows:
-        return note + "(no recorded rounds yet)"
-    return (note
-            + "| round file | steady total (s) | cold total (s) | sf "
-              "| #queries | methodology |\n"
-            + "|---|---|---|---|---|---|\n" + "\n".join(rows))
-
-
-def _headline_redraws() -> str:
-    """Markdown for targeted clean-window headline redraws (the
-    LLS_BENCH_ONLY subset runs, appended to BENCH/headline_redraws.jsonl
-    by the operator): per-query steady medians with their per-run draws,
-    per-query steal, and the invocation's window probe — the reconciling
-    evidence for rows a degraded-window driver bench inflated."""
-    try:
-        with open("BENCH/headline_redraws.jsonl") as f:
-            recs = [json.loads(ln) for ln in f if ln.strip()]
-    except FileNotFoundError:
-        return ""
-    if not recs:
-        return ""
-    parts = ["\n## Targeted headline redraws (clean-window subset runs)\n"
-             "\nThese subset runs are the reconciling evidence for the four"
-             " rows the r4 driver bench recorded inside its degraded window"
-             " (`fuzzy_pairs_turns_d1` 5.73s, `fuzzy_pairs_turns_d2` 5.13s,"
-             " `substring_fuzzy_d1` 7.78s, `linkage_f1` 5.23s, plus"
-             " `substring_shared_index` 9.62s) on unchanged code and plans:"
-             " each redraw below uses the identical per-query methodology"
-             " (median of isolated draws, fresh JVM each) and records its"
-             " own window probe + per-query steal, so a reader can see the"
-             " conditions the numbers were taken under. Values at or below"
-             " the r3 / builder clean-window medians (3.0/3.0/5.6/2.35/8.3s)"
-             " confirm the r4 rows were box weather, not regression.\n"]
-    for r in recs:
-        parts.append(
-            f"\n{r.get('label', 'redraw')} — ts {r.get('ts', '?')}, "
-            f"window probe {r.get('window_probe_sec')}s "
-            f"(clean ref {r.get('window_probe_clean_ref')}), "
-            f"sf {r.get('sf')}:\n\n"
-            "| query | steady s (median) | cold s | draws | steal % |\n"
-            "|---|---|---|---|---|")
-        steals = r.get("query_steal_pct", {})
-        for q, v in (r.get("queries") or {}).items():
-            parts.append(
-                f"| {q} | {v} | {r.get('cold_queries', {}).get(q, '—')} "
-                f"| {r.get('draws', {}).get(q, '—')} "
-                f"| {steals.get(q, '—')} |")
-    return "\n".join(parts) + "\n"
-
-
-def _write_baseline_md(out: dict) -> None:
-    os.makedirs("BENCH", exist_ok=True)
-    r2, r8, r32 = out["legs"]["2"], out["legs"]["8"], out["legs"]["32"]
-    kernel = _kernel_rate()
-    history = _round_history()
-    dedup_md = ""
-    if "dedup_legs" in out:
-        d2, d8, d32 = (out["dedup_legs"]["2"], out["dedup_legs"]["8"],
-                       out["dedup_legs"]["32"])
-        dedup_md = f"""
-## Second workload family: jaccard -> connected-components dedup
-
-Token-set Jaccard pairs (PPJoin prefix/size-filtered, threshold 0.9) ->
-large/small-star CC -> one canonical survivor per cluster, over a
-{d8['docs']}-doc amplified corpus (variants salted so amplification
-cannot create k-cliques; one planted near-dup pair per long doc). A
-different physical shape from the flagship fuzzy join — explode-join
-hash aggregate + iterative CC instead of key-explode + Arrow verify —
-so the efficiency claim is not single-workload.
-
-| parallelism | wall sec (steady) | cold sec | docs/sec | survivors |
-|---|---|---|---|---|
-| local[2]  | {d2['seconds']} | {d2['cold_seconds']} | {d2['docs_per_sec']} | {d2['survivors']} |
-| local[8]  | {d8['seconds']} | {d8['cold_seconds']} | {d8['docs_per_sec']} | {d8['survivors']} |
-| local[32] | {d32['seconds']} | {d32['cold_seconds']} | {d32['docs_per_sec']} | {d32['survivors']} |
-
-- **dedup N -> 4N scaling efficiency (2 -> 8 cores):
-  {out['dedup_eff_2_to_8']}**; 8 -> 32: {out['dedup_eff_8_to_32']}
-  (same single-socket DRAM caveat as the flagship's second quadrupling).
-- History of this family: the first published run (40k docs, v-only
-  salting) measured 0.49 from corpus artifacts (superlinear pair growth
-  — fixed in r3 with doc+pair-unique salting). The k=32 r3/r4 draws
-  (0.779 / 0.488 / 0.524) were then profiled in r4 to an Amdahl
-  ceiling: ~99 s parallel pair-join work + ~5 s fixed stage-barrier
-  latency, plus a CC + survivor tail of ~10 s at 2 AND at 8 cores —
-  zero scaling, pure per-stage scheduling latency. Four fixes landed in
-  r4, each driven by a phase-level profile of one leg at 2 AND 8 cores
-  (pairs+checksum / component labeling / survivor join timed
-  separately):
-  (1) the corpus quadrupled to k=128 so the parallel fraction dominates
-  — the regime a 1000-executor deployment's batch sizes live in;
-  (2) the exploded-token cache moved off-heap
-  (token_jaccard_pairs(persist_level="DISK_ONLY") onto spark.local.dir
-  — tmpfs here, executor NVMe on a cluster): the job's largest
-  allocation stopped competing with execution memory, and the 8-core
-  leg dropped 91.7 -> 72.2 s in a back-to-back A/B on identical input;
-  (3) the driver union-find was vectorized (factorize + numpy min-label
-  propagation with pointer jumping, cluster._uf_label_pandas) — the
-  Python dict loop cost 2-6 s at 288k edges with GC-sensitive
-  variance, the numpy path ~100 ms flat;
-  (4) the survivor computation gained a driver fast path
-  (cluster.component_survivor_counts): the full-assignment upload was
-  a 576k-row LocalTableScan feeding four shuffle stages (sizes
-  aggregate, survivor filter-join, singleton anti-join) profiled at
-  ~10 s at 2 AND at 8 cores — zero scaling; now sizes + survivor
-  selection happen in pandas on the already-collected edge list and
-  only the bounded survivor table ships back. The distributed paths
-  remain the scale paths; both are pinned against the same oracles
-  (tests/test_cluster.py).
-  Phase profile after the fixes predicted 2-core ~213 s / 8-core
-  ~64 s (eff ~0.83); the measured redraw landed 210.6 / 65.1 =
-  **0.808**, and survivor counts are identical in every draw. The
-  8 -> 32 number remains scheduling-bound on this single socket;
-  2 -> 8 is the representative N -> 4N stand-in.
-- k=128 draw history (r4): 0.718 / 0.525 / 0.633 under the pre-fix
-  code (8-core leg swinging 67.8-105.6 s with box contention absorbed
-  by the on-heap token cache), then **0.808 / 0.807 / 0.847 / 0.862**
-  across the four post-fix draws (one isolated per-leg redraw + three
-  full --scaling invocations) — every post-fix draw over the 0.8 bar,
-  median 0.828, identical survivor counts throughout. The flagship
-  family's 8-core legs in the same invocations were stable throughout
-  — the pre-fix instability was specific to this family's memory
-  profile, which fix (2) addressed at the root.
-- k=256 era (r4, current): the jaccard prefix-table cache halved the
-  family's parallel work on identical input/survivors (2-core leg
-  240 -> ~124 s at k=128) — a throughput win that re-exposed the fixed
-  term (two-leg Amdahl fit F ~16.6 s / P ~214 s -> ceiling ~0.71;
-  the one post-cache k=128 draw measured 0.713, matching the fit), so
-  the corpus doubled to k=256, restoring the parallel-dominated
-  regime. r4 k=256 draws: **0.939** (2 -> 8) in a clean window,
-  then 0.769 / 0.618 / 0.736 / 0.743 inside a sustained degraded
-  window (post-03:00 UTC on the final r4 day) in which the 8-core
-  legs of BOTH families slowed 20-30% on identical code, input, and
-  survivor counts (flagship 82-86 s vs 69-76 s across eleven earlier
-  draws; dedup 94-106 s vs 80.9 s) while the 2-core and 32-core legs
-  stayed in their normal ranges — the co-degradation of an UNCHANGED
-  flagship job pins the cause on the box, not the code. Survivor
-  counts are identical across all legs and draws. Efficiency draws
-  compare only within an era, and per the protocol above an era's
-  >=0.8 claim requires a median of >=3 CLEAN-WINDOW draws: the k=32
-  and post-fix k=128 eras meet it outright; the k=256 era's status
-  is whatever the clean-window rows of the invocation history table
-  above currently show (degraded-window rows — flagged by the
-  per-draw window probe — are reported for transparency and excluded
-  from the era median).
-"""
-    with open("BENCH/BASELINE.md", "w") as f:
-        f.write(f"""# BENCH baseline — scaling evidence (north rule)
-
-Flagship linkage job (canonicalize -> distinct-term dictionary ->
-segment-blocked fuzzy self-join at d<=1 -> exact threshold-verify) over a
-{r8['turns']}-turn synthetic transcript corpus (realistic near-dup mix:
-distinct rotated utterances + planted distance-1 pairs), identical input
-at three parallelism levels, each leg CPU-pinned (sched_setaffinity) to
-exactly N cores — an unpinned local[N] JVM runs GC/netty/py4j background
-threads on extra cores, overstating the small leg like no real N-core
-executor can. Steady-state wall time (one warmup run per
-JVM — on a real cluster codegen/JIT are paid once per long-lived
-executor); determinism confirmed by identical pair counts at every level.
-
-| parallelism | wall sec (steady) | cold sec | turns/sec | pairs found |
-|---|---|---|---|---|
-| local[2]  | {r2['seconds']} | {r2['cold_seconds']} | {r2['turns_per_sec']} | {r2['pairs']} |
-| local[8]  | {r8['seconds']} | {r8['cold_seconds']} | {r8['turns_per_sec']} | {r8['pairs']} |
-| local[32] | {r32['seconds']} | {r32['cold_seconds']} | {r32['turns_per_sec']} | {r32['pairs']} |
-
-- **N -> 4N scaling efficiency (2 -> 8 cores): {out['eff_2_to_8']}**
-  (north-rule target >= 0.8; see the invocation-history section — the
-  single-draw ratio moves with box noise, the median is the evidence)
-- 8 -> 32 cores on the same box: {out['eff_8_to_32']} — the second
-  quadrupling shares ONE socket's DRAM bandwidth and one JVM heap, which
-  a real 4x-executor scale-out does not (each node brings its own memory
-  bus and shuffle disks). The 2 -> 8 pair is the faithful stand-in for
-  the N -> 4N executor criterion; the 8 -> 32 number is reported for
-  transparency.
-
-Context vs the reference baseline (BASELINE.md): the reference does
-~60-75k d<=2 fuzzy queries/sec/core single-node; this engine sustains
-{r32['turns_per_sec']} turns/sec end-to-end (blocking + candidate
-generation + exact verification + dedupe) at local[32], and the
-vectorized kernel alone verifies **{kernel:,} candidate pairs/sec/core**
-(measured inline by this run; `python bench.py --kernel` reproduces it —
-note the standard-variant verify path in production uses JVM codegen
-`levenshtein(a,b,n)`, which is faster still). The distributed job is
-shuffle-bound, not CPU-bound, by design.
-{dedup_md}
-## Flagship invocation history (every --scaling run, SCALING_HISTORY.jsonl)
-
-{_history_table()}
-{_headline_redraws()}
-## Anomalies investigated
-
-- **r3 headline drift (jaccard 1.33x / simhash 1.55x / substring 1.28x /
-  near-dup-dedup 1.14x vs r2)** — investigated in r4 with the same rigor
-  the r2 minhash anomaly got: THREE isolated full-bench invocations
-  (fresh JVM each), each itself reporting median-of->=3 isolated draws
-  per query (the r4 methodology). Cross-invocation medians at sf0.1:
-
-  | query | inv1 | inv2 | inv3 | inv4* | inv5* | r3 | r2 |
-  |---|---|---|---|---|---|---|---|
-  | jaccard_near_dup | 7.46 | 11.36 | 7.08 | 4.56 | 3.25 | 9.10 | 6.82 |
-  | simhash_near_dup | 2.66 | 3.50 | 2.88 | 3.15 | 3.59 | 3.45 | 2.22 |
-  | minhash_near_dup | 2.49 | 4.28 | 2.47 | 2.86 | 3.36 | 3.01 | 9.07 |
-  | substring_fuzzy_d1 | 7.19 | 7.03 | 5.40 | 7.89 | 6.77 | 5.64 | 4.41 |
-  | near_dup_dedup_docs | 10.95 | 12.86 | 11.56 | 3.89 | 4.38 | 11.51 | 10.06 |
-  | term_clusters_d1 | 6.07 | 16.55 | 6.25 | 4.09 | 4.42 | 5.92 | 5.08 |
-
-  *inv4/inv5 ran AFTER two code changes landed mid-round, so they are
-  not pure redraws of the same code: the PPJoin prefix-table cache
-  (stops double-planning the exploded-token subtree shared by the pair
-  join's two sides) cut jaccard_near_dup to 4.56 / 3.25 and its
-  consumer near_dup_dedup_docs to 3.89 / 4.38 across the two post-fix
-  invocations, on identical rows (245,973 pairs / 2,578 survivors
-  asserted equal across draws) — the improvement reproduces. Also,
-  substring_fuzzy_d1's workload grew to the shared-index query set
-  (8,023 result rows; its twin substring_shared_index covers both
-  substring workloads off ONE persisted index build).
-
-  Verdict: jaccard/simhash/minhash recover to (or below) their r2 levels
-  — the r3 regressions were single-draw box noise, exactly the r2
-  minhash failure mode, and the plans are unchanged (pinned by
-  tests/test_plan_guards.py) — and the two genuinely-above-r2 queries
-  (jaccard, near_dup_dedup) were then FIXED, not explained away: the
-  prefix-table cache leaves both well under their r2 levels in both
-  post-fix invocations (4.56 / 3.25 vs 6.82; 3.89 / 4.38 vs 10.06).
-  substring_fuzzy_d1 and term_clusters_d1 sit
-  within the box's observed noise envelope; intra-JVM draw spread
-  reaches 1.7x with MONOTONE degradation across consecutive isolated
-  draws (substring draws 5.26/5.65/8.74/9.17 within one invocation vs
-  a 5.40 median in another; term_clusters 6.07 vs 16.55 between
-  invocations of identical code+input) — a GC/CPU-contention signature,
-  not a query property. The median-of-isolated-draws methodology now in
-  place is the mitigation; candidate counts are identical across all
-  draws (rows asserted per run).
-
-- **minhash_near_dup r2 steady 9.07s (vs 2.98s cold)**: not reproducible
-  in r3 — 6 consecutive isolated runs under the identical
-  clearCache+gc protocol measured 2.10-2.71s steady (3.65s cold), and a
-  full bench pass in sequence position measured 2.20s steady. The r2
-  number is attributed to transient box contention during the driver's
-  shared round (the driver runs correctness + bench back to back), not
-  to the query: the 32-column codegen min() aggregate plan is unchanged.
-
-## Round-over-round headline history (driver-recorded)
-
-{history}
-""")
 
 
 if __name__ == "__main__":
@@ -1536,11 +829,10 @@ if __name__ == "__main__":
         run_scale_job(sys.argv[sys.argv.index("--scale-job") + 1])
     elif "--scaling" in sys.argv:
         run_scaling()
-    elif "--rewrite-baseline" in sys.argv:
-        # regenerate BENCH/BASELINE.md from the last recorded --scaling
-        # output (narrative/template edits without a 35-min rerun)
-        with open("BENCH/last_scaling.json") as f:
-            _write_baseline_md(json.load(f))
-        print("# BENCH/BASELINE.md regenerated", file=sys.stderr)
-    else:
+    elif len(sys.argv) == 1:
         run_default()
+    else:
+        # a mistyped mode must not fall through to the full headline run
+        print(f"unknown mode: {' '.join(sys.argv[1:])}\n{__doc__}",
+              file=sys.stderr)
+        sys.exit(2)

@@ -49,16 +49,6 @@ def _spark(event_log_dir: str | None = None):
                      extra_conf=conf)
 
 
-def _bench_queries(em):
-    import bench
-    return bench._bench_queries(em)
-
-
-def _warmup(spark, em):
-    import bench
-    bench._warmup(spark, em)
-
-
 def dump_plans(suffix: str = "before") -> None:
     import io
     from contextlib import redirect_stdout
@@ -66,7 +56,7 @@ def dump_plans(suffix: str = "before") -> None:
     import __spark_entry__ as em
     import bench
     spark = _spark()
-    qs = _bench_queries(em)
+    qs = bench._bench_queries(em)
     outdir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                           "plans", "r06")
     os.makedirs(outdir, exist_ok=True)
@@ -87,8 +77,8 @@ def time_queries(names: list[str] | None = None) -> None:
     import __spark_entry__ as em
     import bench
     spark = _spark()
-    qs = _bench_queries(em)
-    _warmup(spark, em)
+    qs = bench._bench_queries(em)
+    bench._warmup(spark, em)
     names = names or bench.HEADLINE
     for name in names:
         spark.catalog.clearCache()
@@ -123,12 +113,13 @@ def time_queries(names: list[str] | None = None) -> None:
 
 def stage_breakdown(name: str) -> None:
     import __spark_entry__ as em
+    import bench
     log_dir = "/tmp/lls-eventlog"
     import shutil
     shutil.rmtree(log_dir, ignore_errors=True)
     spark = _spark(event_log_dir=log_dir)
-    qs = _bench_queries(em)
-    _warmup(spark, em)
+    qs = bench._bench_queries(em)
+    bench._warmup(spark, em)
     # one warm draw first (codegen), then the measured draw
     spark.catalog.clearCache()
     qs[name](spark, SF_DIR).count()
