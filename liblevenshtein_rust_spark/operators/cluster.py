@@ -17,6 +17,10 @@ are arbitrary orderable strings (we use md5 term ids — deterministic and
 collision-safe); min is lexicographic. Every round is localCheckpoint-ed
 (cluster deployments write checkpoint tables instead — see
 plans/pipeline.py) to truncate the iterative lineage.
+
+Small graphs skip the rounds: one bounded collect of at most
+``small_graph_threshold + 1`` edge rows labels them on the driver when
+they fit the bound, and falls back to the rounds when they do not.
 """
 
 from __future__ import annotations
@@ -57,9 +61,8 @@ def _uf_label_pandas(pdf, node_col: str):
     vectorized: factorize node ids to dense codes, then min-label
     propagation with pointer jumping (numpy scatter-min + label[label])
     until fixpoint. Converges in O(log d) sweeps for component diameter
-    d (planted near-dup graphs are almost all d <= 2, so 1-2 sweeps);
-    the Python-loop dict union-find this replaces cost 2-6 s at 288k
-    edges with GC-sensitive variance — this runs in ~100 ms flat.
+    d (planted near-dup graphs are almost all d <= 2, so 1-2 sweeps).
+    Duplicate rows and both orientations of a pair are harmless.
 
     Returns a pandas DataFrame (node_col, entity_id = min member id);
     min is pandas/numpy ordering, which matches Spark's F.min for the
@@ -87,45 +90,99 @@ def _uf_label_pandas(pdf, node_col: str):
     return out[[node_col, "entity_id"]]
 
 
-def _driver_union_find(edges: DataFrame, node_col: str) -> DataFrame:
-    """Small-graph fast path: collect the (bounded) edge list and label
-    components on the driver (see _uf_label_pandas), returning the same
-    (node_col, entity_id = min member) assignment the iterative path
-    produces for every edge-endpoint node.
-
-    Rationale: each distributed star round costs several shuffle-stage
-    barriers of FIXED latency — on the profiled bench corpus the CC tail
-    took ~10 s at 2 AND at 8 cores (pure scheduling, zero scaling),
-    which is exactly the serial Amdahl term the north rule punishes. A
-    real cluster deployment makes the same cut: below a bounded edge
-    count the graph fits comfortably on the driver and vectorized
-    union-find beats minutes of stage barriers. The distributed path
-    remains the scale path and is pinned by the same tests
-    (small_graph_threshold=0)."""
-    spark = edges.sparkSession
-    # Arrow both ways: toPandas() / createDataFrame(pandas) move the
-    # bounded edge list as columnar batches — the Row-pickle path costs
-    # ~4x more driver-serial time and grows with the edge count (measured:
-    # ~13 s tail at 288k edges via pickle vs seconds via Arrow)
-    out = _uf_label_pandas(edges.toPandas(), node_col)
-    schema = StructType([
-        StructField(node_col, edges.schema[0].dataType),
-        StructField("entity_id", edges.schema[0].dataType),
-    ])
-    return spark.createDataFrame(out, schema)
-
-
 def _edge_checksum(df: DataFrame):
     """ONE driver action returning (order-insensitive xxhash64 sum, count)
-    over an edge set. Used both as the convergence checksum inside
-    connected_components and as the small-graph cardinality probe in
-    component_survivor_counts — the same row serves both, so the hot
-    dedup path pays a single action where it used to pay checksum +
-    count. The decimal(38,0) sum cannot overflow under ANSI mode."""
+    over a deduped edge set: the star rounds' convergence test. The
+    small-graph path never computes it. The decimal(38,0) sum cannot
+    overflow under ANSI mode."""
     return df.select(
         F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
         F.count(F.lit(1)).alias("c"),
     ).first()
+
+
+def _lazy_checkpoint(df: DataFrame) -> DataFrame:
+    """Default ``checkpoint``: a LAZY localCheckpoint, materialized by the
+    first action that reads it (the bounded edge collect, or a
+    convergence checksum), so no round pays a job of its own for it."""
+    return df.localCheckpoint(eager=False)
+
+
+def _edges(pairs: DataFrame, src: str, dst: str, checkpoint) -> DataFrame:
+    """(u, v) edge rows of ``pairs`` through ``checkpoint``. Self-loops
+    and rows with a NULL endpoint are dropped (``u != v`` is not true for
+    either); duplicates are kept, since driver labeling ignores them."""
+    return checkpoint(pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+                      .where(F.col("u") != F.col("v")))
+
+
+def _attach_singletons(out: DataFrame, nodes: DataFrame | None,
+                       known: DataFrame, node_col: str, value) -> DataFrame:
+    """``out`` plus one (node_col, ``value``) row for every distinct node
+    of ``nodes`` that is missing from ``known`` (a node_col table)."""
+    if nodes is None:
+        return out
+    return out.unionByName(
+        nodes.select(F.col(node_col)).distinct()
+        .join(known, node_col, "left_anti")
+        .select(F.col(node_col), value))
+
+
+def _star_labels(edges: DataFrame, node_col: str, max_iterations: int,
+                 checkpoint) -> DataFrame:
+    """(node_col, entity_id) for every endpoint of ``edges`` by iterated
+    large-star / small-star rounds over the deduped edge set, which is
+    checkpointed so that the first checksum materializes it once."""
+    edges = checkpoint(edges.dropDuplicates(["u", "v"]))
+    # Check convergence every SECOND round: the star maps decrease a
+    # monotone potential until fixpoint (Kiveris et al. SoCC'14), so no
+    # 2-cycles exist and checksum equality two rounds apart implies the
+    # fixpoint was reached. Cost: at most one redundant round of compute
+    # on already-converged (small) state; saving: half the checksum scans
+    # — and with lazy checkpoints, ONE driver action per two rounds. The
+    # output stays deterministic either way (the final groupBy-min below
+    # settles labels even mid-convergence).
+    h_old = _edge_checksum(edges)
+    for it in range(max_iterations):
+        edges = checkpoint(_small_star(_large_star(edges)))
+        if (it + 1) % 2 == 0 or it == max_iterations - 1:
+            h_new = _edge_checksum(edges)
+            if h_old == h_new:
+                break
+            h_old = h_new
+    # after convergence every edge points node -> component root; roots
+    # map to themselves
+    assign = edges.select(F.col("u").alias(node_col), F.col("v").alias("entity_id"))
+    assign = _attach_singletons(
+        assign, edges.select(F.col("v").alias(node_col)),
+        assign.select(node_col), node_col, F.col(node_col).alias("entity_id"))
+    # deterministic: min label wins even if a round budget stopped short of
+    # full convergence
+    return assign.groupBy(node_col).agg(F.min("entity_id").alias("entity_id"))
+
+
+def _components(pairs: DataFrame, src: str, dst: str, node_col: str,
+                max_iterations: int, checkpoint, small_graph_threshold: int):
+    """The labeling core: returns (edges, labels), where ``edges`` is the
+    checkpointed edge table and ``labels`` the (node_col, entity_id =
+    min member id) assignment of every edge endpoint.
+
+    One bounded Arrow collect, ``limit(small_graph_threshold + 1)`` of
+    the checkpointed edges, both decides the path and feeds it: at most
+    ``small_graph_threshold`` rows are the whole graph, labeled on the
+    driver (``labels`` is a pandas DataFrame); one row more falls back to
+    the star rounds on the same checkpointed table (``labels`` is a Spark
+    DataFrame), so the pair lineage runs once on either path. A threshold
+    of 0 skips the collect."""
+    checkpoint = checkpoint or _lazy_checkpoint
+    edges = _edges(pairs, src, dst, checkpoint)
+    if small_graph_threshold:
+        # Arrow both ways (toPandas here, createDataFrame(pandas) in the
+        # callers): the Row-pickle path costs ~4x the driver-serial time
+        pdf = edges.limit(small_graph_threshold + 1).toPandas()
+        if len(pdf) <= small_graph_threshold:
+            return edges, _uf_label_pandas(pdf, node_col)
+    return edges, _star_labels(edges, node_col, max_iterations, checkpoint)
 
 
 def connected_components(
@@ -138,107 +195,37 @@ def connected_components(
     max_iterations: int = 20,
     checkpoint=None,
     small_graph_threshold: int = 2_000_000,
-    initial_checksum=None,
 ) -> DataFrame:
     """Return (node_col, entity_id): each node labeled with the minimum
     node id of its component.
 
-    ``initial_checksum``: optional pre-computed ``_edge_checksum`` row for
-    the (already deduped) edge set — lets a caller that needed the edge
-    cardinality anyway (component_survivor_counts) hand its checksum row
-    over instead of this function paying a second driver action for the
-    same number.
-
     ``pairs`` are matched edges; ``nodes`` (optional) adds singleton nodes
     that appear in no pair. ``checkpoint`` is an optional callable
-    DataFrame -> DataFrame used to persist/truncate lineage between rounds
-    (defaults to a lazy localCheckpoint, which the entry checksum
-    materializes; the pipeline's clusters stage uses that default, and
-    gets its kill-resume durability from the stage checkpoint it writes).
+    DataFrame -> DataFrame used to persist/truncate lineage of the edge
+    table and between rounds (defaults to a lazy localCheckpoint; the
+    pipeline's clusters stage uses that default, and gets its kill-resume
+    durability from the stage checkpoint it writes).
 
-    ``small_graph_threshold``: when the deduped edge count (known for
-    free from the entry checksum) is at or below this bound, the
-    component labeling runs as driver-side union-find instead of
-    iterated star rounds — a bounded ~tens-of-MB collect that removes
-    the fixed per-round stage-barrier latency dominating small graphs
-    (see _driver_union_find). 0 disables the fast path. Both paths
-    produce identical assignments (tested); incremental_components'
-    touched-component subgraphs are typically small, so micro-batches
-    ride this path even at huge total state.
-
-    The default bound is 2M edges (~32 MB of (long,long) Arrow traffic;
-    the numpy factorize working set stays in the low hundreds of MB on
-    any real driver). History: the original 500k bound was crossed
-    SILENTLY when the r4 dedup scaling corpus doubled to k=256 — that
-    corpus merges 575,405 docs, so its spanning forest alone exceeds
-    500k edges — which flipped the benchmark onto the star path and
-    reintroduced the profiled ~10 s non-scaling stage tail the driver
-    path had been built to remove (measured era efficiency dropped from
-    the predicted ~0.83 to ~0.76; BENCH/BASELINE.md k=256 era notes).
+    ``small_graph_threshold`` bounds the driver path: at most this many
+    edge rows (self-loops and NULL endpoints dropped, duplicates counted)
+    are collected with Arrow and labeled by driver union-find instead of
+    star rounds, which removes the fixed per-round stage latency that
+    dominates small graphs. The collect reads ``threshold + 1`` rows at
+    most; if it gets that one row more, the star rounds run instead. 0
+    disables the driver path. Both paths produce identical assignments
+    (tested). A row of two 32-character md5 ids (the linkage pipeline's
+    term ids) is ~72 bytes of Arrow data, so the 2M default collects up
+    to ~150 MB, ~2.5 times that once held on the driver as pandas
+    strings; int64 ids (the dedup pipeline's doc ids) take 16 bytes.
     """
-    if checkpoint is None:
-        # Default: LAZY localCheckpoint — the convergence checksum is then
-        # the action that materializes the round's checkpoint, so the
-        # driver pays ONE action per checked round instead of two (eager
-        # checkpoint job + checksum job). Per-round driver latency is the
-        # serial Amdahl term that capped the dedup family's 2->8 scaling
-        # at ~0.5-0.8 in round 3 (BENCH/BASELINE.md).
-        def checkpoint(df: DataFrame) -> DataFrame:  # noqa: ANN001
-            return df.localCheckpoint(eager=False)
-
-    edges = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
-        F.col("u") != F.col("v")
-    ).dropDuplicates(["u", "v"])
-    edges = checkpoint(edges)
-    _checksum = _edge_checksum
-
-    # Check convergence every SECOND round: the star maps decrease a
-    # monotone potential until fixpoint (Kiveris et al. SoCC'14), so no
-    # 2-cycles exist and checksum equality two rounds apart implies the
-    # fixpoint was reached. Cost: at most one redundant round of compute
-    # on already-converged (small) state; saving: half the checksum scans
-    # — and with the fused lazy checkpoints above, ONE driver action per
-    # two rounds total. The output stays deterministic either way (the
-    # final groupBy-min below settles labels even mid-convergence).
-    check_every = 2
-    h_old = initial_checksum if initial_checksum is not None \
-        else _checksum(edges)
-    if small_graph_threshold and h_old["c"] <= small_graph_threshold:
-        assign = _driver_union_find(edges, node_col)
-        if nodes is not None:
-            singles = (
-                nodes.select(F.col(node_col)).distinct()
-                .join(assign.select(node_col), node_col, "left_anti")
-                .select(F.col(node_col), F.col(node_col).alias("entity_id"))
-            )
-            assign = assign.unionByName(singles)
-        return assign
-    for it in range(max_iterations):
-        edges2 = checkpoint(_small_star(_large_star(edges)))
-        edges = edges2
-        if (it + 1) % check_every == 0 or it == max_iterations - 1:
-            h_new = _checksum(edges2)
-            if h_old == h_new:
-                break
-            h_old = h_new
-
-    # after convergence every edge points node -> component root
-    assign = edges.select(F.col("u").alias(node_col), F.col("v").alias("entity_id"))
-    # root nodes map to themselves; singletons likewise
-    roots = edges.select(F.col("v").alias(node_col)).distinct().join(
-        assign.select(node_col), node_col, "left_anti"
-    ).select(F.col(node_col), F.col(node_col).alias("entity_id"))
-    assign = assign.unionByName(roots)
-    if nodes is not None:
-        singles = (
-            nodes.select(F.col(node_col)).distinct()
-            .join(assign.select(node_col), node_col, "left_anti")
-            .select(F.col(node_col), F.col(node_col).alias("entity_id"))
-        )
-        assign = assign.unionByName(singles)
-    # deterministic: min label wins even if a round budget stopped short of
-    # full convergence
-    return assign.groupBy(node_col).agg(F.min("entity_id").alias("entity_id"))
+    edges, labels = _components(pairs, src, dst, node_col, max_iterations,
+                                checkpoint, small_graph_threshold)
+    if not isinstance(labels, DataFrame):
+        dtype = edges.schema[0].dataType
+        labels = edges.sparkSession.createDataFrame(labels, StructType([
+            StructField(node_col, dtype), StructField("entity_id", dtype)]))
+    return _attach_singletons(labels, nodes, labels.select(node_col),
+                              node_col, F.col(node_col).alias("entity_id"))
 
 
 def component_survivor_counts(
@@ -256,66 +243,37 @@ def component_survivor_counts(
     of each component carries n_removed = component size - 1, and every
     node of ``nodes`` appearing in no pair survives with n_removed = 0.
 
-    Semantically identical to deriving sizes + survivors from
-    ``connected_components``' full assignment (the distributed path below
-    does exactly that), but on the small-graph fast path ALL cluster
-    arithmetic — labeling, sizes, survivor selection — stays driver-side
-    on the already-collected edge list, and only the bounded survivor
-    table (one row per multi-node component) is shipped back. The full
-    assignment upload this replaces became a large LocalTableScan
-    feeding four shuffle stages (sizes aggregate, survivor filter-join,
-    singleton anti-join) — profiled at ~10 s of near-constant latency at
-    2 AND 8 cores on a 288k-edge graph, the dominant serial term of the
-    dedup scaling family after the pair join itself (BENCH/BASELINE.md
-    r4). Bound raised 500k -> 2M edges in r5 after the k=256 corpus
-    (575,405 merges — its spanning forest alone tops 500k) silently fell
-    off this path; see connected_components' docstring."""
-    if checkpoint is None:
-        def checkpoint(df: DataFrame) -> DataFrame:  # noqa: ANN001
-            return df.localCheckpoint(eager=False)
-    edges = (pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-             .where(F.col("u") != F.col("v")).dropDuplicates(["u", "v"]))
-    edges = checkpoint(edges)
-    # one action yields the cardinality AND doubles as the initial
-    # convergence checksum on the scale path (VERDICT r4 nit: the
-    # separate edges.count() here was a redundant driver action)
-    checksum_row = _edge_checksum(edges)
-    n_edges = checksum_row["c"]
-    if small_graph_threshold and n_edges <= small_graph_threshold:
+    Same labeling and ``small_graph_threshold`` bound as
+    ``connected_components``. On the driver path the sizes and survivor
+    selection stay on the driver too, and only the survivor table (one
+    row per multi-node component) is shipped back; the full assignment
+    is never uploaded. On the star path they are a Spark aggregate and
+    join over the assignment."""
+    edges, labels = _components(pairs, src, dst, node_col, max_iterations,
+                                checkpoint, small_graph_threshold)
+    if isinstance(labels, DataFrame):
+        sizes = labels.groupBy("entity_id").agg(
+            (F.count(F.lit(1)) - F.lit(1)).cast("int").alias("n_removed"))
+        surv = (labels.where(F.col(node_col) == F.col("entity_id"))
+                .join(sizes, "entity_id").select(node_col, "n_removed"))
+        known = labels.select(node_col)
+    else:
         import pandas as pd
 
-        assign = _uf_label_pandas(edges.toPandas(), node_col)
-        sizes = assign.groupby("entity_id")[node_col].count()
-        surv = (assign[assign[node_col] == assign["entity_id"]]
-                .merge(sizes.rename("_sz"), left_on="entity_id",
-                       right_index=True))
-        surv_pdf = pd.DataFrame({node_col: surv[node_col].to_numpy(),
-                                 "n_removed": (surv["_sz"] - 1)
-                                 .astype("int32").to_numpy()})
-        schema = StructType([
-            StructField(node_col, edges.schema[0].dataType),
-            StructField("n_removed", IntegerType()),
-        ])
-        surv_df = edges.sparkSession.createDataFrame(surv_pdf, schema)
-        edge_nodes = (edges.select(F.col("u").alias(node_col))
-                      .unionByName(edges.select(F.col("v").alias(node_col)))
-                      .distinct())
-        singles = (nodes.select(F.col(node_col)).distinct()
-                   .join(edge_nodes, node_col, "left_anti")
-                   .select(F.col(node_col),
-                           F.lit(0).cast("int").alias("n_removed")))
-        return surv_df.unionByName(singles)
-    # scale path: full distributed assignment, then sizes + survivors.
-    # edges is already checkpointed, so handing it to connected_components
-    # does not re-derive the (typically expensive) pair lineage.
-    clusters = connected_components(
-        edges, nodes, src="u", dst="v", node_col=node_col,
-        max_iterations=max_iterations, checkpoint=checkpoint,
-        small_graph_threshold=0, initial_checksum=checksum_row)
-    sizes = clusters.groupBy("entity_id").agg(
-        (F.count(F.lit(1)) - F.lit(1)).cast("int").alias("n_removed"))
-    return (clusters.where(F.col(node_col) == F.col("entity_id"))
-            .join(sizes, "entity_id").select(node_col, "n_removed"))
+        sizes = labels.groupby("entity_id")[node_col].count()
+        roots = (labels[labels[node_col] == labels["entity_id"]]
+                 .merge(sizes.rename("_sz"), left_on="entity_id",
+                        right_index=True))
+        surv = edges.sparkSession.createDataFrame(
+            pd.DataFrame({node_col: roots[node_col].to_numpy(),
+                          "n_removed": (roots["_sz"] - 1)
+                          .astype("int32").to_numpy()}),
+            StructType([StructField(node_col, edges.schema[0].dataType),
+                        StructField("n_removed", IntegerType())]))
+        known = (edges.select(F.col("u").alias(node_col))
+                 .unionByName(edges.select(F.col("v").alias(node_col))))
+    return _attach_singletons(surv, nodes, known, node_col,
+                              F.lit(0).cast("int").alias("n_removed"))
 
 
 def incremental_components(
@@ -359,15 +317,12 @@ def incremental_components(
     table. A plain-parquet deployment overwrites full state (O(total)
     write per batch); the delta keeps the write O(batch) too.
     """
-    if checkpoint is None:
-        def checkpoint(df: DataFrame) -> DataFrame:  # noqa: ANN001
-            return df.localCheckpoint(eager=True)
-    edges = (new_pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-             .where(F.col("u") != F.col("v")).dropDuplicates(["u", "v"]))
-    # the edge lineage is typically a fuzzy join — materialize once
-    # instead of re-deriving it for endpoints, the subgraph union, and
-    # the CC entry checkpoint
-    edges = checkpoint(edges)
+    # the edge lineage is typically a fuzzy join: the default lazy
+    # checkpoint persists the edge rows in the first job that computes
+    # them (the nested labeling's collect), and the endpoints, the
+    # subgraph union and the untouched-state anti-join read those blocks
+    # instead of re-deriving the join
+    edges = _edges(new_pairs, src, dst, checkpoint or _lazy_checkpoint)
     endpoints = (edges.select(F.col("u").alias(node_col))
                  .unionByName(edges.select(F.col("v").alias(node_col)))
                  .distinct())

@@ -42,7 +42,7 @@ import uuid
 from dataclasses import dataclass, field
 
 import pyarrow as pa
-from py4j.protocol import Py4JError
+from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -262,11 +262,15 @@ def _write_task_rows(spark: SparkSession,
     """Rows each successful write task of job group ``group`` wrote,
     keyed by task index: the ``outputMetrics.recordsWritten`` that every
     file-write task reports, read from Spark's status store with no
-    Spark job; None when a job of the group is no longer retained. The store and the listener bus are ``private[spark]`` but
-    reachable through py4j; the caller checks the sum against the
-    observed row count, so drift in these internals, task retention
-    limits or task retries can only send it to the read-back fallback,
-    never yield a wrong lineage."""
+    Spark job; None when a job of the group is no longer retained.
+    Stages the store no longer holds are passed over: once it holds
+    ``spark.ui.retainedStages`` stages, every cleanup deletes the skipped
+    stages first, often those the write job just skipped, and a skipped
+    stage writes nothing. The store and the listener bus are
+    ``private[spark]`` but reachable through py4j; the caller checks the
+    sum against the observed row count, so drift in these internals, a
+    pruned write stage, task retention limits or task retries can only
+    send it to the read-back fallback, never yield a wrong lineage."""
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
@@ -278,7 +282,13 @@ def _write_task_rows(spark: SparkSession,
         if info is None:
             return None
         for sid in info.stageIds:
-            stage = store.lastStageAttempt(sid)
+            try:
+                stage = store.lastStageAttempt(sid)
+            except Py4JJavaError as e:
+                if (e.java_exception.getClass().getName()
+                        != "java.util.NoSuchElementException"):
+                    raise
+                continue   # pruned from the store
             if not stage.outputRecords():
                 continue   # shuffle-map or skipped stage: writes no file
             tasks = store.taskList(sid, stage.attemptId(), 2 ** 31 - 1)

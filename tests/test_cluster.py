@@ -29,7 +29,8 @@ def _oracle(edges, nodes):
     for n in nodes:
         uf.find(n)
     for a, b in edges:
-        uf.union(a, b)
+        if a is not None and b is not None:
+            uf.union(a, b)
     # min-id per component
     comp = {}
     for n in nodes:
@@ -42,16 +43,24 @@ def _oracle(edges, nodes):
     return out
 
 
+def _thresholds(edges):
+    """small_graph_threshold values covering every physical path: the
+    driver union-find (a roomy bound, and exactly the edge-row count),
+    the star rounds after a collect that came back one row over the bound
+    (edge rows - 1), and the star rounds with no collect at all (0)."""
+    n = sum(1 for a, b in edges
+            if a is not None and b is not None and a != b)
+    return [t for t in dict.fromkeys((500_000, n, n - 1, 0)) if t >= 0]
+
+
 def _run(spark, edges, nodes):
-    """Both physical paths must agree with the oracle: the driver
-    union-find fast path (default threshold) AND the iterated star
-    rounds (small_graph_threshold=0 pins the distributed scale path)."""
-    edf = spark.createDataFrame(edges or [("x", "x")], ["id_a", "id_b"])
-    if not edges:
-        edf = edf.limit(0)
+    """Every physical path must agree with the oracle: the driver
+    union-find, the star rounds entered after an over-bound collect, and
+    the star rounds pinned by small_graph_threshold=0."""
+    edf = spark.createDataFrame(edges, "id_a string, id_b string")
     ndf = spark.createDataFrame([(n,) for n in nodes], ["term_id"])
     exp = _oracle(edges, nodes)
-    for thr in (500_000, 0):
+    for thr in _thresholds(edges):
         got = {
             r.term_id: r.entity_id
             for r in connected_components(
@@ -173,16 +182,15 @@ def _surv_oracle(edges, nodes):
 
 def _run_survivors(spark, edges, nodes):
     """component_survivor_counts must match the union-find oracle's
-    (survivor = min member, n_removed = size - 1) on BOTH physical
-    paths (driver fast path and distributed clusters-then-aggregate)."""
+    (survivor = min member, n_removed = size - 1) on every physical path
+    (driver labeling, and distributed clusters-then-aggregate entered
+    with or without the bounded collect)."""
     from liblevenshtein_rust_spark.operators.cluster import (
         component_survivor_counts)
-    edf = spark.createDataFrame(edges or [("x", "x")], ["id_a", "id_b"])
-    if not edges:
-        edf = edf.limit(0)
+    edf = spark.createDataFrame(edges, "id_a string, id_b string")
     ndf = spark.createDataFrame([(n,) for n in nodes], ["term_id"])
     exp = _surv_oracle(edges, nodes)
-    for thr in (500_000, 0):
+    for thr in _thresholds(edges):
         got = {
             r.term_id: r.n_removed
             for r in component_survivor_counts(
@@ -213,6 +221,49 @@ def test_survivor_counts_random_graphs(spark):
 
 def test_survivor_counts_empty_edges(spark):
     _run_survivors(spark, [], ["a", "b", "c"])
+
+
+def test_hostile_edges_match_oracle(spark):
+    """Edge rows as a foreign pair table may carry them: repeated rows,
+    both orientations of a pair, self-loops and NULL endpoints. The
+    driver path labels the raw rows, so every threshold must still equal
+    the oracle, which skips the NULL-endpoint rows."""
+    edges = [("a", "b"), ("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"),
+             ("c", "c"), ("d", "d"), ("e", None), (None, "f"), (None, None),
+             ("g", "h"), ("h", "g"), ("g", "h"), ("i", "i"), ("j", "k")]
+    nodes = list("abcdefghijkz")
+    _run(spark, edges, nodes)
+    _run_survivors(spark, edges, nodes)
+
+
+def test_pair_lineage_runs_once(spark):
+    """The bounded collect reads the checkpointed edge table, so the pair
+    lineage (typically a fuzzy join) is computed exactly once whichever
+    path labels the graph — including the star rounds entered after a
+    collect that came back over the bound."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StringType
+
+    rng = np.random.default_rng(5)
+    nodes = [f"p{i:02d}" for i in range(40)]
+    edges = [tuple(str(x) for x in rng.choice(nodes, 2, replace=False))
+             for _ in range(30)]
+    exp = _oracle(edges, nodes)
+    ndf = spark.createDataFrame([(n,) for n in nodes], ["term_id"])
+    for thr in (2_000_000, len(edges) - 1, 0):
+        acc = spark.sparkContext.accumulator(0)
+
+        def seen(x):
+            acc.add(1)
+            return x
+
+        tap = F.udf(seen, StringType()).asNondeterministic()
+        pairs = (spark.createDataFrame(edges, ["id_a", "id_b"])
+                 .select(tap("id_a").alias("id_a"), "id_b"))
+        got = {r.term_id: r.entity_id for r in connected_components(
+            pairs, ndf, small_graph_threshold=thr).collect()}
+        assert got == exp, f"threshold={thr}"
+        assert acc.value == len(edges), f"threshold={thr}"
 
 
 def test_uf_label_pandas_long_chain():

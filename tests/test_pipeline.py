@@ -255,6 +255,70 @@ def test_lineage_fallback_writes_same_totals(spark, small_run, small_turns,
         == _sidecar_totals(spark, base)
 
 
+_PRUNED_STAGE_SCRIPT = r"""
+import json, sys, time
+from pyspark.sql import functions as F
+from liblevenshtein_rust_spark.plans.pipeline import _write_task_rows
+from liblevenshtein_rust_spark.session import get_spark
+
+spark = get_spark("pruned-stages", master="local[2]", extra_conf={
+    "spark.ui.enabled": "false", "spark.ui.retainedStages": "2",
+    "spark.sql.shuffle.partitions": "4"})
+sc = spark.sparkContext
+sc.setJobGroup("pruned", "pruned")
+# under AQE the aggregate's shuffle runs as a job of its own, and the
+# write job lists that map stage again as a skipped stage
+(spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+ .write.parquet(sys.argv[1]))
+sc.setLocalProperty("spark.jobGroup.id", None)
+sc._jsc.sc().listenerBus().waitUntilEmpty()
+tracker = sc.statusTracker()
+sids = [s for j in tracker.getJobIdsForGroup("pruned")
+        for s in tracker.getJobInfo(j).stageIds]
+deadline = time.time() + 30
+while (all(tracker.getStageInfo(s) is not None for s in sids)
+       and time.time() < deadline):
+    time.sleep(0.05)
+rows = _write_task_rows(spark, "pruned")
+print(json.dumps({
+    "pruned": sum(tracker.getStageInfo(s) is None for s in sids),
+    "rows": None if rows is None else sum(rows.values())}))
+"""
+
+
+def test_write_task_rows_passes_over_pruned_stages(tmp_path):
+    """Past spark.ui.retainedStages the status store deletes skipped
+    stages first, including those a write job just skipped; the task-row
+    reader must still return the written rows instead of failing on the
+    missing stage (which sent a long-lived session's stages to the
+    read-back fallback). Runs in its own JVM, since retainedStages is
+    fixed when the context starts."""
+    import json
+    import os
+    import signal
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g",
+               PYTHONPATH=os.pathsep.join(
+                   filter(None, [repo, os.environ.get("PYTHONPATH")])))
+    p = subprocess.Popen([sys.executable, "-c", _PRUNED_STAGE_SCRIPT,
+                          str(tmp_path / "out")], cwd=repo, env=env,
+                         stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+                         text=True, start_new_session=True)
+    try:
+        out, err = p.communicate(timeout=240)
+    except subprocess.TimeoutExpired:
+        os.killpg(p.pid, signal.SIGKILL)
+        p.communicate()
+        pytest.fail("pruned-stage script did not finish within 240 s")
+    assert p.returncode == 0, err[-3000:]
+    res = json.loads(out.strip().splitlines()[-1])
+    assert res["pruned"] >= 1, res
+    assert res["rows"] == 7, res
+
+
 def test_empty_input_runs_every_stage(spark, small_turns, tmp_path):
     import os
     res = run_pipeline(spark, small_turns.where(F.lit(False)),

@@ -241,14 +241,10 @@ def test_pipeline_unique_ids_self_join_plan_shape(spark, tmp_path):
 
 
 #: Spark jobs one fresh run_pipeline starts on the 1,500-turn
-#: test_pipeline.py fixture. It was 46 while every checkpoint stage also
-#: ran a read-back count(), a lineage aggregate and its write and a
-#: parquet schema inference, the run ended with a Python-RDD _metrics
-#: write, and the clusters stage checkpointed its edges eagerly; the
-#: stage writes (plus the clusters stage's checksum and union-find
-#: collects) are all that remain. It was 19 while the scored_pairs
-#: self-join collapsed each side's text attach per id
-PIPELINE_JOBS = 17
+#: test_pipeline.py fixture: the stage writes, plus the clusters stage's
+#: one bounded edge collect, which both picks the driver union-find and
+#: feeds it
+PIPELINE_JOBS = 14
 
 
 def test_pipeline_job_count(spark, tmp_path):
@@ -321,10 +317,9 @@ def test_jaccard_plan_reads_one_document_table(spark, sf_dir, tmp_path):
 
 
 #: Spark jobs one fresh run_dedup_pipeline(jaccard, group_col="lang",
-#: hash_tokens=True) starts on a copy of the sf_dir documents. It was 21
-#: while the token join spread its input and regrouped exploded tokens
-#: for the per-document sizes and verify arrays
-DEDUP_JOBS = 15
+#: hash_tokens=True) starts on a copy of the sf_dir documents: the stage
+#: writes, plus the survivor stage's one bounded edge collect
+DEDUP_JOBS = 11
 
 
 def test_dedup_pipeline_job_count(spark, tmp_path, sf_dir):
