@@ -27,9 +27,6 @@ bytes/key regardless of text length.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from liblevenshtein_rust_spark.functions.distance import (
     MERGE_AND_SPLIT,
     STANDARD,
@@ -69,9 +66,15 @@ def _del1_expr(x: str) -> str:
 
 
 def deletion_keys_sql(col: str, depth: int, prefix_len: int = 0) -> str:
-    """SQL-string form of :func:`deletion_keys` (r6: key pipelines are
-    composed as strings so operators pay ONE py4j round trip for the
-    whole expression instead of one per Column op)."""
+    """SQL expr: array of all deletion variants of ``col`` at depths
+    0..``depth``.
+
+    ``prefix_len`` > 0 caps the keyed region to the first ``prefix_len``
+    chars (SymSpell prefix trick — trades exactness for bounded fan-out on
+    long strings; leave 0 for exact completeness on short strings, and use
+    segment keys for long ones). Key pipelines are composed as SQL
+    strings so operators pay ONE py4j round trip for the whole expression
+    instead of one per Column op (r6)."""
     base = f"substring({col}, 1, {prefix_len})" if prefix_len > 0 else col
     levels = [f"array({base})"]
     for _ in range(depth):
@@ -80,17 +83,6 @@ def deletion_keys_sql(col: str, depth: int, prefix_len: int = 0) -> str:
     if len(levels) == 1:
         return levels[0]
     return f"array_distinct(concat({', '.join(levels)}))"
-
-
-def deletion_keys(col: str, depth: int, prefix_len: int = 0) -> Column:
-    """Array of all deletion variants of ``col`` at depths 0..``depth``.
-
-    ``prefix_len`` > 0 caps the keyed region to the first ``prefix_len``
-    chars (SymSpell prefix trick — trades exactness for bounded fan-out on
-    long strings; leave 0 for exact completeness on short strings, and use
-    segment keys for long ones).
-    """
-    return F.expr(deletion_keys_sql(col, depth, prefix_len))
 
 
 # ---------------------------------------------------------------------------
@@ -107,7 +99,13 @@ def _seg_len(l: str, i: str, k: int) -> str:
 
 
 def segment_keys_sql(col: str, k: int) -> str:
-    """SQL-string form of :func:`segment_keys`."""
+    """SQL expr, index-side keys: the k+1 segments of ``col``, tagged
+    (length, idx).
+
+    Empty segments (len(col) < k+1) are legal — an unedited empty segment
+    trivially appears in any partner, so the pigeonhole argument still
+    holds and short strings need no special casing.
+    """
     l = f"length({col})"
     return (
         f"transform(sequence(0, {k}), i -> concat_ws('|', 'G', {l}, i, "
@@ -115,28 +113,14 @@ def segment_keys_sql(col: str, k: int) -> str:
     )
 
 
-def segment_keys(col: str, k: int) -> Column:
-    """Index-side keys: the k+1 segments of ``col``, tagged (length, idx).
-
-    Empty segments (len(col) < k+1) are legal — an unedited empty segment
-    trivially appears in any partner, so the pigeonhole argument still
-    holds and short strings need no special casing.
-    """
-    return F.expr(segment_keys_sql(col, k))
-
-
-def probe_keys(col: str, k: int, len_tol: int | None = None) -> Column:
-    """Probe-side keys: for every partner length l within ``len_tol`` and
-    every segment index i, the substrings of ``col`` that could equal that
-    segment, at positions shifted by at most k from its home position.
+def probe_keys_sql(col: str, k: int, len_tol: int | None = None) -> str:
+    """SQL expr, probe-side keys: for every partner length l within
+    ``len_tol`` and every segment index i, the substrings of ``col`` that
+    could equal that segment, at positions shifted by at most k from its
+    home position.
 
     Fan-out is bounded by (2*len_tol+1) * (k+1) * (2k+1) keys/row.
     """
-    return F.expr(probe_keys_sql(col, k, len_tol))
-
-
-def probe_keys_sql(col: str, k: int, len_tol: int | None = None) -> str:
-    """SQL-string form of :func:`probe_keys`."""
     tol = k if len_tol is None else len_tol
     m = f"length({col})"
     start = _seg_start("l", "i", k)
@@ -154,25 +138,7 @@ def probe_keys_sql(col: str, k: int, len_tol: int | None = None) -> str:
     )
 
 
-# ---------------------------------------------------------------------------
-# n-gram keys (substring-match fallback, SuffixAutomaton analog)
-# ---------------------------------------------------------------------------
-
-def ngram_keys(col: str, q: int = 3) -> Column:
-    """Distinct character q-grams of ``col`` (padded variant not needed:
-    used for containment-style blocking, cf. SuffixAutomaton substring
-    matching /root/reference/src/dictionary/suffix_automaton.rs)."""
-    return F.expr(
-        f"array_distinct(if(length({col}) < {q}, array({col}), "
-        f"transform(sequence(1, length({col}) - {q} + 1), i -> substring({col}, i, {q}))))"
-    )
-
-
 def hash_keys_sql(keys_sql: str) -> str:
-    """SQL-string form of :func:`hash_keys` over a key-array expression."""
+    """SQL expr: a key-array expression hashed to int64 (xxhash64) for
+    the join."""
     return f"transform({keys_sql}, k -> xxhash64(k))"
-
-
-def hash_keys(keys: Column) -> Column:
-    """Hash an array of string keys to int64 (xxhash64) for the join."""
-    return F.transform(keys, lambda k: F.xxhash64(k))

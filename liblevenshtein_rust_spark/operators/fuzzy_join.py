@@ -8,10 +8,12 @@ Re-expresses the reference's automaton-intersection query
       ->  attach texts  ->  vectorized banded-DP verify  ->  filter d <= n
 
 Every edit-distance join here (A×B, self, weighted-cost, prefix) runs
-through ONE private core, ``_blocked_join``: persist, the self-join
-pre-partition, the pair dedupe and the text attach happen there only. An
-entry point supplies just its key tables, its verify kernel and its output
-column names; the salted candidate source (skew.py) plugs into the core.
+through ONE private core, ``_blocked_join``: persist, the probe × index
+key join, the pair dedupe and the text attach happen there only. An entry
+point supplies just its (probe, index) key tables, its verify kernel and
+its output column names; the salted key join (skew.py) plugs into the
+core. A self-join is the same shape applied to one table: the reference's
+query automaton run against its own dictionary.
 
 Never a cartesian product: blocking keys prune exactly like the automaton
 prunes dictionary subtrees. Scale notes:
@@ -22,7 +24,7 @@ prunes dictionary subtrees. Scale notes:
   (much smaller, distinct-term) dictionary back in. Dictionary distinctness
   also kills the classic transcript skew source — a million "ok" turns are
   ONE dictionary term.
-- Pair canonicalization (least/greatest) + dropDuplicates mirrors the
+- The self-join's _ida < _idb filter + dropDuplicates mirrors the
   reference's SymmetricPair memo key (/root/reference/src/distance/mod.rs:37-57).
 - AQE skew-join splitting + runtime bloom filters are enabled by the
   session factory; blocking joins are plain shuffled equi-joins that AQE
@@ -52,7 +54,7 @@ from liblevenshtein_rust_spark.functions.distance import (
     make_distance_udf,
     make_prefix_distance_udf,
 )
-from liblevenshtein_rust_spark.operators.skew import salted_self_candidates
+from liblevenshtein_rust_spark.operators.skew import salted_key_join
 
 #: strings at or below this length use deletion-neighborhood blocking
 #: (narrower fan-out); longer strings use PassJoin segment blocking.
@@ -112,39 +114,39 @@ def _blocked_join(keys, left: DataFrame, right: DataFrame | None,
                   cols: tuple[str, str, str, str], verify,
                   out_cols: tuple[str, str, str, str, str], *,
                   dedupe: bool = True, persist: bool = False,
-                  self_pairs=None) -> DataFrame:
+                  key_join=None) -> DataFrame:
     """The one blocked-join core: key tables -> distinct candidate id
     pairs -> texts attached as (_ida, _ta, _idb, _tb) -> ``verify`` (adds
     and filters the score column ``out_cols[4]``) -> pair columns renamed
-    to ``out_cols[:4]``. ``keys`` is a (left, right) pair of exploded
-    (_bid, _bkey) tables, or ONE table for a self-join (``right is None``);
-    ``cols`` names the (id, text) columns of left, then right.
+    to ``out_cols[:4]``. ``keys`` is the (left, right) pair of exploded
+    (_bid, _bkey) tables: probe keys of ``left``, index keys of ``right``.
+    ``right is None`` is a self-join of ``left``: it keeps the pairs with
+    _ida < _idb, exact because every within-n pair matches probe × index
+    in both orientations (tests/test_blocking.py). ``cols`` names the
+    (id, text) columns of left, then right.
 
-    A self-join pre-partitions its key table on the join key below the
-    per-side aliases, so AQE stage reuse computes the key pipeline ONCE
-    (r6); ``self_pairs`` swaps in another source of distinct _ida < _idb
-    pairs. ``dedupe=False`` skips the per-id text collapse (an Exchange +
-    SortAggregate per side) for ids unique by construction. ``persist``
-    caches the inputs (and a self-join's key table) and attaches them to
-    the result for ``operators.dedup.unpersist_inputs``; Spark matches
-    cached data by plan, so key tables built earlier read the caches too.
+    ``key_join`` swaps in another source of the key-match (_ida, _idb)
+    rows (the salted join). ``dedupe=False`` skips the per-id text
+    collapse (an Exchange + SortAggregate per side) for ids unique by
+    construction. ``persist`` caches the inputs, each read twice (key
+    explode + text attach), and attaches them to the result for
+    ``operators.dedup.unpersist_inputs``.
     """
     self_join = right is None
     right = left if self_join else right
-    cached = ([left, keys] if self_join else [left, right]) if persist else []
+    cached = ([left] if self_join else [left, right]) if persist else []
     for df in cached:
         df.persist()
-    if self_join and self_pairs is not None:
-        pairs = self_pairs(keys)
+    lk, rk = keys
+    if key_join is not None:
+        pairs = key_join(lk, rk)
     else:
-        lk, rk = (keys.repartition("_bkey"),) * 2 if self_join else keys
-        l = lk.selectExpr("_bid AS _ida", "_bkey").alias("lk")
-        r = rk.selectExpr("_bid AS _idb", "_bkey").alias("rk")
-        pairs = l.join(r, F.col("lk._bkey") == F.col("rk._bkey"), "inner") \
-            .selectExpr("lk._ida AS _ida", "rk._idb AS _idb")
-        if self_join:
-            pairs = pairs.where("_ida < _idb")
-        pairs = pairs.dropDuplicates(["_ida", "_idb"])
+        pairs = lk.selectExpr("_bid AS _ida", "_bkey").join(
+            rk.selectExpr("_bid AS _idb", "_bkey"), "_bkey") \
+            .select("_ida", "_idb")
+    if self_join:
+        pairs = pairs.where("_ida < _idb")
+    pairs = pairs.dropDuplicates(["_ida", "_idb"])
     l_id, l_text, r_id, r_text = cols
     lt = left.selectExpr(f"`{l_id}` AS _ida", f"`{l_text}` AS _ta")
     rt = right.selectExpr(f"`{r_id}` AS _idb", f"`{r_text}` AS _tb")
@@ -183,7 +185,8 @@ def _edit_distance_verify(n: int, variant: str, subst=None):
 
 def _keys_for(df: DataFrame, id_col: str, text_col: str, n: int, variant: str,
               method: str, role: str, subst=None) -> DataFrame:
-    """role: 'index' | 'probe' | 'both' (self-join emits both sides);
+    """role: 'index' | 'probe' (the two sides of every key join) | 'both'
+    (their union, for block-size statistics);
     method: 'deletion' | 'segment' | 'hybrid' | 'auto' (_resolve_method).
 
     With a SubstitutionSet, keys are generated over class-canonicalized
@@ -282,10 +285,11 @@ def fuzzy_self_join(
 ) -> DataFrame:
     """All unordered distinct-term pairs with distance <= n (id_a < id_b).
 
-    Output: id_a, term_a, id_b, term_b, distance. ``salt_threshold``
-    routes blocking keys with more members than the threshold through the
-    deterministic triangular salting path (operators/skew.py) instead of
-    a single reducer key.
+    Output: id_a, term_a, id_b, term_b, distance. The terms' probe keys
+    are joined against their own index keys, as ``fuzzy_join`` joins a
+    query table against a dictionary. ``salt_threshold`` spreads index
+    keys with more members than the threshold over ``salt_groups``
+    reducer keys (operators/skew.py) instead of a single one.
 
     ``unique_ids=True`` declares that ``terms`` carries one row per
     ``id_col`` (the dictionary contract, e.g. a ``build_dictionary``
@@ -293,21 +297,20 @@ def fuzzy_self_join(
     two fewer Exchange + SortAggregate rounds per invocation (r6).
     Results are identical whenever the declaration is true.
 
-    ``persist`` caches the terms input AND the exploded key table: the
-    plan reads terms four times and the key subtree twice, so without the
-    cache any upstream lineage (e.g. a build_dictionary aggregation)
-    re-runs per read. Release via ``operators.dedup.unpersist_inputs``.
+    ``persist`` caches the terms input, which both key explodes and both
+    text attaches read, so any upstream lineage (e.g. a build_dictionary
+    aggregation) runs once. Release via ``operators.dedup.unpersist_inputs``.
     """
-    keys = _keys_for(terms, id_col, text_col, n, variant, method, role="both",
-                     subst=substitutions)
+    keys = tuple(_keys_for(terms, id_col, text_col, n, variant, method,
+                           role=role, subst=substitutions)
+                 for role in ("probe", "index"))
     salted = None if salt_threshold is None else partial(
-        salted_self_candidates, hot_threshold=salt_threshold,
-        n_groups=salt_groups)
+        salted_key_join, hot_threshold=salt_threshold, n_groups=salt_groups)
     return _blocked_join(keys, terms, None, (id_col, text_col) * 2,
                          _edit_distance_verify(n, variant, substitutions),
                          ("id_a", "term_a", "id_b", "term_b", "distance"),
                          dedupe=not unique_ids, persist=persist,
-                         self_pairs=salted)
+                         key_join=salted)
 
 
 def fuzzy_prefix_join(

@@ -1,20 +1,18 @@
 """Explicit skew handling for blocking-key joins.
 
 Hot blocking keys (ultra-common short turns, empty segments) put one
-block's entire m^2 candidate space into a single reducer. AQE's skew-join
+block's entire candidate space into a single reducer. AQE's skew-join
 splitting mitigates the shuffle, but the explicit salted path here makes
 the mitigation deterministic and independent of runtime statistics —
 required by the north rule ("salting for skewed blocks").
 
-Scheme (triangular group decomposition of a self-join):
+Scheme (hot index-key salting of a probe × index key join):
 
-  members of a hot key get group g = pmod(xxhash64(id), G);
-  for every ordered group pair (i, j), i <= j, the left side re-emits
-  members of group i under tag (key, i, j) and the right side members of
-  group j under the same tag. The equi-join on (key, i, j) then produces
-  exactly the original pair set, spread over G*(G+1)/2 reducer keys
-  instead of 1. Cold keys take the ordinary single-key path; pairs found
-  via both routes collapse in the pair-level dropDuplicates.
+  an index key with more members than the threshold is hot; its index
+  members get salt s = pmod(xxhash64(id), G) and its probe members are
+  replicated to every salt 0..G-1; cold keys take salt 0 on both sides.
+  The equi-join on (key, salt) then produces exactly the unsalted join's
+  rows, a hot key's spread over G reducer keys instead of 1.
 """
 
 from __future__ import annotations
@@ -35,50 +33,22 @@ def block_size_stats(keys: DataFrame, key_col: str = "_bkey") -> DataFrame:
     )
 
 
-def salted_self_candidates(keys: DataFrame, *, hot_threshold: int,
-                           n_groups: int = 8) -> DataFrame:
-    """Distinct candidate id pairs (_ida < _idb) from an exploded key
-    table (_bid, _bkey), with keys hotter than ``hot_threshold`` routed
-    through the triangular salted decomposition."""
-    counts = keys.groupBy("_bkey").agg(F.count(F.lit(1)).alias("_n"))
-    hot_keys = counts.where(F.col("_n") > hot_threshold).select("_bkey")
-
-    cold = keys.join(F.broadcast(hot_keys), "_bkey", "left_anti")
-    l = cold.withColumnRenamed("_bid", "_ida").alias("ck_l")
-    r = cold.withColumnRenamed("_bid", "_idb").alias("ck_r")
-    cold_pairs = (
-        l.join(r, F.col("ck_l._bkey") == F.col("ck_r._bkey"))
-        .select(F.col("ck_l._ida").alias("_ida"), F.col("ck_r._idb").alias("_idb"))
-        .where(F.col("_ida") < F.col("_idb"))
-    )
-
-    hot = keys.join(F.broadcast(hot_keys), "_bkey", "left_semi").withColumn(
-        "_grp", F.pmod(F.xxhash64("_bid"), F.lit(n_groups)).cast("int"))
-    G = n_groups
-    left = hot.select(
-        F.col("_bid").alias("_ida"), "_bkey",
-        F.col("_grp").alias("_gi"),
-        F.explode(F.expr(f"sequence(_grp, {G - 1})")).alias("_gj"),
-    )
-    right = hot.select(
-        F.col("_bid").alias("_idb"), "_bkey",
-        F.explode(F.expr("sequence(0, _grp)")).alias("_gi"),
-        F.col("_grp").alias("_gj"),
-    )
-    hot_pairs = (
-        left.alias("hl").join(
-            right.alias("hr"),
-            (F.col("hl._bkey") == F.col("hr._bkey"))
-            & (F.col("hl._gi") == F.col("hr._gi"))
-            & (F.col("hl._gj") == F.col("hr._gj")),
-        )
-        # a pair is emitted in only ONE group orientation, which need not
-        # agree with id order — canonicalize instead of filtering
-        .select(F.least("hl._ida", "hr._idb").alias("_ida"),
-                F.greatest("hl._ida", "hr._idb").alias("_idb"))
-        .where(F.col("_ida") != F.col("_idb"))
-    )
-    return cold_pairs.unionByName(hot_pairs).dropDuplicates(["_ida", "_idb"])
+def salted_key_join(probe: DataFrame, index: DataFrame, *,
+                    hot_threshold: int, n_groups: int = 8) -> DataFrame:
+    """(_ida, _idb) rows of the equi-join of exploded (_bid, _bkey) key
+    tables, probe ids as _ida and index ids as _idb, with index keys
+    hotter than ``hot_threshold`` spread over ``n_groups`` salts."""
+    hot = (index.groupBy("_bkey").agg(F.count(F.lit(1)).alias("_n"))
+           .where(f"_n > {int(hot_threshold)}")
+           .selectExpr("_bkey", "true AS _hot"))
+    g = int(n_groups)
+    l = probe.join(hot, "_bkey", "left").selectExpr(
+        "_bid AS _ida", "_bkey",
+        f"explode(if(_hot, sequence(0, {g - 1}), array(0))) AS _s")
+    r = index.join(hot, "_bkey", "left").selectExpr(
+        "_bid AS _idb", "_bkey",
+        f"if(_hot, cast(pmod(xxhash64(_bid), {g}) AS int), 0) AS _s")
+    return l.join(r, ["_bkey", "_s"]).select("_ida", "_idb")
 
 
 def spread_input(df: DataFrame) -> DataFrame:

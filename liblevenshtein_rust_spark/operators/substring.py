@@ -69,7 +69,7 @@ def _n_segments(n: int, variant: str) -> int:
 
 def _segments(m: int, n: int, variant: str = STANDARD) -> list[tuple[int, int]]:
     """PassJoin even split of a length-m string into (start0, len)
-    segments (same arithmetic as blocking_keys.segment_keys)."""
+    segments (same arithmetic as blocking_keys.segment_keys_sql)."""
     k = _n_segments(n, variant)
     base, rem = divmod(m, k)
     out, start = [], 0

@@ -70,9 +70,9 @@ class PipelineConfig:
     #: exchange on either side — the physical-design lever for repeated
     #: joins over the same keys at 100 TB. None = plain parquet dirs.
     bucket_by: int | None = None
-    #: blocking keys with more members than this route through the
-    #: deterministic triangular salting path (operators/skew.py) instead
-    #: of one reducer key; None = rely on AQE skew-join splitting alone.
+    #: index keys with more members than this spread over salt_groups
+    #: reducer keys by deterministic salting (operators/skew.py) instead
+    #: of one; None = rely on AQE skew-join splitting alone.
     #: Set on corpora with pathological hot keys (common short turns).
     salt_threshold: int | None = None
     salt_groups: int = 8

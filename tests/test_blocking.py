@@ -87,20 +87,24 @@ def test_deletion_blocking_complete_all_variants(a, b):
 @settings(max_examples=500, deadline=None)
 @given(LONG, LONG)
 def test_segment_blocking_complete(a, b):
+    # BOTH orientations must hit: the self-join joins one table's probe
+    # keys against its own index keys and keeps only _ida < _idb, which is
+    # exact only if each pair matches with either string on the probe side
     for variant, kmul in ((STANDARD, 1), (TRANSPOSITION, 2), (MERGE_AND_SPLIT, 2)):
         for n in (1, 2):
             if distance_py(a, b, variant) <= n:
                 k = n * kmul
-                hit = (py_segment_keys(a, k) & py_probe_keys(b, k, n)) or \
-                      (py_segment_keys(b, k) & py_probe_keys(a, k, n))
-                assert hit, (a, b, variant, n)
+                assert py_segment_keys(a, k) & py_probe_keys(b, k, n), (
+                    a, b, variant, n)
+                assert py_segment_keys(b, k) & py_probe_keys(a, k, n), (
+                    b, a, variant, n)
 
 
 def test_sql_matches_python_key_formulas(spark):
     """Pin the SQL expressions to the python mirrors used in the property
     tests, over a deliberately tricky set of strings."""
     from liblevenshtein_rust_spark.functions.blocking_keys import (
-        deletion_keys, probe_keys, segment_keys)
+        deletion_keys_sql, probe_keys_sql, segment_keys_sql)
     import pyspark.sql.functions as F
 
     strs = ["", "a", "ab", "abc", "abcd", "tests", "café", "日本語のテキスト",
@@ -108,9 +112,9 @@ def test_sql_matches_python_key_formulas(spark):
     df = spark.createDataFrame([(s,) for s in strs], ["t"])
     rows = df.select(
         "t",
-        deletion_keys("t", 2).alias("dk"),
-        segment_keys("t", 2).alias("sk"),
-        probe_keys("t", 2, 2).alias("pk"),
+        F.expr(deletion_keys_sql("t", 2)).alias("dk"),
+        F.expr(segment_keys_sql("t", 2)).alias("sk"),
+        F.expr(probe_keys_sql("t", 2, 2)).alias("pk"),
     ).collect()
     for r in rows:
         assert set(r.dk) == py_deletion_keys(r.t, 2), r.t

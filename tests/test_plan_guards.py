@@ -155,16 +155,17 @@ def test_substring_best_match_hash_aggregates(spark):
 
 #: physical-operator sequence (explain "formatted" node order) of the
 #: self-join with PipelineConfig's defaults and the defensive per-id
-#: collapse on a parquet-backed dictionary: the deletion and
-#: segment key routes unioned per side, the side-wide key exchange, the
-#: broadcast key join + pair dedupe, and two deduped text attaches
+#: collapse on a parquet-backed dictionary: the probe-key and index-key
+#: tables, each the union of its deletion and segment key routes, the
+#: broadcast probe × index key join + pair dedupe, and two deduped text
+#: attaches
 PIPELINE_SELF_JOIN_OPS = [
     "Scan parquet", "Filter", "Generate", "Project",
     "Scan parquet", "Filter", "Generate", "Project",
-    "Union", "Exchange", "Project",
+    "Union",
     "Scan parquet", "Filter", "Generate", "Project",
     "Scan parquet", "Filter", "Generate", "Project",
-    "Union", "Exchange", "Project",
+    "Union",
     "BroadcastExchange", "BroadcastHashJoin", "Project",
     "HashAggregate", "Exchange", "HashAggregate",
     "Scan parquet", "Filter", "Project", "Sort", "SortAggregate",
@@ -206,10 +207,10 @@ def test_pipeline_self_join_plan_shape(spark, tmp_path):
 PIPELINE_UNIQUE_SELF_JOIN_OPS = [
     "Scan parquet", "Filter", "Generate", "Project",
     "Scan parquet", "Filter", "Generate", "Project",
-    "Union", "Exchange", "Project",
+    "Union",
     "Scan parquet", "Filter", "Generate", "Project",
     "Scan parquet", "Filter", "Generate", "Project",
-    "Union", "Exchange", "Project",
+    "Union",
     "BroadcastExchange", "BroadcastHashJoin", "Project",
     "HashAggregate", "Exchange", "HashAggregate",
     "Scan parquet", "Filter", "Project",
