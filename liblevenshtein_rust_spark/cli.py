@@ -312,65 +312,30 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "dedup":
-        from pyspark.sql import functions as F
-        from liblevenshtein_rust_spark.operators.dedup import (
-            exact_dedup, minhash_lsh_pairs, near_dup_dedup, simhash_pairs,
-            token_jaccard_pairs, unpersist_inputs)
+        from liblevenshtein_rust_spark.plans.pipeline import (
+            DedupConfig, dedup_pairs, dedup_survivors, run_dedup_pipeline)
         docs = spark.read.parquet(args.input)
         n_docs = docs.count()
+        cfg = DedupConfig(
+            checkpoint_dir=args.checkpoint_dir, run_id=args.run_id,
+            method=args.method, threshold_milli=args.threshold_milli,
+            max_hamming=args.max_hamming, group_col=args.group_col,
+            id_col=args.id_col, text_col=args.text_col,
+            hash_tokens=args.hash_tokens)
+        info = None
         if args.checkpoint_dir:
-            from liblevenshtein_rust_spark.plans.pipeline import (
-                DedupConfig, run_dedup_pipeline)
-            cfg = DedupConfig(
-                checkpoint_dir=args.checkpoint_dir, run_id=args.run_id,
-                method=args.method, threshold_milli=args.threshold_milli,
-                max_hamming=args.max_hamming, group_col=args.group_col,
-                id_col=args.id_col, text_col=args.text_col,
-                hash_tokens=args.hash_tokens)
             res = run_dedup_pipeline(spark, docs, cfg)
-            res["survivors"].write.mode("overwrite").parquet(args.output)
-            n_surv = spark.read.parquet(args.output).count()
-            print(json.dumps({"method": args.method, "docs": n_docs,
-                              "survivors": n_surv,
-                              "removed": n_docs - n_surv,
-                              "output": args.output,
-                              "stages": {k: v for k, v in
-                                         res["info"].items()}},
-                             default=str))
-            return 0
-        if args.method == "exact":
-            groups = exact_dedup(docs, id_col=args.id_col,
-                                 text_col=args.text_col)
-            surv = docs.join(
-                groups.select(F.col("rep_id").alias(args.id_col),
-                              (F.col("n_docs") - F.lit(1)).cast("int")
-                              .alias("n_removed")),
-                args.id_col)
-            pairs = None
+            surv, info = res["survivors"], res["info"]
         else:
-            if args.method == "jaccard":
-                pairs = token_jaccard_pairs(
-                    docs, id_col=args.id_col, text_col=args.text_col,
-                    group_col=args.group_col,
-                    min_ratio_milli=args.threshold_milli, persist=True,
-                    hash_tokens=args.hash_tokens)
-            elif args.method == "minhash":
-                pairs = minhash_lsh_pairs(
-                    docs, id_col=args.id_col, text_col=args.text_col,
-                    jaccard_threshold=args.threshold_milli / 1000.0)
-            else:
-                pairs = simhash_pairs(docs, id_col=args.id_col,
-                                      text_col=args.text_col,
-                                      max_hamming=args.max_hamming)
-            surv = near_dup_dedup(docs, pairs, id_col=args.id_col)
+            surv = dedup_survivors(docs, dedup_pairs(docs, cfg), cfg)
         surv.write.mode("overwrite").parquet(args.output)
-        if pairs is not None:
-            unpersist_inputs(pairs)
         n_surv = spark.read.parquet(args.output).count()
-        print(json.dumps({"method": args.method, "docs": n_docs,
-                          "survivors": n_surv,
-                          "removed": n_docs - n_surv,
-                          "output": args.output}))
+        summary = {"method": args.method, "docs": n_docs,
+                   "survivors": n_surv, "removed": n_docs - n_surv,
+                   "output": args.output}
+        if info is not None:
+            summary["stages"] = info
+        print(json.dumps(summary, default=str))
         return 0
 
     if args.cmd == "fs-link":

@@ -102,18 +102,19 @@ def _edge_checksum(df: DataFrame):
 
 
 def _lazy_checkpoint(df: DataFrame) -> DataFrame:
-    """Default ``checkpoint``: a LAZY localCheckpoint, materialized by the
-    first action that reads it (the bounded edge collect, or a
-    convergence checksum), so no round pays a job of its own for it."""
+    """A LAZY localCheckpoint, materialized by the first action that
+    reads it (the bounded edge collect, or a convergence checksum), so no
+    round pays a job of its own for it."""
     return df.localCheckpoint(eager=False)
 
 
-def _edges(pairs: DataFrame, src: str, dst: str, checkpoint) -> DataFrame:
-    """(u, v) edge rows of ``pairs`` through ``checkpoint``. Self-loops
-    and rows with a NULL endpoint are dropped (``u != v`` is not true for
-    either); duplicates are kept, since driver labeling ignores them."""
-    return checkpoint(pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-                      .where(F.col("u") != F.col("v")))
+def _edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
+    """Checkpointed (u, v) edge rows of ``pairs``. Self-loops and rows
+    with a NULL endpoint are dropped (``u != v`` is not true for either);
+    duplicates are kept, since driver labeling ignores them."""
+    return _lazy_checkpoint(
+        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .where(F.col("u") != F.col("v")))
 
 
 def _attach_singletons(out: DataFrame, nodes: DataFrame | None,
@@ -128,12 +129,12 @@ def _attach_singletons(out: DataFrame, nodes: DataFrame | None,
         .select(F.col(node_col), value))
 
 
-def _star_labels(edges: DataFrame, node_col: str, max_iterations: int,
-                 checkpoint) -> DataFrame:
+def _star_labels(edges: DataFrame, node_col: str,
+                 max_iterations: int) -> DataFrame:
     """(node_col, entity_id) for every endpoint of ``edges`` by iterated
     large-star / small-star rounds over the deduped edge set, which is
     checkpointed so that the first checksum materializes it once."""
-    edges = checkpoint(edges.dropDuplicates(["u", "v"]))
+    edges = _lazy_checkpoint(edges.dropDuplicates(["u", "v"]))
     # Check convergence every SECOND round: the star maps decrease a
     # monotone potential until fixpoint (Kiveris et al. SoCC'14), so no
     # 2-cycles exist and checksum equality two rounds apart implies the
@@ -144,7 +145,7 @@ def _star_labels(edges: DataFrame, node_col: str, max_iterations: int,
     # settles labels even mid-convergence).
     h_old = _edge_checksum(edges)
     for it in range(max_iterations):
-        edges = checkpoint(_small_star(_large_star(edges)))
+        edges = _lazy_checkpoint(_small_star(_large_star(edges)))
         if (it + 1) % 2 == 0 or it == max_iterations - 1:
             h_new = _edge_checksum(edges)
             if h_old == h_new:
@@ -162,7 +163,7 @@ def _star_labels(edges: DataFrame, node_col: str, max_iterations: int,
 
 
 def _components(pairs: DataFrame, src: str, dst: str, node_col: str,
-                max_iterations: int, checkpoint, small_graph_threshold: int):
+                max_iterations: int, small_graph_threshold: int):
     """The labeling core: returns (edges, labels), where ``edges`` is the
     checkpointed edge table and ``labels`` the (node_col, entity_id =
     min member id) assignment of every edge endpoint.
@@ -174,15 +175,14 @@ def _components(pairs: DataFrame, src: str, dst: str, node_col: str,
     the star rounds on the same checkpointed table (``labels`` is a Spark
     DataFrame), so the pair lineage runs once on either path. A threshold
     of 0 skips the collect."""
-    checkpoint = checkpoint or _lazy_checkpoint
-    edges = _edges(pairs, src, dst, checkpoint)
+    edges = _edges(pairs, src, dst)
     if small_graph_threshold:
         # Arrow both ways (toPandas here, createDataFrame(pandas) in the
         # callers): the Row-pickle path costs ~4x the driver-serial time
         pdf = edges.limit(small_graph_threshold + 1).toPandas()
         if len(pdf) <= small_graph_threshold:
             return edges, _uf_label_pandas(pdf, node_col)
-    return edges, _star_labels(edges, node_col, max_iterations, checkpoint)
+    return edges, _star_labels(edges, node_col, max_iterations)
 
 
 def connected_components(
@@ -193,18 +193,16 @@ def connected_components(
     dst: str = "id_b",
     node_col: str = "term_id",
     max_iterations: int = 20,
-    checkpoint=None,
     small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Return (node_col, entity_id): each node labeled with the minimum
     node id of its component.
 
     ``pairs`` are matched edges; ``nodes`` (optional) adds singleton nodes
-    that appear in no pair. ``checkpoint`` is an optional callable
-    DataFrame -> DataFrame used to persist/truncate lineage of the edge
-    table and between rounds (defaults to a lazy localCheckpoint; the
-    pipeline's clusters stage uses that default, and gets its kill-resume
-    durability from the stage checkpoint it writes).
+    that appear in no pair. The edge table, and the edges after each
+    star round, go through a lazy localCheckpoint that truncates their
+    lineage; the pipeline's clusters stage gets its kill-resume
+    durability from the stage checkpoint it writes.
 
     ``small_graph_threshold`` bounds the driver path: at most this many
     edge rows (self-loops and NULL endpoints dropped, duplicates counted)
@@ -219,7 +217,7 @@ def connected_components(
     strings; int64 ids (the dedup pipeline's doc ids) take 16 bytes.
     """
     edges, labels = _components(pairs, src, dst, node_col, max_iterations,
-                                checkpoint, small_graph_threshold)
+                                small_graph_threshold)
     if not isinstance(labels, DataFrame):
         dtype = edges.schema[0].dataType
         labels = edges.sparkSession.createDataFrame(labels, StructType([
@@ -236,7 +234,6 @@ def component_survivor_counts(
     dst: str = "id_b",
     node_col: str = "doc_id",
     max_iterations: int = 20,
-    checkpoint=None,
     small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """(node_col, n_removed) for every SURVIVING node: the min-id member
@@ -250,7 +247,7 @@ def component_survivor_counts(
     is never uploaded. On the star path they are a Spark aggregate and
     join over the assignment."""
     edges, labels = _components(pairs, src, dst, node_col, max_iterations,
-                                checkpoint, small_graph_threshold)
+                                small_graph_threshold)
     if isinstance(labels, DataFrame):
         sizes = labels.groupBy("entity_id").agg(
             (F.count(F.lit(1)) - F.lit(1)).cast("int").alias("n_removed"))
@@ -285,7 +282,6 @@ def incremental_components(
     node_col: str = "term_id",
     new_nodes: DataFrame | None = None,
     max_iterations: int = 20,
-    checkpoint=None,
     delta: bool = False,
 ) -> DataFrame:
     """Fold a batch of new edges into an existing component assignment,
@@ -317,12 +313,12 @@ def incremental_components(
     table. A plain-parquet deployment overwrites full state (O(total)
     write per batch); the delta keeps the write O(batch) too.
     """
-    # the edge lineage is typically a fuzzy join: the default lazy
-    # checkpoint persists the edge rows in the first job that computes
-    # them (the nested labeling's collect), and the endpoints, the
-    # subgraph union and the untouched-state anti-join read those blocks
-    # instead of re-deriving the join
-    edges = _edges(new_pairs, src, dst, checkpoint or _lazy_checkpoint)
+    # the edge lineage is typically a fuzzy join: the lazy checkpoint
+    # persists the edge rows in the first job that computes them (the
+    # nested labeling's collect), and the endpoints, the subgraph union
+    # and the untouched-state anti-join read those blocks instead of
+    # re-deriving the join
+    edges = _edges(new_pairs, src, dst)
     endpoints = (edges.select(F.col("u").alias(node_col))
                  .unionByName(edges.select(F.col("v").alias(node_col)))
                  .distinct())
@@ -337,8 +333,7 @@ def incremental_components(
             new_nodes.select(F.col(node_col))).distinct()
     sub_assign = connected_components(
         star.unionByName(edges), sub_nodes, src="u", dst="v",
-        node_col=node_col, max_iterations=max_iterations,
-        checkpoint=checkpoint)
+        node_col=node_col, max_iterations=max_iterations)
     if delta:
         return sub_assign
     untouched = old_clusters.join(touched, "entity_id", "left_anti")

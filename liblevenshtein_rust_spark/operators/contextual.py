@@ -39,8 +39,7 @@ from liblevenshtein_rust_spark.operators.fuzzy_join import fuzzy_join
 
 def visible_contexts(tree: DataFrame, *, id_col: str = "context_id",
                      parent_col: str = "parent_id",
-                     max_depth: int = 64,
-                     checkpoint=None) -> DataFrame:
+                     max_depth: int = 64) -> DataFrame:
     """Ancestor closure of a scope tree: (context_id, visible_id) — one
     row per (scope, scope-it-can-see). A scope sees itself and every
     ancestor up to its root (context_tree.rs visible_contexts).
@@ -48,19 +47,18 @@ def visible_contexts(tree: DataFrame, *, id_col: str = "context_id",
     Path-doubling self-join: round k covers ancestors up to distance 2^k,
     so a depth-D tree converges in ceil(log2 D) rounds (each one shuffled
     self-join + dedupe + a count for the convergence check — the same
-    driver-action budget as connected_components). Per-round
-    ``checkpoint`` (default localCheckpoint) keeps lineage flat. Raises
+    driver-action budget as connected_components). An eager
+    localCheckpoint per round keeps lineage flat. Raises
     on cycles (mutual visibility between distinct scopes)."""
     import math
 
-    ck = checkpoint or (lambda df: df.localCheckpoint(eager=True))
     edges = tree.select(F.col(id_col).alias(id_col),
                         F.col(parent_col).alias("visible_id"))
     closure = tree.select(F.col(id_col).alias(id_col),
                           F.col(id_col).alias("visible_id")) \
         .unionByName(edges.where(F.col("visible_id").isNotNull())) \
         .dropDuplicates([id_col, "visible_id"])
-    closure = ck(closure)
+    closure = closure.localCheckpoint(eager=True)
     prev = closure.count()
     rounds = max(1, math.ceil(math.log2(max(max_depth, 2))) + 1)
     converged = False
@@ -71,8 +69,9 @@ def visible_contexts(tree: DataFrame, *, id_col: str = "context_id",
             .select(F.col(f"a.{id_col}").alias(id_col),
                     F.col("b.visible_id").alias("visible_id"))
         )
-        closure = ck(closure.unionByName(grown)
-                     .dropDuplicates([id_col, "visible_id"]))
+        closure = (closure.unionByName(grown)
+                   .dropDuplicates([id_col, "visible_id"])
+                   .localCheckpoint(eager=True))
         cnt = closure.count()
         if cnt == prev:
             converged = True

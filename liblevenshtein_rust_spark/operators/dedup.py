@@ -2,10 +2,12 @@
 
 Exact (hash), MinHash+LSH, SimHash, and token-set Jaccard near-dup —
 the scale path for "which documents are the same/nearly the same", the
-document-level sibling of the turn-level fuzzy join. All JVM-side column
-expressions except nothing: even the MinHash signatures are built with
-Spark's xxhash64 + aggregate higher-order functions, so there is no
-Python in any of these paths.
+document-level sibling of the turn-level fuzzy join. Every path is
+JVM-side column expressions, with no Python: even the MinHash and SimHash
+signatures are Spark xxhash64 columns folded by one hash aggregate.
+MinHash and SimHash run their banded self-join through the fuzzy join's
+core (``fuzzy_join._blocked_join``) and supply only their band-key table,
+their payload (shingle array or signature) and their verify.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from liblevenshtein_rust_spark.functions.canonicalize import canon_text
+from liblevenshtein_rust_spark.operators.fuzzy_join import _blocked_join
 from liblevenshtein_rust_spark.operators.skew import spread_input
 
 
@@ -149,43 +152,25 @@ def minhash_lsh_pairs(docs: DataFrame, *, id_col: str = "doc_id",
         band_key_sql = (
             f"transform(sequence(0, {bands - 1}), b -> "
             f"concat(b, ':', array_join(slice(signature, b * {rows_per} + 1, {rows_per}), ',')))")
-    band_keys = F.expr(band_key_sql)
-    # r6 (guide §2.4 "two operations keyed the same way can share one
-    # exchange"): pre-partition the keyed table on the join key so BOTH
-    # sides of the self-join require exactly this exchange — AQE stage
-    # reuse then computes the signature pipeline ONCE instead of once per
-    # side (profiled: two concurrent 1.9 s/1.7 s signature stages at
-    # sf0.1 collapsed to one).
-    keyed = sigs.select(F.col(id_col).alias("_bid"),
-                        F.explode(band_keys).alias("_bkey")) \
-        .repartition("_bkey")
-    l = keyed.withColumnRenamed("_bid", "id_a").alias("lk")
-    r = keyed.withColumnRenamed("_bid", "id_b").alias("rk")
-    cand = (
-        l.join(r, F.col("lk._bkey") == F.col("rk._bkey"))
-        .select(F.col("lk.id_a").alias("id_a"), F.col("rk.id_b").alias("id_b"))
-        .where(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    keys = sigs.selectExpr(f"`{id_col}` AS _bid",
+                           f"explode({band_key_sql}) AS _bkey")
     # verify side spread too (r6): this subtree is broadcast-built, and
     # without the spread the interpreted shingle lambda ran on ONE task
     # (profiled 2.4 s serial — the whole query's critical path)
     toks = spread_input(docs.select(id_col, text_col)).select(
-        F.col(id_col), F.array_distinct(_shingles(text_col, shingle_k)).alias("_t"))
-    a = toks.select(F.col(id_col).alias("id_a"), F.col("_t").alias("_ta"))
-    b = toks.select(F.col(id_col).alias("id_b"), F.col("_t").alias("_tb"))
-    verified = (
-        cand.join(a, "id_a").join(b, "id_b")
-        .select(
-            "id_a", "id_b",
-            F.size(F.array_intersect("_ta", "_tb")).alias("n_common"),
-            F.size(F.array_union("_ta", "_tb")).alias("n_union"),
-        )
+        F.col(id_col), _shingles(text_col, shingle_k).alias("_t"))
+
+    def verify(with_t: DataFrame) -> DataFrame:
         # integer comparison: common/union >= threshold
-        .where(F.col("n_common") * F.lit(1000) >=
-               F.lit(int(jaccard_threshold * 1000)) * F.col("n_union"))
-    )
-    return verified
+        return with_t.selectExpr(
+            "*", "size(array_intersect(_ta, _tb)) AS n_common",
+            "size(array_union(_ta, _tb)) AS n_union",
+        ).where(f"n_common * 1000 >= {int(jaccard_threshold * 1000)} * n_union")
+
+    return _blocked_join((keys, keys), toks, None, (id_col, "_t") * 2, verify,
+                         [("_ida", "id_a"), ("_idb", "id_b"),
+                          ("n_common", "n_common"), ("n_union", "n_union")],
+                         dedupe=False)
 
 
 def token_jaccard_pairs(docs: DataFrame, *, id_col: str = "doc_id",
@@ -334,9 +319,8 @@ def token_jaccard_pairs(docs: DataFrame, *, id_col: str = "doc_id",
 def unpersist_inputs(df: DataFrame) -> None:
     """Release the cached frames a ``persist=True`` operator attached to
     its result: token_jaccard_pairs' per-document token table and prefix
-    table, and the inputs
-    (plus a self-join's key table) of every fuzzy_join.py edit-distance
-    join. Safe on any DataFrame; call after the result is materialized."""
+    table, and the inputs of every fuzzy_join.py edit-distance join.
+    Safe on any DataFrame; call after the result is materialized."""
     for cached in getattr(df, "_lls_persisted_inputs", []) or []:
         cached.unpersist()
 
@@ -433,28 +417,21 @@ def simhash_pairs(docs: DataFrame, *, id_col: str = "doc_id",
         # part of an array<...> type and errors
         piece = "sig" if width >= 64 else f"shiftright(sig, {lo}) & {(1 << width) - 1}"
         band_exprs.append(f"concat('{b}:', cast({piece} as string))")
-    bands = F.expr(f"array({', '.join(band_exprs)})")
-    # same exchange-reuse shape as minhash_lsh_pairs: one signature
-    # computation feeds both join sides through a shared _bkey exchange
-    keyed = sigs.select(F.col(id_col).alias("_bid"), F.col("sig"),
-                        F.explode(bands).alias("_bkey")) \
-        .repartition("_bkey")
-    l = keyed.select(F.col("_bid").alias("id_a"), F.col("sig").alias("_sa"), "_bkey").alias("lk")
-    r = keyed.select(F.col("_bid").alias("id_b"), F.col("sig").alias("_sb"), "_bkey").alias("rk")
-    cand = (
-        l.join(r, F.col("lk._bkey") == F.col("rk._bkey"))
-        .where(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("hamming", F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-    return cand
+    keys = sigs.selectExpr(f"`{id_col}` AS _bid",
+                           f"explode(array({', '.join(band_exprs)})) AS _bkey")
+
+    def verify(with_sig: DataFrame) -> DataFrame:
+        return with_sig.selectExpr("*", "bit_count(_ta ^ _tb) AS hamming") \
+            .where(f"hamming <= {int(max_hamming)}")
+
+    return _blocked_join((keys, keys), sigs, None, (id_col, "sig") * 2, verify,
+                         [("_ida", "id_a"), ("_idb", "id_b"),
+                          ("hamming", "hamming")], dedupe=False)
 
 
 def near_dup_dedup(docs: DataFrame, pairs: DataFrame, *,
                    id_col: str = "doc_id", src: str = "id_a",
-                   dst: str = "id_b", checkpoint=None) -> DataFrame:
+                   dst: str = "id_b") -> DataFrame:
     """End-to-end near-duplicate REMOVAL — the training-data-pipeline end
     game the pair joins feed: connected components over near-dup pairs
     (large-star/small-star), keep exactly one canonical document per
@@ -471,6 +448,5 @@ def near_dup_dedup(docs: DataFrame, pairs: DataFrame, *,
         component_survivor_counts)
 
     survivors = component_survivor_counts(
-        pairs, docs.select(id_col), src=src, dst=dst, node_col=id_col,
-        checkpoint=checkpoint)
+        pairs, docs.select(id_col), src=src, dst=dst, node_col=id_col)
     return docs.join(survivors, id_col)

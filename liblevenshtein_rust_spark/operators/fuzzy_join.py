@@ -7,13 +7,15 @@ Re-expresses the reference's automaton-intersection query
     explode blocking keys  ->  equi-join on key hash  ->  dedupe pairs
       ->  attach texts  ->  vectorized banded-DP verify  ->  filter d <= n
 
-Every edit-distance join here (A×B, self, weighted-cost, prefix) runs
+Every edit-distance join here (A×B, self, weighted-cost, prefix), and
+the MinHash, SimHash and cosine LSH joins (dedup.py, similarity.py), runs
 through ONE private core, ``_blocked_join``: persist, the probe × index
-key join, the pair dedupe and the text attach happen there only. An entry
-point supplies just its (probe, index) key tables, its verify kernel and
-its output column names; the salted key join (skew.py) plugs into the
-core. A self-join is the same shape applied to one table: the reference's
-query automaton run against its own dictionary.
+key join, the one-exchange rule for a self-join over one key table, the
+pair dedupe and the payload attach happen there only. An entry point
+supplies just its (probe, index) key tables, its payload table, its
+verify kernel and its output column names; the salted key join (skew.py)
+plugs into the core. A self-join is the same shape applied to one table:
+the reference's query automaton run against its own dictionary.
 
 Never a cartesian product: blocking keys prune exactly like the automaton
 prunes dictionary subtrees. Scale notes:
@@ -112,24 +114,28 @@ def _explode_keys(df: DataFrame, id_col: str, keys_sql: str) -> DataFrame:
 
 def _blocked_join(keys, left: DataFrame, right: DataFrame | None,
                   cols: tuple[str, str, str, str], verify,
-                  out_cols: tuple[str, str, str, str, str], *,
+                  out_cols: list[tuple[str, str]], *,
                   dedupe: bool = True, persist: bool = False,
                   key_join=None) -> DataFrame:
     """The one blocked-join core: key tables -> distinct candidate id
-    pairs -> texts attached as (_ida, _ta, _idb, _tb) -> ``verify`` (adds
-    and filters the score column ``out_cols[4]``) -> pair columns renamed
-    to ``out_cols[:4]``. ``keys`` is the (left, right) pair of exploded
-    (_bid, _bkey) tables: probe keys of ``left``, index keys of ``right``.
-    ``right is None`` is a self-join of ``left``: it keeps the pairs with
-    _ida < _idb, exact because every within-n pair matches probe × index
-    in both orientations (tests/test_blocking.py). ``cols`` names the
-    (id, text) columns of left, then right.
+    pairs -> payloads attached as (_ida, _ta, _idb, _tb) -> ``verify``
+    (adds and filters its score columns) -> the final projection
+    ``out_cols``, a list of (internal column, output name) pairs.
+    ``keys`` is the (left, right) pair of exploded (_bid, _bkey) tables:
+    probe keys of ``left``, index keys of ``right``. ``right is None`` is
+    a self-join of ``left``: it keeps the pairs with _ida < _idb, exact
+    because every matching pair meets in both orientations
+    (tests/test_blocking.py). ``cols`` names the (id, payload) columns of
+    left, then right; a payload is a text, a token array, a signature or
+    a vector, whatever ``verify`` compares. When both key tables are one
+    DataFrame, both join sides read it through one exchange.
 
     ``key_join`` swaps in another source of the key-match (_ida, _idb)
-    rows (the salted join). ``dedupe=False`` skips the per-id text
+    rows (the salted join). ``dedupe=False`` skips the per-id payload
     collapse (an Exchange + SortAggregate per side) for ids unique by
-    construction. ``persist`` caches the inputs, each read twice (key
-    explode + text attach), and attaches them to the result for
+    construction, or keeps one output row per pair of input rows where
+    ids repeat. ``persist`` caches the inputs, each read twice (key
+    explode + payload attach), and attaches them to the result for
     ``operators.dedup.unpersist_inputs``.
     """
     self_join = right is None
@@ -138,6 +144,14 @@ def _blocked_join(keys, left: DataFrame, right: DataFrame | None,
     for df in cached:
         df.persist()
     lk, rk = keys
+    if lk is rk:
+        # one exchange per self-join over one key table: pre-partitioned
+        # on the join key, both sides require exactly this exchange, AQE
+        # reuses it, and the key table, with the signature aggregate or
+        # Python UDF that built it, is computed once instead of once per
+        # side (r6 profile of MinHash at sf0.1: two concurrent 1.9 s /
+        # 1.7 s signature stages became one)
+        lk = rk = lk.repartition("_bkey")
     if key_join is not None:
         pairs = key_join(lk, rk)
     else:
@@ -147,18 +161,24 @@ def _blocked_join(keys, left: DataFrame, right: DataFrame | None,
     if self_join:
         pairs = pairs.where("_ida < _idb")
     pairs = pairs.dropDuplicates(["_ida", "_idb"])
-    l_id, l_text, r_id, r_text = cols
-    lt = left.selectExpr(f"`{l_id}` AS _ida", f"`{l_text}` AS _ta")
-    rt = right.selectExpr(f"`{r_id}` AS _idb", f"`{r_text}` AS _tb")
+    l_id, l_pay, r_id, r_pay = cols
+    lt = left.selectExpr(f"`{l_id}` AS _ida", f"`{l_pay}` AS _ta")
+    rt = right.selectExpr(f"`{r_id}` AS _idb", f"`{r_pay}` AS _tb")
     if dedupe:
         lt = lt.dropDuplicates(["_ida"])
         rt = rt.dropDuplicates(["_idb"])
     scored = verify(pairs.join(lt, "_ida").join(rt, "_idb"))
-    names = zip(("_ida", "_ta", "_idb", "_tb"), out_cols)
-    out = scored.selectExpr(*(f"{c} AS `{o}`" for c, o in names), out_cols[4])
+    out = scored.selectExpr(*(f"`{c}` AS `{o}`" for c, o in out_cols))
     if cached:
         out._lls_persisted_inputs = cached
     return out
+
+
+def _pair_cols(cols: tuple[str, str, str, str],
+               score: str) -> list[tuple[str, str]]:
+    """``out_cols`` of an edit-distance join: both (id, text) pairs under
+    the caller's names, then the score column."""
+    return list(zip(("_ida", "_ta", "_idb", "_tb", score), (*cols, score)))
 
 
 def _edit_distance_verify(n: int, variant: str, subst=None):
@@ -266,7 +286,7 @@ def fuzzy_join(
     cols = (q_id, q_text, d_id, d_text)
     return _blocked_join(keys, queries, dictionary, cols,
                          _edit_distance_verify(n, variant, substitutions),
-                         cols + ("distance",), persist=persist)
+                         _pair_cols(cols, "distance"), persist=persist)
 
 
 def fuzzy_self_join(
@@ -287,7 +307,9 @@ def fuzzy_self_join(
 
     Output: id_a, term_a, id_b, term_b, distance. The terms' probe keys
     are joined against their own index keys, as ``fuzzy_join`` joins a
-    query table against a dictionary. ``salt_threshold`` spreads index
+    query table against a dictionary; deletion keys have no probe/index
+    split, so ``method="deletion"`` builds one key table and joins it
+    with itself through one exchange. ``salt_threshold`` spreads index
     keys with more members than the threshold over ``salt_groups``
     reducer keys (operators/skew.py) instead of a single one.
 
@@ -301,14 +323,18 @@ def fuzzy_self_join(
     text attaches read, so any upstream lineage (e.g. a build_dictionary
     aggregation) runs once. Release via ``operators.dedup.unpersist_inputs``.
     """
-    keys = tuple(_keys_for(terms, id_col, text_col, n, variant, method,
-                           role=role, subst=substitutions)
-                 for role in ("probe", "index"))
+    def keys(role: str) -> DataFrame:
+        return _keys_for(terms, id_col, text_col, n, variant, method,
+                         role=role, subst=substitutions)
+
+    index = keys("index")
+    probe = index if _resolve_method(method) == "deletion" else keys("probe")
     salted = None if salt_threshold is None else partial(
         salted_key_join, hot_threshold=salt_threshold, n_groups=salt_groups)
-    return _blocked_join(keys, terms, None, (id_col, text_col) * 2,
+    return _blocked_join((probe, index), terms, None, (id_col, text_col) * 2,
                          _edit_distance_verify(n, variant, substitutions),
-                         ("id_a", "term_a", "id_b", "term_b", "distance"),
+                         _pair_cols(("id_a", "term_a", "id_b", "term_b"),
+                                    "distance"),
                          dedupe=not unique_ids, persist=persist,
                          key_join=salted)
 
@@ -376,7 +402,7 @@ def fuzzy_prefix_join(
 
     cols = (q_id, q_text, d_id, d_text)
     return _blocked_join((qk, dk), queries, dictionary, cols, verify,
-                         cols + ("distance",))
+                         _pair_cols(cols, "distance"))
 
 
 def fuzzy_top_k(matches: DataFrame, k: int, query_col: str = "q_id",
@@ -500,4 +526,4 @@ def weighted_fuzzy_join(
 
     cols = (q_id, q_text, d_id, d_text)
     return _blocked_join(keys, queries, dictionary, cols, verify,
-                         cols + ("cost",), persist=persist)
+                         _pair_cols(cols, "cost"), persist=persist)

@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from liblevenshtein_rust_spark.operators.fuzzy_join import _blocked_join
+
 
 def _dot(a: str, b: str) -> F.Column:
     return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), 0D, (s, v) -> s + v)")
@@ -189,6 +191,14 @@ def _band_key_expr(n_planes: int, n_bands: int) -> str:
             f"xxhash64(b, (_sig >> (b * {rows_per})) & {(1 << rows_per) - 1}))")
 
 
+def _band_keys(df: DataFrame, id_col: str, vec_col: str, sig_udf,
+               n_planes: int, n_bands: int) -> DataFrame:
+    """Exploded (_bid, _bkey) band-key table of ``df``'s vectors."""
+    return df.select(F.col(id_col).alias("_bid"),
+                     sig_udf(F.col(vec_col)).alias("_sig")) \
+        .selectExpr("_bid", f"explode({_band_key_expr(n_planes, n_bands)}) AS _bkey")
+
+
 def cosine_top_k_lsh(queries: DataFrame, corpus: DataFrame, k: int,
                      *, q_id: str = "q_id", q_vec: str = "q_vec",
                      c_id: str = "c_id", c_vec: str = "c_vec",
@@ -199,22 +209,12 @@ def cosine_top_k_lsh(queries: DataFrame, corpus: DataFrame, k: int,
     corpora where brute force is infeasible (candidate count is
     |collisions|, not |Q| x |C|). Output schema matches cosine_top_k."""
     sig_udf = make_signature_udf(n_planes, seed)
-
-    def keyed(df, idc, vecc, alias):
-        sig = sig_udf(F.col(vecc))
-        bands = F.expr(_band_key_expr(n_planes, n_bands))
-        return (df.select(F.col(idc), F.col(vecc), sig.alias("_sig"))
-                  .select(F.col(idc), F.col(vecc), F.explode(bands).alias("_bkey"))
-                  .alias(alias))
-    qk = keyed(queries, q_id, q_vec, "qk")
-    ck = keyed(corpus, c_id, c_vec, "ck")
-    cand = (
-        qk.join(ck, F.col("qk._bkey") == F.col("ck._bkey"))
-        .select(F.col(f"qk.{q_id}").alias(q_id), F.col(f"qk.{q_vec}").alias(q_vec),
-                F.col(f"ck.{c_id}").alias(c_id), F.col(f"ck.{c_vec}").alias(c_vec))
-        .dropDuplicates([q_id, c_id])
-    )
-    scored = cand.select(F.col(q_id), F.col(c_id), _cosine(q_vec, c_vec).alias("sim"))
+    scored = _blocked_join(
+        (_band_keys(queries, q_id, q_vec, sig_udf, n_planes, n_bands),
+         _band_keys(corpus, c_id, c_vec, sig_udf, n_planes, n_bands)),
+        queries, corpus, (q_id, q_vec, c_id, c_vec),
+        lambda pairs: pairs.withColumn("sim", _cosine("_ta", "_tb")),
+        [("_ida", q_id), ("_idb", c_id), ("sim", "sim")])
     win = Window.partitionBy(q_id).orderBy(F.col("sim").desc(), F.col(c_id).asc())
     return (
         scored.withColumn("rank", F.row_number().over(win))
@@ -239,9 +239,11 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float,
     method="lsh": banded random-hyperplane buckets — only colliding pairs
     are scored, the same signature/band machinery as cosine_top_k_lsh;
     recall < 1 by design and measured against exact in
-    tests/test_similarity.py. The band-key join ships (id, int64) only;
-    vectors are attached to surviving candidate pairs afterwards (the
-    attach-late shape of operators/fuzzy_join).
+    tests/test_similarity.py. It runs through the fuzzy join's core
+    (``fuzzy_join._blocked_join``): the band-key join ships (id, int64)
+    only, the one key table is exchanged once so the signature UDF runs
+    once, and vectors are attached to surviving candidate pairs
+    afterwards.
 
     Output: (id_a, id_b, sim).
     """
@@ -262,24 +264,13 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float,
                     (_dot("_va", "_vb") / (F.col("_na") * F.col("_nb")))
                     .alias("sim"))
                 .where(F.col("sim") >= float(threshold)))
-    elif method == "lsh":
-        sig_udf = make_signature_udf(n_planes, seed)
-        keyed = (
-            df.select(F.col(id_col).alias("_id"),
-                      sig_udf(F.col(vec_col)).alias("_sig"))
-            .select("_id", F.explode(
-                F.expr(_band_key_expr(n_planes, n_bands))).alias("_bkey"))
-        )
-        lk = keyed.select(F.col("_id").alias("id_a"), "_bkey")
-        rk = keyed.select(F.col("_id").alias("id_b"), "_bkey")
-        pairs = (lk.join(rk, "_bkey").where(F.col("id_a") < F.col("id_b"))
-                 .dropDuplicates(["id_a", "id_b"]))
-        cand = (pairs
-                .join(df.select(F.col(id_col).alias("id_a"),
-                                F.col(vec_col).alias("_va")), "id_a")
-                .join(df.select(F.col(id_col).alias("id_b"),
-                                F.col(vec_col).alias("_vb")), "id_b"))
-    else:
+    if method != "lsh":
         raise ValueError(f"unknown method {method!r}")
-    return (cand.select("id_a", "id_b", _cosine("_va", "_vb").alias("sim"))
-            .where(F.col("sim") >= float(threshold)))
+    keys = _band_keys(df, id_col, vec_col, make_signature_udf(n_planes, seed),
+                      n_planes, n_bands)
+    return _blocked_join((keys, keys), df, None, (id_col, vec_col) * 2,
+                         lambda pairs: pairs.withColumn(
+                             "sim", _cosine("_ta", "_tb"))
+                         .where(F.col("sim") >= float(threshold)),
+                         [("_ida", "id_a"), ("_idb", "id_b"), ("sim", "sim")],
+                         dedupe=False)

@@ -49,6 +49,13 @@ from pyspark.sql import functions as F
 from liblevenshtein_rust_spark.functions.canonicalize import canon_text, phonetic_canon, term_id
 from liblevenshtein_rust_spark.functions.distance import STANDARD
 from liblevenshtein_rust_spark.operators.cluster import connected_components
+from liblevenshtein_rust_spark.operators.dedup import (
+    exact_dedup,
+    minhash_lsh_pairs,
+    near_dup_dedup,
+    simhash_pairs,
+    token_jaccard_pairs,
+)
 from liblevenshtein_rust_spark.operators.fuzzy_join import build_dictionary, fuzzy_self_join
 from liblevenshtein_rust_spark.session import fs_exists, fs_write_bytes, fs_write_parquet
 
@@ -62,7 +69,6 @@ class PipelineConfig:
     method: str = "hybrid"   # needs no dataset statistic ("auto" = alias)
     phonetic: bool = False
     table_format: str = "parquet"   # "iceberg" on clusters with a catalog
-    shuffle_partitions: int | None = None
     cc_max_iterations: int = 20
     #: bucket count for keyed checkpoint stages (terms/scored_pairs/
     #: clusters, bucketed+sorted by their join key via saveAsTable).
@@ -365,6 +371,39 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
     }
 
 
+def dedup_pairs(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """The ``dedup_pairs`` stage: near-dup pairs of ``docs`` by
+    ``cfg.method`` (exact fingerprint groups for method="exact")."""
+    if cfg.method == "exact":
+        return exact_dedup(docs, id_col=cfg.id_col, text_col=cfg.text_col)
+    if cfg.method == "jaccard":
+        return token_jaccard_pairs(
+            docs, id_col=cfg.id_col, text_col=cfg.text_col,
+            group_col=cfg.group_col, min_ratio_milli=cfg.threshold_milli,
+            hash_tokens=cfg.hash_tokens)
+    if cfg.method == "minhash":
+        return minhash_lsh_pairs(
+            docs, id_col=cfg.id_col, text_col=cfg.text_col,
+            jaccard_threshold=cfg.threshold_milli / 1000.0)
+    if cfg.method == "simhash":
+        return simhash_pairs(docs, id_col=cfg.id_col, text_col=cfg.text_col,
+                             max_hamming=cfg.max_hamming)
+    raise ValueError(f"unknown dedup method {cfg.method!r}")
+
+
+def dedup_survivors(docs: DataFrame, pairs: DataFrame,
+                    cfg: DedupConfig) -> DataFrame:
+    """The ``dedup_survivors`` stage: the rows of ``docs`` that survive
+    ``pairs`` (a ``dedup_pairs`` output), plus ``n_removed``."""
+    if cfg.method == "exact":
+        return docs.join(
+            pairs.select(F.col("rep_id").alias(cfg.id_col),
+                         (F.col("n_docs") - F.lit(1)).cast("int")
+                         .alias("n_removed")),
+            cfg.id_col)
+    return near_dup_dedup(docs, pairs, id_col=cfg.id_col)
+
+
 def run_dedup_pipeline(spark: SparkSession, docs: DataFrame,
                        cfg: DedupConfig) -> dict:
     """Run (or resume) the checkpointed document-dedup pipeline:
@@ -379,44 +418,9 @@ def run_dedup_pipeline(spark: SparkSession, docs: DataFrame,
     100-TB corpus the pair stage is the expensive one — checkpointing it
     means survivor-policy changes (or downstream re-reads) never re-run
     the join."""
-    from liblevenshtein_rust_spark.operators.dedup import (
-        exact_dedup, minhash_lsh_pairs, near_dup_dedup, simhash_pairs,
-        token_jaccard_pairs)
-
     r = _Runner(spark, cfg)
-
-    def s_pairs():
-        if cfg.method == "exact":
-            return exact_dedup(docs, id_col=cfg.id_col,
-                               text_col=cfg.text_col)
-        if cfg.method == "jaccard":
-            return token_jaccard_pairs(
-                docs, id_col=cfg.id_col, text_col=cfg.text_col,
-                group_col=cfg.group_col,
-                min_ratio_milli=cfg.threshold_milli,
-                hash_tokens=cfg.hash_tokens)
-        if cfg.method == "minhash":
-            return minhash_lsh_pairs(
-                docs, id_col=cfg.id_col, text_col=cfg.text_col,
-                jaccard_threshold=cfg.threshold_milli / 1000.0)
-        if cfg.method == "simhash":
-            return simhash_pairs(docs, id_col=cfg.id_col,
-                                 text_col=cfg.text_col,
-                                 max_hamming=cfg.max_hamming)
-        raise ValueError(f"unknown dedup method {cfg.method!r}")
-
-    pairs = r.stage("dedup_pairs", s_pairs)
-
-    def s_survivors():
-        if cfg.method == "exact":
-            return docs.join(
-                pairs.select(F.col("rep_id").alias(cfg.id_col),
-                             (F.col("n_docs") - F.lit(1)).cast("int")
-                             .alias("n_removed")),
-                cfg.id_col)
-        return near_dup_dedup(docs, pairs, id_col=cfg.id_col)
-
-    survivors = r.stage("dedup_survivors", s_survivors)
-
+    pairs = r.stage("dedup_pairs", lambda: dedup_pairs(docs, cfg))
+    survivors = r.stage("dedup_survivors",
+                        lambda: dedup_survivors(docs, pairs, cfg))
     r.write_metrics()
     return {"pairs": pairs, "survivors": survivors, "info": r.info}

@@ -24,12 +24,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from liblevenshtein_rust_spark.functions.canonicalize import canon_text, term_id
 from liblevenshtein_rust_spark.operators.cluster import (
     connected_components,
     incremental_components,
 )
-from liblevenshtein_rust_spark.operators.fuzzy_join import fuzzy_join
+from liblevenshtein_rust_spark.operators.fuzzy_join import (
+    build_dictionary,
+    fuzzy_join,
+)
 
 
 def _read_state(spark: SparkSession, path: str) -> DataFrame | None:
@@ -50,12 +52,7 @@ def incremental_upsert(batch_df: DataFrame, state_dir: str, *,
     pairs_path = os.path.join(state_dir, "pairs")
     clusters_path = os.path.join(state_dir, "clusters")
 
-    new_terms = (
-        batch_df.select(canon_text("text").alias("term"))
-        .where(F.col("term").isNotNull() & (F.length("term") > 0))
-        .groupBy("term").agg(F.count(F.lit(1)).alias("freq"))
-        .select(term_id("term").alias("term_id"), "term", "freq")
-    )
+    new_terms = build_dictionary(batch_df, "text")
     old_terms = _read_state(spark, terms_path)
     if old_terms is not None:
         fresh = new_terms.join(old_terms.select("term_id"), "term_id", "left_anti")
@@ -72,18 +69,20 @@ def incremental_upsert(batch_df: DataFrame, state_dir: str, *,
     # incremental candidate generation: fresh (probe) x all (index)
     matches = fuzzy_join(fresh.selectExpr("term_id AS q_id", "term AS q_text"),
                          all_terms, n=n, variant=variant, method=method)
+    # materialized once: the pair state and the cluster fold both read
+    # this batch's pairs, and neither may re-run the fuzzy join
     new_pairs = matches.where(F.col("q_id") != F.col("term_id")).select(
         F.least("q_id", "term_id").alias("id_a"),
         F.greatest("q_id", "term_id").alias("id_b"),
         "distance",
-    ).dropDuplicates(["id_a", "id_b"])
+    ).dropDuplicates(["id_a", "id_b"]).localCheckpoint(eager=True)
 
     old_pairs = _read_state(spark, pairs_path)
-    all_pairs = (
-        old_pairs.unionByName(new_pairs).dropDuplicates(["id_a", "id_b"])
-        if old_pairs is not None else new_pairs
-    )
-    all_pairs = all_pairs.localCheckpoint(eager=True)
+    all_pairs = new_pairs
+    if old_pairs is not None:
+        # materialize BEFORE overwriting the pairs directory it reads
+        all_pairs = old_pairs.unionByName(new_pairs) \
+            .dropDuplicates(["id_a", "id_b"]).localCheckpoint(eager=True)
 
     # cluster maintenance: with existing state, recluster ONLY components
     # touched by this batch's edges (incremental_components — per-batch

@@ -198,7 +198,9 @@ def test_cli_query_exact_output(tmp_path, capsys):
 
 def test_cli_dedup_methods(spark, tmp_path, capsys):
     """`dedup` writes survivors + n_removed for every method; exact and
-    jaccard agree on a corpus with byte-identical dups and one near-dup."""
+    jaccard agree on a corpus with byte-identical dups and one near-dup.
+    Every method writes the same survivor rows with and without
+    --checkpoint-dir."""
     from liblevenshtein_rust_spark.cli import main
 
     rows = [
@@ -211,34 +213,38 @@ def test_cli_dedup_methods(spark, tmp_path, capsys):
     spark.createDataFrame(rows, "doc_id long, text string") \
         .write.parquet(inp)
 
-    out_exact = str(tmp_path / "surv_exact")
-    rc = main(["dedup", "--input", inp, "--output", out_exact,
-               "--method", "exact"])
-    assert rc == 0
-    info = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    def dedup(method, *extra):
+        """Run `dedup` without and with --checkpoint-dir; returns the
+        first run's summary and survivor rows once both runs agree."""
+        out = str(tmp_path / f"surv_{method}")
+        rc = main(["dedup", "--input", inp, "--output", out,
+                   "--method", method, *extra])
+        assert rc == 0
+        info = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        surv = {r.doc_id: r.n_removed
+                for r in spark.read.parquet(out).collect()}
+        rc = main(["dedup", "--input", inp, "--output", out + "_ck",
+                   "--method", method, *extra,
+                   "--checkpoint-dir", str(tmp_path / "ck"),
+                   "--run-id", method])
+        assert rc == 0
+        capsys.readouterr()
+        assert sorted(map(tuple, spark.read.parquet(out + "_ck").collect())) \
+            == sorted(map(tuple, spark.read.parquet(out).collect())), method
+        return info, surv
+
+    info, surv = dedup("exact")
     assert info["docs"] == 4 and info["removed"] == 1
-    surv = {r.doc_id: r.n_removed
-            for r in spark.read.parquet(out_exact).collect()}
     assert surv == {1: 1, 3: 0, 4: 0}
 
-    out_j = str(tmp_path / "surv_jaccard")
-    rc = main(["dedup", "--input", inp, "--output", out_j,
-               "--method", "jaccard", "--threshold-milli", "800"])
-    assert rc == 0
-    info = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    info, surv = dedup("jaccard", "--threshold-milli", "800")
     # doc 3 is a near-dup of 1/2 at J >= 0.8: one cluster {1,2,3}
     assert info["survivors"] == 2
-    surv = {r.doc_id: r.n_removed
-            for r in spark.read.parquet(out_j).collect()}
     assert surv == {1: 2, 4: 0}
 
     for method, extra in (("minhash", ["--threshold-milli", "800"]),
                           ("simhash", ["--max-hamming", "6"])):
-        out_m = str(tmp_path / f"surv_{method}")
-        rc = main(["dedup", "--input", inp, "--output", out_m,
-                   "--method", method, *extra])
-        assert rc == 0
-        info = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        info, _ = dedup(method, *extra)
         # byte-identical docs 1/2 are near-dups under ANY method
         assert info["survivors"] <= 3 and 1 <= info["removed"] <= 2
 

@@ -341,3 +341,104 @@ def test_dedup_pipeline_job_count(spark, tmp_path, sf_dir):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = list(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
     assert len(jobs) == DEDUP_JOBS, sorted(jobs)
+
+
+def _final_plan_ops(df):
+    """Operator counts of ``df``'s adaptive final plan, after collecting
+    it (the plan AQE ran, with its reused exchanges)."""
+    import re
+    from collections import Counter
+    df.collect()
+    final = _plan(df).split("== Final Plan ==")[1] \
+        .split("== Initial Plan ==")[0]
+    return Counter(re.findall(r"^[\s:|+-]*(?:\* )?([A-Z]\w*)", final, re.M))
+
+
+#: final-plan counts of the nodes that show how often a self-join's key
+#: table is built: the MinHash/SimHash signature aggregate and shingle or
+#: word explode, the band-key explode, the cosine signature UDF. Each
+#: self-join below reads one key table through one ``_bkey`` exchange
+#: that its second side reuses. The parent tree's cosine LSH self-join
+#: ran its signature UDF once per join side (2 ArrowEvalPython,
+#: 2 Generate, 1 Exchange, 1 ReusedExchange), and SimHash carried the
+#: signature on its key rows (4 HashAggregate, 1 ReusedExchange).
+SELF_JOIN_KEY_OPS = {
+    "minhash": {"ArrowEvalPython": 0, "Exchange": 4, "Generate": 2,
+                "HashAggregate": 4, "ReusedExchange": 3},
+    "simhash": {"ArrowEvalPython": 0, "Exchange": 4, "Generate": 2,
+                "HashAggregate": 5, "ReusedExchange": 3},
+    "cosine_lsh": {"ArrowEvalPython": 1, "Exchange": 2, "Generate": 1,
+                   "HashAggregate": 2, "ReusedExchange": 2},
+    "deletion": {"ArrowEvalPython": 0, "Exchange": 3, "Generate": 1,
+                 "HashAggregate": 2, "ReusedExchange": 2},
+}
+
+
+def test_self_join_builds_key_table_once(spark, sf_dir, tmp_path):
+    """MinHash and SimHash (xxhash64), the cosine LSH self-join and the
+    deletion-key fuzzy self-join each evaluate their one key table once
+    in the plan AQE runs."""
+    from liblevenshtein_rust_spark.operators.dedup import (
+        minhash_lsh_pairs, simhash_pairs)
+    from liblevenshtein_rust_spark.operators.similarity import (
+        cosine_near_dup_pairs)
+    docs = _docs_parquet(spark, sf_dir, tmp_path)
+    p = str(tmp_path / "emb")
+    spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
+        .select("vec_id", "embedding").write.parquet(p)
+    joins = {
+        "minhash": minhash_lsh_pairs(docs, jaccard_threshold=0.8),
+        "simhash": simhash_pairs(docs, max_hamming=3),
+        "cosine_lsh": cosine_near_dup_pairs(spark.read.parquet(p), 0.35,
+                                            method="lsh"),
+        "deletion": fuzzy_self_join(_terms(spark, WORDS), n=1,
+                                    method="deletion"),
+    }
+    for name, df in joins.items():
+        ops = _final_plan_ops(df)
+        assert {op: ops[op] for op in SELF_JOIN_KEY_OPS[name]} \
+            == SELF_JOIN_KEY_OPS[name], (name, ops)
+
+
+#: Spark jobs of each later incremental_upsert batch when 1,000 seeded
+#: synth_transcripts turns are folded in 3 batches, as perfbench's
+#: streaming.incremental layer splits them. The parent tree ran 42: the
+#: batch's fresh x all fuzzy join ran once for the pair state and again
+#: for the cluster fold.
+INCREMENTAL_BATCH_JOBS = 36
+
+
+def test_incremental_batch_job_count(spark, tmp_path):
+    """A later incremental batch runs a fixed number of jobs, and exactly
+    one of its SQL executions runs the fuzzy join's verify."""
+    from liblevenshtein_rust_spark.sources.transcripts import (
+        synth_transcripts)
+    from liblevenshtein_rust_spark.streaming.incremental import (
+        incremental_upsert)
+    sc = spark.sparkContext
+    p = str(tmp_path / "turns")
+    synth_transcripts(spark, 1000, seed=1, max_edits=1)[0].write.parquet(p)
+    turns = spark.read.parquet(p)
+    part = F.pmod(F.xxhash64(F.lit(1), "conv_id", "turn_idx"), F.lit(3))
+    state = str(tmp_path / "state")
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        execs = sql_store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    incremental_upsert(turns.where(part == 0), state, n=2)
+    for b in (1, 2):
+        before = max((e.executionId() for e in executions()), default=-1)
+        tag = f"lls-incremental-job-count-guard-{b}"
+        sc.addJobTag(tag)
+        try:
+            incremental_upsert(turns.where(part == b), state, n=2)
+        finally:
+            sc.removeJobTag(tag)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = list(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
+        assert len(jobs) == INCREMENTAL_BATCH_JOBS, (b, sorted(jobs))
+        verifies = [e for e in executions() if e.executionId() > before
+                    and "levenshtein(" in e.physicalPlanDescription()]
+        assert len(verifies) == 1, b

@@ -64,6 +64,47 @@ def test_incremental_stream_links_across_batches(spark, tmp_path):
     assert spark.read.parquet(os.path.join(state, "terms")).count() == 4
 
 
+def test_incremental_fold_equals_pipeline_over_union(spark, tmp_path):
+    """Three batches folded by incremental_upsert leave the pairs and
+    clusters run_pipeline derives from the union of the batches. Empty
+    and whitespace-only turns canonicalize to the "" term, as in the
+    pipeline, and pair with the turns of at most n characters."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    from liblevenshtein_rust_spark.plans.pipeline import (
+        PipelineConfig, run_pipeline)
+    from liblevenshtein_rust_spark.streaming.incremental import (
+        incremental_upsert)
+
+    ts = pd.Timestamp(1700000000, unit="s")
+    texts = [["please restart the ingest service", "", "ok"],
+             ["please restart the ingst service", "   ",
+              "the cache hit rate dropped"],
+             ["o", "the cache hit rate droped", "a different utterance"]]
+    batches = [_turns_df(spark, [(f"c{b}", i, "user", t, None, ts)
+                                 for i, t in enumerate(turns)])
+               for b, turns in enumerate(texts)]
+    state = str(tmp_path / "state")
+    for batch in batches:
+        incremental_upsert(batch, state, n=2)
+    res = run_pipeline(spark, reduce(DataFrame.unionByName, batches),
+                       PipelineConfig(checkpoint_dir=str(tmp_path / "ck"),
+                                      n=2))
+
+    def rows(df, *cols):
+        return sorted(map(tuple, df.select(*cols).collect()))
+
+    pairs = rows(res["scored_pairs"], "id_a", "id_b", "distance")
+    assert len(pairs) == 5, pairs   # 3 among {"", "o", "ok"}, 2 typos
+    assert rows(spark.read.parquet(os.path.join(state, "pairs")),
+                "id_a", "id_b", "distance") == pairs
+    assert rows(spark.read.parquet(os.path.join(state, "clusters")),
+                "term_id", "entity_id") == \
+        rows(res["clusters"], "term_id", "entity_id")
+
+
 MITTON = """
 $because
 becasue 3
