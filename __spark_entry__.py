@@ -229,7 +229,7 @@ def _term_pairs(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     lineage, not a checkpointed table — caching the (tiny, distinct-term)
     input is a 4x wall win at bench scale (15.7s -> 4.1s at sf0.1)."""
     pairs = fuzzy_self_join(_term_df(spark, sf_dir), n=n, method="segment",
-                            persist=True, unique_ids=True)
+                            persist=True)
     return pairs.selectExpr(
         "least(term_a, term_b) AS term_a",
         "greatest(term_a, term_b) AS term_b",
@@ -694,8 +694,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         m = synthetic_entity_mentions(s, min(2000, n_docs))
         texts = (m.select(F.col("text").alias("term")).distinct()
                  .withColumn("term_id", F.col("term")))
-        pairs = fuzzy_self_join(texts, n=1, method="deletion", persist=True,
-                                unique_ids=True)
+        pairs = fuzzy_self_join(texts, n=1, method="deletion", persist=True)
         comp = connected_components(pairs, texts.select("term_id"),
                                     src="id_a", dst="id_b",
                                     node_col="term_id")
@@ -724,8 +723,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
               .withColumn("term_id", F.col("term")))
         allw = (words.select(F.col("w").alias("term"))
                 .withColumn("term_id", F.col("term")))
-        pairs1 = fuzzy_self_join(b1, n=1, method="deletion", persist=True,
-                                 unique_ids=True)
+        pairs1 = fuzzy_self_join(b1, n=1, method="deletion", persist=True)
         state = connected_components(pairs1, b1.select("term_id"),
                                      src="id_a", dst="id_b",
                                      node_col="term_id")
@@ -789,8 +787,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         words = (_word_freq(s, d).select(F.col("w").alias("term")).distinct()
                  .withColumn("term_id", F.col("term")))
-        pairs = fuzzy_self_join(words, n=1, method="deletion", persist=True,
-                                unique_ids=True)
+        pairs = fuzzy_self_join(words, n=1, method="deletion", persist=True)
         labeled = connected_components(
             pairs, words.select("term_id"), src="id_a", dst="id_b",
             node_col="term_id")

@@ -133,7 +133,9 @@ def _star_labels(edges: DataFrame, node_col: str,
                  max_iterations: int) -> DataFrame:
     """(node_col, entity_id) for every endpoint of ``edges`` by iterated
     large-star / small-star rounds over the deduped edge set, which is
-    checkpointed so that the first checksum materializes it once."""
+    checkpointed so that the first checksum materializes it once. Raises
+    ValueError when ``max_iterations`` rounds do not reach the fixpoint:
+    the edges left then would split components."""
     edges = _lazy_checkpoint(edges.dropDuplicates(["u", "v"]))
     # Check convergence every SECOND round: the star maps decrease a
     # monotone potential until fixpoint (Kiveris et al. SoCC'14), so no
@@ -141,24 +143,27 @@ def _star_labels(edges: DataFrame, node_col: str,
     # fixpoint was reached. Cost: at most one redundant round of compute
     # on already-converged (small) state; saving: half the checksum scans
     # — and with lazy checkpoints, ONE driver action per two rounds. The
-    # output stays deterministic either way (the final groupBy-min below
-    # settles labels even mid-convergence).
+    # last two rounds are both checked, so the final test compares
+    # consecutive rounds and a fixpoint reached in the last round passes.
     h_old = _edge_checksum(edges)
     for it in range(max_iterations):
         edges = _lazy_checkpoint(_small_star(_large_star(edges)))
-        if (it + 1) % 2 == 0 or it == max_iterations - 1:
+        if (it + 1) % 2 == 0 or it >= max_iterations - 2:
             h_new = _edge_checksum(edges)
             if h_old == h_new:
                 break
             h_old = h_new
+    else:
+        raise ValueError(
+            f"connected components did not converge within "
+            f"max_iterations={max_iterations} star rounds (raise "
+            f"max_iterations)")
     # after convergence every edge points node -> component root; roots
     # map to themselves
     assign = edges.select(F.col("u").alias(node_col), F.col("v").alias("entity_id"))
     assign = _attach_singletons(
         assign, edges.select(F.col("v").alias(node_col)),
         assign.select(node_col), node_col, F.col(node_col).alias("entity_id"))
-    # deterministic: min label wins even if a round budget stopped short of
-    # full convergence
     return assign.groupBy(node_col).agg(F.min("entity_id").alias("entity_id"))
 
 
@@ -202,7 +207,9 @@ def connected_components(
     that appear in no pair. The edge table, and the edges after each
     star round, go through a lazy localCheckpoint that truncates their
     lineage; the pipeline's clusters stage gets its kill-resume
-    durability from the stage checkpoint it writes.
+    durability from the stage checkpoint it writes. A graph that the
+    star rounds do not settle within ``max_iterations`` raises
+    ValueError instead of returning split components.
 
     ``small_graph_threshold`` bounds the driver path: at most this many
     edge rows (self-loops and NULL endpoints dropped, duplicates counted)

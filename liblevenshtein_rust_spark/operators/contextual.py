@@ -33,8 +33,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from liblevenshtein_rust_spark.functions.distance import STANDARD, make_distance_udf
-from liblevenshtein_rust_spark.operators.fuzzy_join import fuzzy_join
+from liblevenshtein_rust_spark.functions.distance import STANDARD
+from liblevenshtein_rust_spark.operators.fuzzy_join import (
+    _edit_distance_verify,
+    fuzzy_join,
+)
 
 
 def visible_contexts(tree: DataFrame, *, id_col: str = "context_id",
@@ -122,7 +125,7 @@ def scoped_complete(
     queries: DataFrame,
     terms: DataFrame,
     drafts: DataFrame,
-    tree: DataFrame,
+    tree: DataFrame | None,
     *,
     n: int,
     variant: str = STANDARD,
@@ -140,14 +143,14 @@ def scoped_complete(
 
     Inputs: queries (q_id, q_text, context_id); terms (term, context_id)
     — finalized definitions, long format; drafts (context_id, draft) —
-    one buffer per context; tree (context_id, parent_id).
+    one buffer per context; tree (context_id, parent_id), unused when
+    ``vis`` is given.
 
-    ``vis`` (optional): a precomputed ancestor closure with columns
-    (context_id, visible_id), e.g. from :func:`visible_contexts`. The
+    ``vis`` (optional): precomputed visibility rows (context_id,
+    visible_id), e.g. from :func:`visible_contexts`. Without it the
     closure costs one iterative doubling join (with a count per round)
-    per call; interactive sessions issuing many completions against an
-    unchanged tree should compute it once per tree mutation and pass it
-    here (ContextualSession does exactly that).
+    per call; ContextualSession passes the rows of the querying scope,
+    read off its driver-held tree.
 
     Output: (q_id, q_text, term, distance, is_draft, contexts) where
     contexts is the sorted array of VISIBLE contexts carrying the term
@@ -161,10 +164,10 @@ def scoped_complete(
             id_col="_vctx", parent_col="parent_id", max_depth=max_depth)
     else:
         vis = vis.select(F.col("context_id").alias("_vctx"), "visible_id")
-    qv = queries.select(F.col(q_id).alias("_qid"), F.col(q_text).alias("_q"),
+    qv = queries.select(F.col(q_id).alias("_qid"), F.col(q_text).alias("_ta"),
                         F.col(q_ctx).alias("_qctx")) \
         .join(vis, F.col("_qctx") == F.col("_vctx")) \
-        .select("_qid", "_q", "visible_id")
+        .select("_qid", "_ta", "visible_id")
 
     # finalized: fuzzy-join on distinct terms, attach the term's defining
     # contexts, keep (and collect) only the ones visible to the query
@@ -185,21 +188,15 @@ def scoped_complete(
         .withColumn("is_draft", F.lit(False))
     )
 
-    # drafts: visible draft buffers scored directly (one buffer per
-    # context — the candidate set is |queries| x |visible drafts|, tiny)
+    # drafts: visible draft buffers scored directly by the fuzzy join's
+    # verify kernel (one buffer per context — the candidate set is
+    # |queries| x |visible drafts|, tiny)
     dl = drafts.select(F.col(draft_ctx).alias("visible_id"),
-                       F.col(draft_col).alias("term")) \
-        .where(F.col("term").isNotNull() & (F.length("term") > 0))
-    dj = qv.join(dl, "visible_id")
-    if variant == STANDARD:
-        dj = dj.withColumn("distance", F.expr(f"levenshtein(_q, term, {int(n)})")) \
-            .where(F.col("distance") >= 0)
-    else:
-        dist = make_distance_udf(n, variant)
-        dj = dj.withColumn("distance", dist(F.col("_q"), F.col("term"))) \
-            .where(F.col("distance") <= n)
+                       F.col(draft_col).alias("_tb")) \
+        .where(F.col("_tb").isNotNull() & (F.length("_tb") > 0))
+    dj = _edit_distance_verify(n, variant)(qv.join(dl, "visible_id"))
     draft_rows = (
-        dj.groupBy("_qid", "term")
+        dj.groupBy("_qid", F.col("_tb").alias("term"))
         .agg(F.min("distance").alias("distance"),
              F.array_sort(F.collect_set("visible_id")).alias("contexts"))
         .withColumn("is_draft", F.lit(True))

@@ -48,10 +48,7 @@ from pyspark.sql.types import (
 )
 
 from liblevenshtein_rust_spark.functions.distance import STANDARD
-from liblevenshtein_rust_spark.operators.contextual import (
-    scoped_complete,
-    visible_contexts,
-)
+from liblevenshtein_rust_spark.operators.contextual import scoped_complete
 
 _TERMS_SCHEMA = StructType([
     StructField("term", StringType(), False),
@@ -84,12 +81,6 @@ class ContextualSession:
         self._checkpoints: dict[int, list[str]] = {}
         self._pending: list[tuple[str, int]] = []
         self._base = base_terms
-        # visibility-closure cache, keyed by tree version: the closure
-        # runs an iterative doubling join (a count per round), so an
-        # interactive session issuing many completions computes it once
-        # per tree MUTATION, not once per complete() call
-        self._tree_version = 0
-        self._vis_cache: tuple[int, DataFrame] | None = None
 
     # ---- context lifecycle (engine.rs:275-430) ----
 
@@ -99,7 +90,6 @@ class ContextualSession:
         self._parent[cid] = None
         self._drafts[cid] = ""
         self._checkpoints[cid] = []
-        self._tree_version += 1
         return cid
 
     def create_child_context(self, cid: int, parent_id: int) -> int:
@@ -110,7 +100,6 @@ class ContextualSession:
         self._parent[cid] = parent_id
         self._drafts[cid] = ""
         self._checkpoints[cid] = []
-        self._tree_version += 1
         return cid
 
     def remove_context(self, cid: int) -> bool:
@@ -134,7 +123,6 @@ class ContextualSession:
             del self._parent[c]
             self._drafts.pop(c, None)
             self._checkpoints.pop(c, None)
-        self._tree_version += 1
         return True
 
     def context_exists(self, cid: int) -> bool:
@@ -281,15 +269,6 @@ class ContextualSession:
 
     # ---- completion (engine.rs:1058-1219) ----
 
-    def _tree_df(self) -> DataFrame:
-        schema = StructType([
-            StructField("context_id", LongType(), False),
-            StructField("parent_id", LongType(), True),
-        ])
-        return self.spark.createDataFrame(
-            [(int(c), None if p is None else int(p))
-             for c, p in self._parent.items()], schema)
-
     def _drafts_df(self) -> DataFrame:
         schema = StructType([
             StructField("context_id", LongType(), False),
@@ -298,26 +277,12 @@ class ContextualSession:
         return self.spark.createDataFrame(
             [(int(c), d) for c, d in self._drafts.items()], schema)
 
-    def _visible_closure(self) -> DataFrame:
-        """Ancestor closure (context_id, visible_id) for the CURRENT tree,
-        computed once per tree version: the closure's doubling rounds each
-        run a count, so recomputing per complete() call (the r2 pattern)
-        multiplied driver actions by the completion count. The cached
-        DataFrame is localCheckpoint'ed — later completions reuse the
-        materialized blocks; superseded closures are unpersisted."""
-        if self._vis_cache is not None and \
-                self._vis_cache[0] == self._tree_version:
-            return self._vis_cache[1]
-        vis = visible_contexts(
-            self._tree_df().select(
-                F.col("context_id").alias("_vctx"), "parent_id"),
-            id_col="_vctx", parent_col="parent_id",
-        ).select(F.col("_vctx").alias("context_id"), "visible_id") \
-            .localCheckpoint(eager=True)
-        if self._vis_cache is not None:
-            self._vis_cache[1].unpersist()
-        self._vis_cache = (self._tree_version, vis)
-        return vis
+    def _visible_df(self, cid: int) -> DataFrame:
+        """(context_id, visible_id) rows of scope ``cid``, read off the
+        driver-held tree: a local relation, so no Spark job computes it."""
+        return self.spark.createDataFrame(
+            [(int(cid), int(v)) for v in self.get_visible_contexts(cid)],
+            "context_id long, visible_id long")
 
     def complete(self, cid: int, query: str, n: int, *,
                  variant: str = STANDARD,
@@ -338,9 +303,8 @@ class ContextualSession:
             drafts = drafts.where(F.lit(False))
         if not include_finalized:
             terms = terms.where(F.lit(False))
-        out = scoped_complete(qdf, terms, drafts, self._tree_df(),
-                              n=n, variant=variant,
-                              vis=self._visible_closure())
+        out = scoped_complete(qdf, terms, drafts, None, n=n,
+                              variant=variant, vis=self._visible_df(cid))
         return out.orderBy("distance", "is_draft", "term")
 
     def complete_list(self, cid: int, query: str, n: int, **kw) -> list[tuple]:

@@ -169,8 +169,7 @@ def minhash_lsh_pairs(docs: DataFrame, *, id_col: str = "doc_id",
 
     return _blocked_join((keys, keys), toks, None, (id_col, "_t") * 2, verify,
                          [("_ida", "id_a"), ("_idb", "id_b"),
-                          ("n_common", "n_common"), ("n_union", "n_union")],
-                         dedupe=False)
+                          ("n_common", "n_common"), ("n_union", "n_union")])
 
 
 def token_jaccard_pairs(docs: DataFrame, *, id_col: str = "doc_id",
@@ -426,7 +425,7 @@ def simhash_pairs(docs: DataFrame, *, id_col: str = "doc_id",
 
     return _blocked_join((keys, keys), sigs, None, (id_col, "sig") * 2, verify,
                          [("_ida", "id_a"), ("_idb", "id_b"),
-                          ("hamming", "hamming")], dedupe=False)
+                          ("hamming", "hamming")])
 
 
 def near_dup_dedup(docs: DataFrame, pairs: DataFrame, *,

@@ -57,6 +57,7 @@ from liblevenshtein_rust_spark.functions.distance import (
     make_prefix_distance_udf,
 )
 from liblevenshtein_rust_spark.operators.skew import salted_key_join
+from liblevenshtein_rust_spark.session import distinct_lengths
 
 #: strings at or below this length use deletion-neighborhood blocking
 #: (narrower fan-out); longer strings use PassJoin segment blocking.
@@ -115,8 +116,7 @@ def _explode_keys(df: DataFrame, id_col: str, keys_sql: str) -> DataFrame:
 def _blocked_join(keys, left: DataFrame, right: DataFrame | None,
                   cols: tuple[str, str, str, str], verify,
                   out_cols: list[tuple[str, str]], *,
-                  dedupe: bool = True, persist: bool = False,
-                  key_join=None) -> DataFrame:
+                  persist: bool = False, key_join=None) -> DataFrame:
     """The one blocked-join core: key tables -> distinct candidate id
     pairs -> payloads attached as (_ida, _ta, _idb, _tb) -> ``verify``
     (adds and filters its score columns) -> the final projection
@@ -130,13 +130,13 @@ def _blocked_join(keys, left: DataFrame, right: DataFrame | None,
     a vector, whatever ``verify`` compares. When both key tables are one
     DataFrame, both join sides read it through one exchange.
 
-    ``key_join`` swaps in another source of the key-match (_ida, _idb)
-    rows (the salted join). ``dedupe=False`` skips the per-id payload
-    collapse (an Exchange + SortAggregate per side) for ids unique by
-    construction, or keeps one output row per pair of input rows where
-    ids repeat. ``persist`` caches the inputs, each read twice (key
-    explode + payload attach), and attaches them to the result for
-    ``operators.dedup.unpersist_inputs``.
+    Payloads are attached by a plain join on each input row, so an id
+    that repeats gives one output row per pair of input rows: each of its
+    rows is scored with its own payload (a self-join never pairs two rows
+    of one id). ``key_join`` swaps in another source of the key-match
+    (_ida, _idb) rows (the salted join). ``persist`` caches the inputs,
+    each read twice (key explode + payload attach), and attaches them to
+    the result for ``operators.dedup.unpersist_inputs``.
     """
     self_join = right is None
     right = left if self_join else right
@@ -164,9 +164,6 @@ def _blocked_join(keys, left: DataFrame, right: DataFrame | None,
     l_id, l_pay, r_id, r_pay = cols
     lt = left.selectExpr(f"`{l_id}` AS _ida", f"`{l_pay}` AS _ta")
     rt = right.selectExpr(f"`{r_id}` AS _idb", f"`{r_pay}` AS _tb")
-    if dedupe:
-        lt = lt.dropDuplicates(["_ida"])
-        rt = rt.dropDuplicates(["_idb"])
     scored = verify(pairs.join(lt, "_ida").join(rt, "_idb"))
     out = scored.selectExpr(*(f"`{c}` AS `{o}`" for c, o in out_cols))
     if cached:
@@ -272,9 +269,12 @@ def fuzzy_join(
     """Similarity join: all (query, term) pairs with distance(q, t) <= n.
 
     Output columns: q_id, q_text, term_id, term, distance — one row per
-    matching pair, exact and complete (the blocked join is recall-lossless;
-    the banded DP is the exact distance). ``substitutions`` is an optional
-    SubstitutionSet of zero-cost character pairs (Restricted policy).
+    matching pair of input rows, exact and complete (the blocked join is
+    recall-lossless; the banded DP is the exact distance). A repeated id
+    is scored row by row with its own text, so two identical query rows
+    give two output rows, as a SQL join does. ``substitutions`` is an
+    optional SubstitutionSet of zero-cost character pairs (Restricted
+    policy).
 
     ``persist`` caches both inputs, each read twice (key explode + text
     attach). Release via ``operators.dedup.unpersist_inputs(result)``.
@@ -301,7 +301,6 @@ def fuzzy_self_join(
     salt_threshold: int | None = None,
     salt_groups: int = 8,
     persist: bool = False,
-    unique_ids: bool = False,
 ) -> DataFrame:
     """All unordered distinct-term pairs with distance <= n (id_a < id_b).
 
@@ -313,11 +312,9 @@ def fuzzy_self_join(
     keys with more members than the threshold over ``salt_groups``
     reducer keys (operators/skew.py) instead of a single one.
 
-    ``unique_ids=True`` declares that ``terms`` carries one row per
-    ``id_col`` (the dictionary contract, e.g. a ``build_dictionary``
-    output): the text attach then skips its defensive per-id collapse —
-    two fewer Exchange + SortAggregate rounds per invocation (r6).
-    Results are identical whenever the declaration is true.
+    An ``id_col`` value carried by several rows pairs each of its rows
+    with every matching row of another id (one output row per pair of
+    input rows); two rows of one id are never paired.
 
     ``persist`` caches the terms input, which both key explodes and both
     text attaches read, so any upstream lineage (e.g. a build_dictionary
@@ -335,8 +332,7 @@ def fuzzy_self_join(
                          _edit_distance_verify(n, variant, substitutions),
                          _pair_cols(("id_a", "term_a", "id_b", "term_b"),
                                     "distance"),
-                         dedupe=not unique_ids, persist=persist,
-                         key_join=salted)
+                         persist=persist, key_join=salted)
 
 
 def fuzzy_prefix_join(
@@ -362,18 +358,7 @@ def fuzzy_prefix_join(
     Output: q_id, q_text, term_id, term, distance (prefix distance).
     """
     depth = effective_depth(n, variant)
-    # adaptive-stats collect: bounded by the number of distinct QUERY
-    # lengths (a few dozen ints), never by row count. ONE aggregation (r6):
-    # the distinct().collect() form paid a shuffle + multi-task stage.
-    from liblevenshtein_rust_spark.session import df_is_local_relation
-    if df_is_local_relation(queries):
-        qlens = list({r[0] for r in
-                      queries.select(F.length(F.col(q_text))).collect()
-                      if r[0] is not None})
-    else:
-        qlens = list(queries.agg(
-            F.collect_set(F.length(F.col(q_text)))).first()[0])
-    plens = sorted({pl for lq in qlens
+    plens = sorted({pl for lq in distinct_lengths(queries, q_text)
                     for pl in range(max(lq - n, 0), lq + n + 1)}) or [0]
     lens_sql = ", ".join(str(x) for x in plens)
 

@@ -32,6 +32,18 @@ def _cosine(a: str, b: str) -> F.Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _top_k(scored: DataFrame, k: int, q_id: str, c_id: str) -> DataFrame:
+    """The k best-scored rows per ``q_id`` of a (q_id, c_id, sim) table,
+    ranked by sim DESC with ties broken by c_id ASC: (q_id, rank, c_id,
+    sim), the output of every cosine search here."""
+    win = Window.partitionBy(q_id).orderBy(F.col("sim").desc(), F.col(c_id).asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(win))
+        .where(F.col("rank") <= k)
+        .select(q_id, "rank", c_id, "sim")
+    )
+
+
 def cosine_top_k(queries: DataFrame, corpus: DataFrame, k: int,
                  *, q_id: str = "q_id", q_vec: str = "q_vec",
                  c_id: str = "c_id", c_vec: str = "c_vec") -> DataFrame:
@@ -55,12 +67,7 @@ def cosine_top_k(queries: DataFrame, corpus: DataFrame, k: int,
         F.col(q_id), F.col(c_id),
         (_dot(q_vec, c_vec) / (F.col("_qn") * F.col("_cn"))).alias("sim"),
     )
-    win = Window.partitionBy(q_id).orderBy(F.col("sim").desc(), F.col(c_id).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= k)
-        .select(q_id, "rank", c_id, "sim")
-    )
+    return _top_k(scored, k, q_id, c_id)
 
 
 def make_signature_udf(n_planes: int, seed: int):
@@ -172,12 +179,7 @@ def cosine_top_k_ivf(queries: DataFrame, corpus: DataFrame, k: int,
         .dropDuplicates([q_id, c_id])
         .select(F.col(q_id), F.col(c_id), _cosine(q_vec, c_vec).alias("sim"))
     )
-    win = Window.partitionBy(q_id).orderBy(F.col("sim").desc(), F.col(c_id).asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= k)
-        .select(q_id, "rank", c_id, "sim")
-    )
+    return _top_k(cand, k, q_id, c_id)
 
 
 def _band_key_expr(n_planes: int, n_bands: int) -> str:
@@ -207,7 +209,10 @@ def cosine_top_k_lsh(queries: DataFrame, corpus: DataFrame, k: int,
     """Approximate top-k: bucket by random-hyperplane band signatures,
     score only colliding pairs. Recall < 1 by design; the scale path for
     corpora where brute force is infeasible (candidate count is
-    |collisions|, not |Q| x |C|). Output schema matches cosine_top_k."""
+    |collisions|, not |Q| x |C|). Output schema matches cosine_top_k, and
+    so does the meaning of a repeated id: every input row is scored with
+    its own vector, so a corpus id on two rows can take two ranks of a
+    query, and a query id on two rows ranks the candidates of both."""
     sig_udf = make_signature_udf(n_planes, seed)
     scored = _blocked_join(
         (_band_keys(queries, q_id, q_vec, sig_udf, n_planes, n_bands),
@@ -215,12 +220,7 @@ def cosine_top_k_lsh(queries: DataFrame, corpus: DataFrame, k: int,
         queries, corpus, (q_id, q_vec, c_id, c_vec),
         lambda pairs: pairs.withColumn("sim", _cosine("_ta", "_tb")),
         [("_ida", q_id), ("_idb", c_id), ("sim", "sim")])
-    win = Window.partitionBy(q_id).orderBy(F.col("sim").desc(), F.col(c_id).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= k)
-        .select(q_id, "rank", c_id, "sim")
-    )
+    return _top_k(scored, k, q_id, c_id)
 
 
 def cosine_near_dup_pairs(df: DataFrame, threshold: float,
@@ -272,5 +272,4 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float,
                          lambda pairs: pairs.withColumn(
                              "sim", _cosine("_ta", "_tb"))
                          .where(F.col("sim") >= float(threshold)),
-                         [("_ida", "id_a"), ("_idb", "id_b"), ("sim", "sim")],
-                         dedupe=False)
+                         [("_ida", "id_a"), ("_idb", "id_b"), ("sim", "sim")])

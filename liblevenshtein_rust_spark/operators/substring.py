@@ -53,6 +53,7 @@ from liblevenshtein_rust_spark.functions.distance import (
     STANDARD,
     make_prefix_distance_udf,
 )
+from liblevenshtein_rust_spark.session import distinct_lengths
 
 
 def _n_segments(n: int, variant: str) -> int:
@@ -303,18 +304,7 @@ def fuzzy_substring_join(
     qs = queries.select(F.col(q_id).alias("_qid"), F.col(q_text).alias("_q"))
     ds = docs.select(F.col(d_id).alias("_did"), F.col(d_text).alias("_t"))
 
-    # adaptive stat: distinct query lengths (bounded by max query length).
-    # Local (VALUES/fixture) query tables short-circuit to a driver-side
-    # collect of a projection over the LocalRelation — zero Spark jobs;
-    # distributed workloads pay ONE collect_set aggregation (r6; the
-    # original distinct().collect() paid a shuffle + multi-task result
-    # stage per invocation)
-    from liblevenshtein_rust_spark.session import df_is_local_relation
-    if df_is_local_relation(qs):
-        qlens = sorted({r[0] for r in qs.select(F.length("_q")).collect()
-                        if r[0] is not None})
-    else:
-        qlens = sorted(qs.agg(F.collect_set(F.length("_q"))).first()[0])
+    qlens = distinct_lengths(qs, "_q")
     # the blocked path needs every segment non-empty (an "intact" empty
     # segment proves nothing), i.e. m >= segment count
     min_long = _n_segments(n, variant)

@@ -334,13 +334,10 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
     terms = r.stage("terms", s1)
 
     def s2():
-        # build_dictionary emits one row per term_id, so the self-join
-        # can skip its defensive per-id collapse
         return fuzzy_self_join(terms, n=cfg.n, variant=cfg.variant,
                                method=cfg.method,
                                salt_threshold=cfg.salt_threshold,
-                               salt_groups=cfg.salt_groups,
-                               unique_ids=True)
+                               salt_groups=cfg.salt_groups)
 
     pairs = r.stage("scored_pairs", s2)
 

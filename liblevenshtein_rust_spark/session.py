@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 # Defaults chosen so that at 100 TB the same config only needs
 # shuffle-partition / memory scaling, not structural change.
@@ -146,3 +147,16 @@ def df_is_local_relation(df) -> bool:
         return name in ("LocalRelation", "OneRowRelation")
     except Exception:  # non-classic backends: fall back to the slow path
         return bool(df.isLocal())
+
+
+def distinct_lengths(df, col: str) -> list[int]:
+    """Sorted distinct non-NULL ``length(col)`` values of ``df``: the
+    adaptive query-length stat of the prefix and substring joins, bounded
+    by the longest query, never by row count. A local (VALUES / fixture)
+    table is read driver-side with no Spark job; any other pays ONE
+    ``collect_set`` aggregation (r6: the distinct().collect() form paid a
+    shuffle + multi-task result stage)."""
+    if df_is_local_relation(df):
+        return sorted({r[0] for r in df.select(F.length(col)).collect()
+                       if r[0] is not None})
+    return sorted(df.agg(F.collect_set(F.length(col))).first()[0])

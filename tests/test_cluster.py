@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from liblevenshtein_rust_spark.operators.cluster import connected_components
 
@@ -71,6 +72,19 @@ def _run(spark, edges, nodes):
 
 def test_cc_simple_chain(spark):
     _run(spark, [("a", "b"), ("b", "c"), ("d", "e")], list("abcdefg"))
+
+
+def test_star_rounds_raise_when_budget_runs_out(spark):
+    """A 64-node chain needs several star rounds: with a budget of one,
+    the star path raises instead of returning a split labeling."""
+    import pytest
+
+    edges = spark.createDataFrame(
+        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(63)],
+        "id_a string, id_b string")
+    with pytest.raises(ValueError, match="max_iterations=1"):
+        connected_components(edges, small_graph_threshold=0,
+                             max_iterations=1).collect()
 
 
 def test_cc_empty_edges(spark):

@@ -233,15 +233,37 @@ def test_fuzzy_join_long_queries_hybrid(spark):
     assert got == exp and len(exp) == 3
 
 
-def test_fuzzy_join_duplicate_query_rows_collapse(spark):
-    """Duplicate (q_id, q_text) rows yield ONE pair: the pair-level dedupe
-    plus the text attach's per-id collapse."""
+def test_fuzzy_join_duplicate_ids_one_row_per_input_row(spark):
+    """A repeated id is scored row by row with its own text: the true
+    pair is found in every row order and partitioning, and identical
+    duplicate rows give one output row each, as a SQL join does."""
+    from itertools import permutations
+
+    def frame(rows, parts, schema):
+        return spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, parts), schema)
+
+    terms = [("a", "hello"), ("a", "zzzzz"), ("b", "hallo")]
+    for order in list(permutations(terms))[:4]:
+        for parts in (1, 2, 3, 8):
+            got = [tuple(r) for r in fuzzy_self_join(
+                frame(order, parts, "term_id string, term string"),
+                n=1, method="deletion").collect()]
+            assert got == [("a", "hello", "b", "hallo", 1)], (order, parts)
+
     dict_df = spark.createDataFrame([("t1", "test")], ["term_id", "term"])
+    for order in ([("q", "tst"), ("q", "zzzz")], [("q", "zzzz"), ("q", "tst")]):
+        for parts in (1, 2, 3):
+            got = [tuple(r) for r in fuzzy_join(
+                frame(order, parts, "q_id string, q_text string"), dict_df,
+                n=1, method="deletion").collect()]
+            assert got == [("q", "tst", "t1", "test", 1)], (order, parts)
+
     qs = spark.createDataFrame(
         [("q1", "tst"), ("q1", "tst")], ["q_id", "q_text"])
     got = [tuple(r) for r in
            fuzzy_join(qs, dict_df, n=1, method="deletion").collect()]
-    assert got == [("q1", "tst", "t1", "test", 1)]
+    assert got == [("q1", "tst", "t1", "test", 1)] * 2
 
 
 def test_persist_inputs_released_by_unpersist_inputs(spark):

@@ -154,56 +154,12 @@ def test_substring_best_match_hash_aggregates(spark):
 
 
 #: physical-operator sequence (explain "formatted" node order) of the
-#: self-join with PipelineConfig's defaults and the defensive per-id
-#: collapse on a parquet-backed dictionary: the probe-key and index-key
-#: tables, each the union of its deletion and segment key routes, the
-#: broadcast probe × index key join + pair dedupe, and two deduped text
-#: attaches
-PIPELINE_SELF_JOIN_OPS = [
-    "Scan parquet", "Filter", "Generate", "Project",
-    "Scan parquet", "Filter", "Generate", "Project",
-    "Union",
-    "Scan parquet", "Filter", "Generate", "Project",
-    "Scan parquet", "Filter", "Generate", "Project",
-    "Union",
-    "BroadcastExchange", "BroadcastHashJoin", "Project",
-    "HashAggregate", "Exchange", "HashAggregate",
-    "Scan parquet", "Filter", "Project", "Sort", "SortAggregate",
-    "Exchange", "Sort", "SortAggregate", "Filter",
-    "BroadcastExchange", "BroadcastHashJoin", "Project",
-    "Scan parquet", "Filter", "Project", "Sort", "SortAggregate",
-    "Exchange", "Sort", "SortAggregate", "Filter",
-    "BroadcastExchange", "BroadcastHashJoin", "Project",
-    "AdaptiveSparkPlan",
-]
-
-
-def test_pipeline_self_join_plan_shape(spark, tmp_path):
-    """The self-join with PipelineConfig's defaults (hybrid blocking, no
-    salting) and the defensive per-id collapse keeps its
-    physical-operator sequence."""
-    import re
-
-    from liblevenshtein_rust_spark.operators.fuzzy_join import build_dictionary
-    from liblevenshtein_rust_spark.plans.pipeline import PipelineConfig
-    p = str(tmp_path / "terms")
-    build_dictionary(spark.createDataFrame([(w,) for w in WORDS], ["text"])) \
-        .write.parquet(p)
-    cfg = PipelineConfig(checkpoint_dir=str(tmp_path))
-    out = fuzzy_self_join(spark.read.parquet(p), n=cfg.n, variant=cfg.variant,
-                          method=cfg.method, salt_threshold=cfg.salt_threshold,
-                          salt_groups=cfg.salt_groups)
-    ops = [m.group(1).strip()
-           for m in re.finditer(r"^\(\d+\) ([^\[\n]+)", _plan(out), re.M)]
-    assert ops == PIPELINE_SELF_JOIN_OPS, ops
-
-
-#: the scored_pairs self-join exactly as run_pipeline issues it
-#: (unique_ids=True, since build_dictionary emits one row per term_id):
-#: PIPELINE_SELF_JOIN_OPS without the two per-id collapses, i.e. each
-#: text attach loses its Sort + SortAggregate + Exchange + Sort +
-#: SortAggregate + Filter round — the shape perfbench's link_templated
-#: workload times
+#: scored_pairs self-join exactly as run_pipeline issues it, on a
+#: parquet-backed dictionary: the probe-key and index-key tables, each
+#: the union of its deletion and segment key routes, the broadcast
+#: probe × index key join + pair dedupe, and two plain text attaches
+#: (no per-id collapse) — the shape perfbench's link_templated workload
+#: times
 PIPELINE_UNIQUE_SELF_JOIN_OPS = [
     "Scan parquet", "Filter", "Generate", "Project",
     "Scan parquet", "Filter", "Generate", "Project",
@@ -223,8 +179,9 @@ PIPELINE_UNIQUE_SELF_JOIN_OPS = [
 
 def test_pipeline_unique_ids_self_join_plan_shape(spark, tmp_path):
     """The scored_pairs self-join exactly as run_pipeline issues it
-    (PipelineConfig defaults, unique_ids=True) keeps its
-    physical-operator sequence."""
+    (PipelineConfig defaults, hybrid blocking, no salting, over
+    build_dictionary's one row per term_id) keeps its physical-operator
+    sequence."""
     import re
 
     from liblevenshtein_rust_spark.operators.fuzzy_join import build_dictionary
@@ -235,7 +192,7 @@ def test_pipeline_unique_ids_self_join_plan_shape(spark, tmp_path):
     cfg = PipelineConfig(checkpoint_dir=str(tmp_path))
     out = fuzzy_self_join(spark.read.parquet(p), n=cfg.n, variant=cfg.variant,
                           method=cfg.method, salt_threshold=cfg.salt_threshold,
-                          salt_groups=cfg.salt_groups, unique_ids=True)
+                          salt_groups=cfg.salt_groups)
     ops = [m.group(1).strip()
            for m in re.finditer(r"^\(\d+\) ([^\[\n]+)", _plan(out), re.M)]
     assert ops == PIPELINE_UNIQUE_SELF_JOIN_OPS, ops
@@ -354,6 +311,19 @@ def _final_plan_ops(df):
     return Counter(re.findall(r"^[\s:|+-]*(?:\* )?([A-Z]\w*)", final, re.M))
 
 
+def test_fuzzy_join_attaches_texts_without_aggregate(spark, tmp_path):
+    """An A×B fuzzy_join attaches each side's texts with a plain join on
+    the input rows: the plan AQE runs has no SortAggregate."""
+    words = WORDS + ["tables", "steams", "deplo", "tabel"]
+    p = str(tmp_path / "dict")
+    _terms(spark, words).write.parquet(p)
+    dictionary = spark.read.parquet(p)
+    queries = dictionary.selectExpr("term_id AS q_id", "term AS q_text")
+    ops = _final_plan_ops(fuzzy_join(queries, dictionary, n=1,
+                                     method="deletion"))
+    assert ops["SortAggregate"] == 0, ops
+
+
 #: final-plan counts of the nodes that show how often a self-join's key
 #: table is built: the MinHash/SimHash signature aggregate and shingle or
 #: word explode, the band-key explode, the cosine signature UDF. Each
@@ -361,7 +331,8 @@ def _final_plan_ops(df):
 #: that its second side reuses. The parent tree's cosine LSH self-join
 #: ran its signature UDF once per join side (2 ArrowEvalPython,
 #: 2 Generate, 1 Exchange, 1 ReusedExchange), and SimHash carried the
-#: signature on its key rows (4 HashAggregate, 1 ReusedExchange).
+#: signature on its key rows (4 HashAggregate, 1 ReusedExchange). The
+#: deletion join's text attaches are plain joins, with no SortAggregate.
 SELF_JOIN_KEY_OPS = {
     "minhash": {"ArrowEvalPython": 0, "Exchange": 4, "Generate": 2,
                 "HashAggregate": 4, "ReusedExchange": 3},
@@ -370,7 +341,7 @@ SELF_JOIN_KEY_OPS = {
     "cosine_lsh": {"ArrowEvalPython": 1, "Exchange": 2, "Generate": 1,
                    "HashAggregate": 2, "ReusedExchange": 2},
     "deletion": {"ArrowEvalPython": 0, "Exchange": 3, "Generate": 1,
-                 "HashAggregate": 2, "ReusedExchange": 2},
+                 "HashAggregate": 2, "ReusedExchange": 2, "SortAggregate": 0},
 }
 
 
